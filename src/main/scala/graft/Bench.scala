@@ -66,7 +66,7 @@ object Bench {
     // clips): the append/compact/cluster/verify machinery has its own
     // codegen+JIT surface that the aggregate above does not touch — without
     // this, the first e2e query billed ~15 s of one-time warm-up as query
-    // time (E2eProbe: rep1 21.6 s vs steady-state 3-6 s at identical input)
+    // time (measured: rep1 21.6 s vs steady-state 3-6 s at identical input)
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
     // dev aid: SPARK_GRAFT_ONLY=q77,q48 times a subset; driver leaves it unset
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)

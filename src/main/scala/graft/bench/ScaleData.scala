@@ -49,6 +49,16 @@ object ScaleData {
     spark.stop()
   }
 
+  /** Replica `rep` of a documents frame: every non-empty space-separated
+   * token of `text` gets the suffix `r<rep>`. Empty tokens (from doubled,
+   * leading or trailing spaces) stay empty, so the replica keeps its
+   * source's token count. Replica 0 is the source itself. */
+  private[graft] def suffixWords(d: DataFrame, rep: Int): DataFrame =
+    if (rep == 0) d
+    else d.withColumn("text",
+      expr(s"array_join(transform(split(text, ' '), " +
+        s"w -> CASE WHEN w = '' THEN w ELSE concat(w, 'r$rep') END), ' ')"))
+
   def run(spark: SparkSession, src: String, out: String, factor: Int): Unit = {
     def t(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
 
@@ -98,12 +108,7 @@ object ScaleData {
     // documents: per-word replica suffix so replicas are textually DISTINCT
     // at the char-8-gram level (see scaladoc — rotation was NOT, measured)
     val docS = stride(t("documents"), "doc_id")
-    write(replicate(t("documents"), Map("doc_id" -> docS),
-      (d, rep) =>
-        if (rep == 0) d
-        else d.withColumn("text",
-          expr(s"array_join(transform(split(text, ' '), " +
-            s"w -> concat(w, 'r$rep')), ' ')"))),
+    write(replicate(t("documents"), Map("doc_id" -> docS), suffixWords),
       "documents")
 
     // embeddings: rotate vector elements by rep (norm-preserving, direction

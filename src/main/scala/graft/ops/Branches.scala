@@ -1,9 +1,9 @@
 package graft.ops
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{FileAlreadyExistsException, Files, Path => JPath, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path => JPath, Paths, StandardCopyOption}
 
-import graft.table.{Json, MetaStore}
+import graft.table.{Json, MetaFs, MetaStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import scala.jdk.CollectionConverters._
@@ -48,7 +48,7 @@ final case class BranchRec(
  *
  *  - **Separate per-branch log, one shared id/sequence space.** The main
  *    log's cross-process safety hinges on same-parent racers contending on
- *    the same `snap-<parent+1>.json` O_EXCL claim; interleaving branch
+ *    the same `snap-<parent+1>.json` create-once claim; interleaving branch
  *    snapshots into that log would break the claim discipline (a branch
  *    commit at `CURRENT+1` would livelock main writers). Instead each
  *    branch gets its own log DIRECTORY with the same claim machinery,
@@ -62,7 +62,7 @@ final case class BranchRec(
  *    [[RemoveOrphans]] and for [[ExpireSnapshots]]' file deletion); fork
  *    snapshots are expiry roots like tags.
  *  - **Branch records are one file per name** (`meta/branchrefs/<name>
- *    .json`), claimed by temp-write + no-replace ATOMIC_MOVE — there is no
+ *    .json`), created by a create-once [[MetaFs.claim]] — there is no
  *    shared read-modify-write file, so concurrent create/drop of DIFFERENT
  *    branches cannot lose each other's records (a lost record would strip
  *    GC roots and let maintenance delete live branch data).
@@ -114,34 +114,19 @@ object Branches {
     readRecord(p)
   }
 
-  /** Atomic no-replace claim: two concurrent creates of the same name see
-   * exactly one winner (the loser's move throws). */
-  private def claimRecord(store: MetaStore, rec: BranchRec): Unit = {
-    val p = recordPath(store, rec.name)
-    val tmp = p.resolveSibling(
-      s"${rec.name}.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    Files.write(tmp, Json.mapper.writeValueAsString(rec)
-      .getBytes(StandardCharsets.UTF_8))
-    try Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      case e: FileAlreadyExistsException =>
-        Files.deleteIfExists(tmp)
-        throw new IllegalArgumentException(
-          s"branch '${rec.name}' already exists", e)
-    }
-  }
+  /** Create-once claim: of two concurrent creates of one name exactly one
+   * wins; the loser throws and the winner's record is left untouched. */
+  private def claimRecord(store: MetaStore, rec: BranchRec): Unit =
+    if (!MetaFs.claim(recordPath(store, rec.name),
+        Json.mapper.writeValueAsString(rec).getBytes(StandardCharsets.UTF_8)))
+      throw new IllegalArgumentException(s"branch '${rec.name}' already exists")
 
-  /** Replace-mode update (mergedHead stamp): torn-write-safe via the same
-   * temp + atomic rename pattern as CURRENT. */
+  /** Replace-mode update (mergedHead stamp), torn-write-safe. */
   private def updateRecord(store: MetaStore, rec: BranchRec): Unit = {
     val p = recordPath(store, rec.name)
     if (!Files.exists(p)) return // branch dropped concurrently — nothing to stamp
-    val tmp = p.resolveSibling(
-      s"${rec.name}.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    Files.write(tmp, Json.mapper.writeValueAsString(rec)
-      .getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    MetaFs.replace(p,
+      Json.mapper.writeValueAsString(rec).getBytes(StandardCharsets.UTF_8))
   }
 
   /** Handle on an existing branch's store. Same stats/bloom configuration

@@ -3,7 +3,7 @@ package graft.ops
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import graft.table.{Json, MetaStore}
+import graft.table.{Json, MetaFs, MetaStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -100,23 +100,11 @@ object Evolve {
    */
   def evolutions(store: MetaStore): Seq[Evolution] = {
     val d = evoDir(store)
-    val perSnap: Seq[(Long, Evolution)] =
-      if (!Files.exists(d)) Nil
-      else {
-        val stream = Files.list(d)
-        try {
-          import scala.jdk.CollectionConverters._
-          stream.iterator().asScala
-            .map(_.getFileName.toString)
-            .collect { case n if n.startsWith("evo-") && n.endsWith(".json") =>
-              val id = n.stripPrefix("evo-").stripSuffix(".json").toLong
-              id -> entryCache.computeIfAbsent(d.resolve(n).toString, pp =>
-                Json.mapper.readValue[Evolution](new String(
-                  Files.readAllBytes(Paths.get(pp)), StandardCharsets.UTF_8)))
-            }.toVector
-        } finally stream.close()
-      }
-    legacyEvolutions(store) ++ perSnap.sortBy(_._1).map(_._2)
+    legacyEvolutions(store) ++ MetaFs.versions(d, "evo-").map { id =>
+      entryCache.computeIfAbsent(d.resolve(s"evo-$id.json").toString, pp =>
+        Json.mapper.readValue[Evolution](new String(
+          Files.readAllBytes(Paths.get(pp)), StandardCharsets.UTF_8)))
+    }
   }
 
   /**
@@ -282,12 +270,10 @@ object Evolve {
       summary = summary + ("evolution" -> what),
       expectedParent = Some(snapId))
     Files.createDirectories(evoDir(store))
-    val tmp = evoDir(store).resolve(
-      s"evo-$id.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    Files.write(tmp,
-      Json.mapper.writeValueAsString(evo).getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, evoDir(store).resolve(s"evo-$id.json"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    if (!MetaFs.claim(evoDir(store).resolve(s"evo-$id.json"),
+        Json.mapper.writeValueAsString(evo).getBytes(StandardCharsets.UTF_8)))
+      throw new IllegalStateException(
+        s"evo-$id.json already exists: snapshot $id's log entry is write-once")
     id
   }
 

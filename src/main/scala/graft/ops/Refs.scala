@@ -3,7 +3,7 @@ package graft.ops
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import graft.table.{Json, MetaStore}
+import graft.table.{Json, MetaFs, MetaStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Snapshot ids are stored as strings: Jackson erases Map[String, Long] to
@@ -13,6 +13,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * pair; a tag without an entry is permanent. */
 final case class RefsFile(tags: Map[String, String],
                           retention: Map[String, String] = Map.empty)
+
+/** The legacy `meta/refs.json` is a migration tombstone but `meta/refs/`
+ * holds no version: the versioned refs state is gone, and reading the
+ * table as tag-less would silently un-pin every tagged snapshot. */
+final class RefsMigratedException(msg: String) extends IllegalStateException(msg)
 
 /**
  * Named snapshot refs (tags) + rollback over the snapshot log — the
@@ -24,13 +29,17 @@ final case class RefsFile(tags: Map[String, String],
  * tag pins its files for as long as it exists.
  *
  * Durability model: refs state is a chain of immutable version files
- * (`meta/refs/v<N>.json`), each published by a filesystem compare-and-swap
- * ([[casWrite]] — hard-link claim of the next version name), so concurrent
- * read-modify-writes SERIALIZE by construction: the loser's claim fails and
- * its RMW re-runs against the winner's state ([[rmwRefs]]). The advisory
- * lock ([[withRefsLock]]) only reduces CAS contention. Tables written
+ * (`meta/refs/v<N>.json`). A mutation reads the top version, computes the
+ * next state and publishes it with a create-once [[MetaFs.claim]] of
+ * `v<N+1>.json` ([[casWrite]]). Of N concurrent read-modify-writes exactly
+ * one wins each version; every loser re-runs against the winner's state
+ * ([[rmwRefs]]). Retiring old versions frees their names, so a writer
+ * stalled past the retire window can claim a freed name; [[rmwRefs]]
+ * detects that ghost claim and re-runs it as a loss ([[retire]]). No update
+ * is lost and no lock is needed. Tables written
  * before versioning read their legacy single `refs.json` until the first
- * mutation migrates them.
+ * mutation migrates it to v1 and replaces `refs.json` with a tombstone that
+ * a pre-versioning reader fails to parse.
  */
 object Refs {
 
@@ -40,6 +49,10 @@ object Refs {
   private def refsDir(store: MetaStore) =
     Paths.get(store.tableDir, "meta", "refs")
 
+  /** Content of a migrated `refs.json`: deliberately not JSON, so a reader
+   * that predates `meta/refs/` fails loudly instead of reading stale tags. */
+  private val Tombstone = "TOMBSTONE: refs migrated to meta/refs/\n"
+
   private def parseRefs(bytes: Array[Byte]): RefsFile = {
     val f = Json.mapper.readValue[RefsFile](
       new String(bytes, StandardCharsets.UTF_8))
@@ -48,36 +61,23 @@ object Refs {
   }
 
   /** Committed version numbers present under meta/refs/, ascending. */
-  private def versionsOf(store: MetaStore): Seq[Long] = {
-    val dir = refsDir(store)
-    if (!Files.isDirectory(dir)) return Nil
-    val s = Files.list(dir)
-    try {
-      val out = scala.collection.mutable.ArrayBuffer[Long]()
-      val it = s.iterator()
-      while (it.hasNext) {
-        val n = it.next().getFileName.toString
-        if (n.startsWith("v") && n.endsWith(".json"))
-          n.stripPrefix("v").stripSuffix(".json").toLongOption.foreach(out += _)
-      }
-      out.sorted.toSeq
-    } finally s.close()
-  }
+  private def versionsOf(store: MetaStore): Seq[Long] =
+    MetaFs.versions(refsDir(store), "v")
 
   /** (version, state). Version 0 = no CAS commit yet — state comes from the
    * legacy single refs.json (or is empty); the first [[casWrite]] migrates
-   * it to v1. Every version file is published complete (hard-link of a
-   * fully written temp), so a parse failure means external damage, not a
-   * torn write — surfaced, same as the legacy path. */
+   * it to v1. Every version file is published complete ([[MetaFs.claim]]),
+   * so a parse failure means external damage, not a torn write — surfaced,
+   * same as the legacy path. A tombstoned refs.json with no versions throws
+   * [[RefsMigratedException]]. */
   private[graft] def readVersioned(store: MetaStore): (Long, RefsFile) = {
     var attempt = 0
     while (true) {
       versionsOf(store).lastOption match {
         case Some(v) =>
-          // the listed TOP version can only vanish if 4+ newer commits land
-          // between the list and this read (gcVersions' keep window) — an
-          // astronomically narrow race, but a reader must re-list rather
-          // than crash on it
+          // the listed TOP version can only vanish if Keep newer commits
+          // land between the list and this read (retire's window) — a
+          // narrow race, but a reader must re-list rather than crash on it
           try return (v,
             parseRefs(Files.readAllBytes(refsDir(store).resolve(s"v$v.json"))))
           catch {
@@ -86,8 +86,15 @@ object Refs {
           }
         case None =>
           val p = refsPath(store)
-          return if (Files.exists(p)) (0L, parseRefs(Files.readAllBytes(p)))
-          else (0L, RefsFile(Map.empty))
+          if (!Files.exists(p)) return (0L, RefsFile(Map.empty))
+          val bytes = Files.readAllBytes(p)
+          if (new String(bytes, StandardCharsets.UTF_8) != Tombstone)
+            return (0L, parseRefs(bytes))
+          // a migration that landed between the listing and this read
+          // leaves v1 behind: re-list
+          if (versionsOf(store).isEmpty)
+            throw new RefsMigratedException(s"${store.tableDir}: meta/refs.json " +
+              "is a migration tombstone but meta/refs/ holds no version")
       }
     }
     sys.error("unreachable")
@@ -96,87 +103,71 @@ object Refs {
   private def readFile(store: MetaStore): RefsFile = readVersioned(store)._2
 
   /** Publish `f` as version `expected + 1` IFF no other writer got there
-   * first — a true filesystem compare-and-swap: the content is fully
-   * written to a temp file, then HARD-LINKED to the versioned name, and
-   * link(2) fails atomically with EEXIST when the version already exists.
-   * Exactly one concurrent writer per version wins; losers re-read and
-   * re-run their read-modify-write ([[rmwRefs]]). This is what makes refs
-   * durability independent of the advisory lock: even a mistaken lock
-   * steal (a GC-paused holder evicted past the heartbeat) cannot LOSE an
-   * update — the conflicting writer's CAS fails instead. */
+   * first — a filesystem compare-and-swap ([[MetaFs.claim]]: exactly one
+   * concurrent claimer per version wins). Losers re-read and re-run their
+   * read-modify-write ([[rmwRefs]]). Winning v1 over a legacy refs.json
+   * tombstones it. */
   private[graft] def casWrite(store: MetaStore, expected: Long,
                               f: RefsFile): Boolean = {
     val dir = refsDir(store)
     Files.createDirectories(dir)
-    val target = dir.resolve(s"v${expected + 1}.json")
-    if (Files.exists(target)) return false
-    val tmp = dir.resolve(s".tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    Files.write(tmp,
+    val won = MetaFs.claim(dir.resolve(s"v${expected + 1}.json"),
       Json.mapper.writeValueAsString(f).getBytes(StandardCharsets.UTF_8))
-    try {
-      Files.createLink(target, tmp)
-      true
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException => false
-      case _: UnsupportedOperationException =>
-        // no hard links (exotic fs): claim the version name atomically with
-        // CREATE_NEW, then replace the (briefly empty) claim with the full
-        // content; readers of THIS version between the two steps would
-        // parse-fail, which readVersioned surfaces — acceptable on a
-        // fallback path that never runs on POSIX
-        try {
-          Files.write(target, Array.emptyByteArray,
-            java.nio.file.StandardOpenOption.CREATE_NEW)
-          Files.move(tmp, target,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          true
-        } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    } finally {
-      Files.deleteIfExists(tmp)
-      ()
-    }
+    if (won && expected == 0L && Files.exists(refsPath(store)))
+      MetaFs.replace(refsPath(store), Tombstone.getBytes(StandardCharsets.UTF_8))
+    won
   }
 
-  /** Retire versions well behind `latest` (keep a few for readers that
-   * resolved a version just before a burst of commits). Best-effort. */
-  private def gcVersions(store: MetaStore, latest: Long): Unit =
-    versionsOf(store).filter(_ <= latest - 4).foreach { v =>
+  /** Versions [[retire]] keeps below the newest one. */
+  private val Keep = 16
+
+  /** After claiming version `won`: retire every version `Keep` or more
+   * below the newest, and report whether `won` is a GHOST — a name an
+   * earlier retire had already deleted, re-claimed by a writer that read its
+   * parent before `Keep` newer commits landed. Its state sits below the
+   * newest version, so the write is lost. A name is only retired once a
+   * version `Keep` above it exists, and the newest version is never
+   * retired, so a ghost always lists a version `won + Keep` or higher. A
+   * real win lists that high only if `Keep` commits land between its link
+   * and this listing; it is then re-run too, which repeats its update. */
+  private def retire(store: MetaStore, won: Long): Boolean = {
+    val vs = versionsOf(store)
+    val newest = vs.lastOption.getOrElse(won)
+    vs.filter(_ <= newest - Keep).foreach { v =>
       try Files.deleteIfExists(refsDir(store).resolve(s"v$v.json"))
       catch { case _: java.io.IOException => () }
     }
+    newest >= won + Keep
+  }
 
   /** Run a refs read-modify-write with CAS publication: `body` maps the
    * current state to (Some(newState) to commit | None for read-only, plus
-   * the caller's result). On a lost CAS race the body RE-RUNS against the
-   * winner's state, so no update is ever silently clobbered — the advisory
-   * [[withRefsLock]] wrapper only keeps concurrent writers from burning
-   * retries, it is not load-bearing for correctness. */
+   * the caller's result). On a lost CAS race, or a ghost claim of a retired
+   * version ([[retire]]), the body RE-RUNS against the winner's state, so
+   * no update is ever silently clobbered. */
   private[graft] def rmwRefs[A](store: MetaStore)
-                               (body: RefsFile => (Option[RefsFile], A)): A =
-    withRefsLock(store) {
-      var attempts = 0
-      var out: Option[A] = None
-      while (out.isEmpty) {
-        val (v, cur) = readVersioned(store)
-        val (next, result) = body(cur)
-        next match {
-          case None => out = Some(result)
-          case Some(nf) =>
-            if (casWrite(store, v, nf)) {
-              gcVersions(store, v + 1)
-              out = Some(result)
-            } else {
-              attempts += 1
-              if (attempts > 100)
-                sys.error(s"refs CAS: lost $attempts races in a row " +
-                  s"(${store.tableDir}) — giving up rather than spinning")
-              Thread.sleep(1)
-            }
-        }
+                               (body: RefsFile => (Option[RefsFile], A)): A = {
+    var attempts = 0
+    var out: Option[A] = None
+    while (out.isEmpty) {
+      val (v, cur) = readVersioned(store)
+      val (next, result) = body(cur)
+      next match {
+        case None => out = Some(result)
+        case Some(nf) =>
+          if (casWrite(store, v, nf) && !retire(store, v + 1))
+            out = Some(result)
+          else {
+            attempts += 1
+            if (attempts > 100)
+              sys.error(s"refs CAS: lost $attempts races in a row " +
+                s"(${store.tableDir}) — giving up rather than spinning")
+            Thread.sleep(1)
+          }
       }
-      out.get
     }
+    out.get
+  }
 
   def tags(store: MetaStore): Map[String, Long] =
     readFile(store).tags.map { case (k, v) => k -> v.toLong }
@@ -190,133 +181,6 @@ object Refs {
         case _ => None
       }
     }
-
-  /** Steal a lock only once its MTIME is older than this (overridable for
-   * tests via -Dgraft.refs.lockStaleMs). The holder heartbeats the mtime at
-   * a fraction of this period, so a live-but-slow holder never looks stale;
-   * only a crashed holder's lock ages past the threshold. */
-  private def staleLockMs: Long =
-    sys.props.get("graft.refs.lockStaleMs").map(_.toLong).getOrElse(30000L)
-
-  /**
-   * ADVISORY serialization of refs mutators (tag / deleteTag / expireTags)
-   * with an O_EXCL lock file — a contention reducer, NOT the correctness
-   * mechanism: durability is carried by [[casWrite]]'s version CAS, so even
-   * a wrongly-stolen lock (a GC-paused holder evicted past its heartbeat —
-   * the irreducible failure mode of any mtime lease, r5 review) cannot lose
-   * an update; the two writers' CAS attempts conflict and the loser re-runs.
-   * Crash recovery: a waiter may steal a lock ONLY when the lock file's own
-   * mtime is stale (not when the waiter has waited long — ADVICE r4), the
-   * steal is claimed by atomic rename so exactly one stealer wins AND the
-   * claimed file's content must still be the token the waiter observed as
-   * stale — a fresh lock recreated between the stat and the move is
-   * restored, not destroyed (r5 review: without this, two waiters past the
-   * same stale observation could leapfrog-steal each other's fresh locks).
-   * A shared heartbeat refreshes the holder's mtime so a slow live holder
-   * is never evicted, and the finally-path deletes the lock only if it
-   * still carries this holder's token.
-   */
-  private[graft] def withRefsLock[A](store: MetaStore)(body: => A): A = {
-    val lock = Paths.get(store.tableDir, "meta", "refs.lock")
-    Files.createDirectories(lock.getParent)
-    val token = java.util.UUID.randomUUID().toString
-    acquire(lock, token)
-    val beat = startHeartbeat(lock)
-    try body finally {
-      beat.cancel(false)
-      try {
-        if (Files.exists(lock) &&
-            new String(Files.readAllBytes(lock),
-              StandardCharsets.UTF_8) == token)
-          Files.deleteIfExists(lock)
-      } catch { case _: java.io.IOException => () }
-      ()
-    }
-  }
-
-  /** O_EXCL create, with token-revalidated stale-steal (scaladoc above). */
-  private def acquire(lock: java.nio.file.Path, token: String): Unit = {
-    var held = false
-    while (!held) {
-      try {
-        Files.write(lock, token.getBytes(StandardCharsets.UTF_8),
-          java.nio.file.StandardOpenOption.CREATE_NEW)
-        held = true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          val ageMs =
-            try System.currentTimeMillis() -
-              Files.getLastModifiedTime(lock).toMillis
-            catch { case _: java.io.IOException => -1L } // gone → retry create
-          if (ageMs > staleLockMs) {
-            // content read deferred to here: the 2 ms contention poll needs
-            // only the stat; per-poll readAllBytes would be pure I/O waste
-            // (r5 review)
-            val observed =
-              try new String(Files.readAllBytes(lock), StandardCharsets.UTF_8)
-              catch { case _: java.io.IOException => "" }
-            // re-confirm staleness AFTER the content read: a fresh lock
-            // replacing the stale one between the first stat and the read
-            // would otherwise be observed as its own content and pass the
-            // claimed==observed check below
-            val stillStale =
-              try System.currentTimeMillis() -
-                Files.getLastModifiedTime(lock).toMillis > staleLockMs
-              catch { case _: java.io.IOException => false }
-            // claim the stale lock via atomic rename: the one waiter whose
-            // move succeeds owns the claim; losers see IOException and
-            // re-loop. The claim is deleted ONLY if it is still the file
-            // observed stale — a fresh lock that raced in is moved back.
-            val claim = lock.resolveSibling(s"refs.lock.stale-${token.take(8)}")
-            if (stillStale) try {
-              Files.move(lock, claim,
-                java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-              val claimed = new String(Files.readAllBytes(claim),
-                StandardCharsets.UTF_8)
-              if (claimed == observed) Files.deleteIfExists(claim)
-              else
-                // we grabbed a LIVE lock recreated after our stat: put it
-                // back (the refs CAS covers the sub-race where a third
-                // waiter locked in between — no update can be lost)
-                try Files.move(claim, lock,
-                  java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-                catch { case _: java.io.IOException =>
-                  Files.deleteIfExists(claim); ()
-                }
-            } catch { case _: java.io.IOException => () }
-          } else Thread.sleep(2)
-      }
-    }
-  }
-
-  /** One shared daemon scheduler for every lock's heartbeat: the typical
-   * critical section (a refs.json read-modify-write) is sub-millisecond,
-   * far under the first beat interval, so per-mutation thread
-   * create/start/interrupt would be pure overhead (r5 review) — a
-   * scheduled task that is cancelled before it ever fires costs ~nothing. */
-  private lazy val beatPool = {
-    val p = new java.util.concurrent.ScheduledThreadPoolExecutor(1, { r =>
-      val t = new Thread(r, "graft-refs-lock-heartbeat")
-      t.setDaemon(true)
-      t
-    }: java.util.concurrent.ThreadFactory)
-    // a hot mutation loop cancels thousands of never-fired beats; without
-    // this they linger in the delay queue until their first fire time
-    // (r5 review)
-    p.setRemoveOnCancelPolicy(true)
-    p
-  }
-
-  private def startHeartbeat(
-      lock: java.nio.file.Path): java.util.concurrent.ScheduledFuture[_] = {
-    val beatMs = math.max(1L, staleLockMs / 6)
-    beatPool.scheduleAtFixedRate(() => {
-      try Files.setLastModifiedTime(lock,
-        java.nio.file.attribute.FileTime.fromMillis(
-          System.currentTimeMillis()))
-      catch { case _: java.io.IOException => () } // lock vanished (stolen)
-    }, beatMs, beatMs, java.util.concurrent.TimeUnit.MILLISECONDS)
-  }
 
   /** Tag `snapshotId` (default: current) as `name`; overwrites an existing
    * tag of the same name. `maxRefAgeMs > 0` gives the tag an Iceberg-style

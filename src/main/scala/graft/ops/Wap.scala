@@ -1,9 +1,9 @@
 package graft.ops
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
-import graft.table.{DataFile, Json, MetaStore}
+import graft.table.{DataFile, Json, MetaFs, MetaStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One staged (written-but-unpublished) batch. `auditedMs` > 0 means a clean
@@ -56,15 +56,9 @@ object Wap {
     stagedDir(store).resolve(s"$name.json")
   }
 
-  private def writeRecord(store: MetaStore, rec: StagedWrite): Unit = {
-    val p = recordPath(store, rec.name)
-    val tmp = p.resolveSibling(
-      s"${rec.name}.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    Files.write(tmp, Json.mapper.writeValueAsString(rec)
-      .getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def writeRecord(store: MetaStore, rec: StagedWrite): Unit =
+    MetaFs.replace(recordPath(store, rec.name),
+      Json.mapper.writeValueAsString(rec).getBytes(StandardCharsets.UTF_8))
 
   def get(store: MetaStore, name: String): StagedWrite =
     Json.mapper.readValue[StagedWrite](new String(

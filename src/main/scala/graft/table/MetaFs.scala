@@ -1,0 +1,77 @@
+package graft.table
+
+import java.nio.file.{FileAlreadyExistsException, Files, Path, StandardCopyOption}
+import java.util.UUID
+
+/**
+ * The one way this engine publishes a metadata file. Every publish writes
+ * the full content to a sibling temp file (`<name>.tmp-<uuid8>`) first, so a
+ * reader sees the target either complete or absent — never torn.
+ *
+ *  - [[claim]]: create-once. The temp is HARD-LINKED to the target; link(2)
+ *    fails atomically with EEXIST when the name exists, so of N racing
+ *    claimers exactly one wins and the first content is never replaced.
+ *    Snapshot-id claims, refs versions, branch records and evolution
+ *    entries use it.
+ *  - [[replace]]: last writer wins. The temp is renamed over the target
+ *    (rename(2) replaces atomically). CURRENT, the partition spec, the sort
+ *    order and mutable records use it.
+ *
+ * A rename is NOT a claim: on POSIX `rename` silently replaces an existing
+ * target, `ATOMIC_MOVE` without `REPLACE_EXISTING` included. Temp names
+ * never end in `.json`, so the directory listers skip an in-flight publish.
+ */
+object MetaFs {
+
+  private def tempFor(target: Path): Path =
+    target.resolveSibling(
+      s"${target.getFileName}.tmp-${UUID.randomUUID().toString.take(8)}")
+
+  /** Publish `bytes` at `target` iff nothing is there yet. False when
+   * another writer holds the name (its content is left untouched). */
+  def claim(target: Path, bytes: Array[Byte]): Boolean = {
+    if (Files.exists(target)) return false // cheap early-out for a loser
+    val tmp = tempFor(target)
+    Files.write(tmp, bytes)
+    try {
+      Files.createLink(target, tmp)
+      true
+    } catch {
+      case _: FileAlreadyExistsException => false
+    } finally {
+      Files.deleteIfExists(tmp)
+      ()
+    }
+  }
+
+  /** Publish `bytes` at `target`, replacing any previous content. */
+  def replace(target: Path, bytes: Array[Byte]): Unit = {
+    val tmp = tempFor(target)
+    Files.write(tmp, bytes)
+    try Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
+    catch {
+      case e: java.io.IOException =>
+        Files.deleteIfExists(tmp)
+        throw e
+    }
+    ()
+  }
+
+  /** The N of every `<prefix><N>.json` in `dir`, ascending (empty when the
+   * directory does not exist). */
+  def versions(dir: Path, prefix: String): Seq[Long] = {
+    if (!Files.isDirectory(dir)) return Nil
+    val s = Files.list(dir)
+    try {
+      val out = scala.collection.mutable.ArrayBuffer[Long]()
+      val it = s.iterator()
+      while (it.hasNext) {
+        val n = it.next().getFileName.toString
+        if (n.startsWith(prefix) && n.endsWith(".json"))
+          n.substring(prefix.length, n.length - 5).toLongOption.foreach(out += _)
+      }
+      out.sorted.toSeq
+    } finally s.close()
+  }
+}

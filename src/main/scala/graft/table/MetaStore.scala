@@ -1,7 +1,7 @@
 package graft.table
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path => JPath, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path => JPath, Paths}
 import java.util.UUID
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -20,8 +20,8 @@ import org.apache.spark.sql.functions._
  *   <tableDir>/meta/checkpoints/<runId>/       per-item completion markers
  * }}}
  *
- * Commits are single-writer: CURRENT is replaced via write-temp + atomic
- * rename, with a parent check beforehand (SURVEY.md §7.5 risk item). Data
+ * Commits claim `snap-<id>.json` and then replace CURRENT, both through
+ * [[MetaFs]], with a parent check between (SURVEY.md §7.5 risk item). Data
  * files are never mutated — maintenance writes new files and commits a new
  * snapshot, so a reader holding a snapshot id sees a frozen file list
  * (snapshot isolation). This is the engine analog of the reference's
@@ -63,19 +63,7 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
 
   def currentSnapshot: Option[Snapshot] = currentSnapshotId.map(snapshot)
 
-  def allSnapshotIds: Seq[Long] = {
-    val stream = Files.list(metaDir)
-    try {
-      val it = stream.iterator()
-      val out = scala.collection.mutable.ArrayBuffer[Long]()
-      while (it.hasNext) {
-        val name = it.next().getFileName.toString
-        if (name.startsWith("snap-") && name.endsWith(".json"))
-          out += name.stripPrefix("snap-").stripSuffix(".json").toLong
-      }
-      out.sorted.toSeq
-    } finally stream.close()
-  }
+  def allSnapshotIds: Seq[Long] = MetaFs.versions(metaDir, "snap-")
 
   def entries(snapshotId: Long): Seq[DataFile] = {
     val snap = snapshot(snapshotId)
@@ -248,10 +236,7 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
         }
       }
     }
-    val tmp = metaDir.resolve(s"partition-spec.tmp-${UUID.randomUUID().toString.take(8)}")
-    Files.write(tmp, Json.write(spec).getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, specPath, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    MetaFs.replace(specPath, Json.write(spec).getBytes(StandardCharsets.UTF_8))
   }
 
   /** Write a batch under `dir` honoring the partition spec when one is
@@ -280,10 +265,7 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
       "sort order needs at least one range column (it is also the decay-trigger column)")
     require(Set("zorder", "hilbert")(order.curve),
       s"unknown curve '${order.curve}' (zorder|hilbert)")
-    val tmp = metaDir.resolve(s"sort-order.tmp-${UUID.randomUUID().toString.take(8)}")
-    Files.write(tmp, Json.write(order).getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, sortOrderPath, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    MetaFs.replace(sortOrderPath, Json.write(order).getBytes(StandardCharsets.UTF_8))
   }
 
   // ---- metadata tables (Iceberg's table$files / table$snapshots analog) ----
@@ -439,7 +421,7 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
    * Returns the new snapshot id.
    *
    * Cross-PROCESS safe, not just JVM-local. The id is always `parent + 1`
-   * (parent = CURRENT at entry), claimed by an O_EXCL (`CREATE_NEW`) create
+   * (parent = CURRENT at entry), claimed by a create-once [[MetaFs.claim]]
    * of `snap-<id>.json` — so the id claim IS the check-and-set: CURRENT can
    * only ever advance to `CURRENT + 1`, and of N writers racing from the
    * same base the filesystem admits exactly one; every loser (including one
@@ -449,7 +431,7 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
    * construction — the invariant [[graft.streaming.ChangeFeed]]'s
    * retention-gap detection relies on. One corner needs the post-claim
    * re-check of CURRENT: a claim of an id that expiry deleted earlier (a
-   * writer stale by more than the retention window) wins CREATE_NEW against
+   * writer stale by more than the retention window) wins the claim against
    * a ghost — the CAS sees CURRENT ≠ parent, deletes the claim, and throws.
    * A commit that crashes between claim and CURRENT rename leaves a
    * snap-file > CURRENT that would block the next writer's claim;
@@ -743,7 +725,7 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
         }.toSeq
     }
 
-  /** Claim snap-<id>.json (O_EXCL), CAS CURRENT, atomic-rename publish.
+  /** Claim snap-<id>.json, CAS CURRENT, replace CURRENT ([[MetaFs]]).
    * `ownManifests` / `ownDeletes` = files THIS commit wrote (cleaned up on
    * failure); reused/inherited names are never touched. */
   private def publish(operation: String, parent: Long, id: Long,
@@ -761,31 +743,23 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
       if (ownDeletes)
         delManifestNames.foreach(n => Files.deleteIfExists(metaDir.resolve(n)))
     }
-    try
-      Files.write(snapPath, Json.write(snap).getBytes(StandardCharsets.UTF_8),
-        java.nio.file.StandardOpenOption.CREATE_NEW)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        ownManifests.foreach { n =>
-          Files.deleteIfExists(metaDir.resolve(n)); forgetManifest(n)
-        }
-        if (ownDeletes)
-          delManifestNames.foreach(n => Files.deleteIfExists(metaDir.resolve(n)))
-        throw new ConcurrentCommitException(
-          s"snapshot id $id was claimed by another writer (parent $parent)")
+    if (!MetaFs.claim(snapPath, Json.write(snap).getBytes(StandardCharsets.UTF_8))) {
+      ownManifests.foreach { n =>
+        Files.deleteIfExists(metaDir.resolve(n)); forgetManifest(n)
+      }
+      if (ownDeletes)
+        delManifestNames.foreach(n => Files.deleteIfExists(metaDir.resolve(n)))
+      throw new ConcurrentCommitException(
+        s"snapshot id $id was claimed by another writer (parent $parent)")
     }
-    val tmp = metaDir.resolve(s"CURRENT.tmp-${UUID.randomUUID().toString.take(8)}")
-    Files.write(tmp, id.toString.getBytes(StandardCharsets.UTF_8))
     // check-and-set: re-read CURRENT after winning the id claim
     val nowParent = currentSnapshotId.getOrElse(-1L)
     if (nowParent != parent) {
       dropClaim()
-      Files.deleteIfExists(tmp)
       throw new ConcurrentCommitException(
         s"CURRENT moved $parent -> $nowParent during commit of snapshot $id")
     }
-    Files.move(tmp, currentPath, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    MetaFs.replace(currentPath, id.toString.getBytes(StandardCharsets.UTF_8))
     id
   }
 

@@ -167,7 +167,7 @@ class RefsSpec extends AnyFunSuite {
     assert(!Refs.retention(store).contains("fresh"))
   }
 
-  test("concurrent tag() RMWs never lose a tag (refs.json is lock-serialized)") {
+  test("concurrent tag() RMWs never lose a tag (version-CAS serialized)") {
     val dir = Files.createTempDirectory("graft-refs-race-").toString
     val store = MetaStore.forClips(dir)
     Append.run(spark, store, ClipSynth.dataset(spark, 20, 2, maxDurMs = 100).toDF())
@@ -192,55 +192,6 @@ class RefsSpec extends AnyFunSuite {
     // an unlocked read-modify-write loses tags under this interleaving
     assert(Refs.tags(store).keySet == (0 until n).map(i => s"t$i").toSet)
     assert(Refs.retention(store).keySet == (0 until n).map(i => s"t$i").toSet)
-  }
-
-  test("a slow live lock holder is never evicted; a crashed one is stolen") {
-    val dir = Files.createTempDirectory("graft-refs-lock-").toString
-    val store = MetaStore.forClips(dir)
-    Append.run(spark, store, ClipSynth.dataset(spark, 4, 1, maxDurMs = 40).toDF())
-    val prev = sys.props.get("graft.refs.lockStaleMs")
-    sys.props("graft.refs.lockStaleMs") = "200"
-    try {
-      // holder A sleeps 5x past the stale threshold inside the lock — the
-      // heartbeat must keep its mtime fresh so waiter B never steals it
-      @volatile var aEntered = false
-      @volatile var aReleasedNs = 0L
-      @volatile var bAcquiredNs = 0L
-      val a = new Thread(() => {
-        Refs.withRefsLock(store) { aEntered = true; Thread.sleep(1000) }
-        aReleasedNs = System.nanoTime()
-      })
-      a.start()
-      while (!aEntered) Thread.sleep(1)
-      val b = new Thread(() =>
-        Refs.withRefsLock(store) { bAcquiredNs = System.nanoTime() })
-      b.start()
-      a.join(15000); b.join(15000)
-      assert(aReleasedNs != 0L && bAcquiredNs != 0L, "lock threads wedged")
-      assert(bAcquiredNs >= aReleasedNs,
-        "waiter entered the critical section while a live holder slept in it")
-      // the RMW surface still works end-to-end afterwards
-      Refs.tag(store, "after-slow-holder")
-      assert(Refs.tags(store).contains("after-slow-holder"))
-
-      // crashed holder: a lock file whose mtime is long stale (no heartbeat
-      // running) is stolen — tag() completes instead of waiting forever
-      val lock = java.nio.file.Paths.get(store.tableDir, "meta", "refs.lock")
-      Files.write(lock, "dead-holder".getBytes)
-      Files.setLastModifiedTime(lock,
-        java.nio.file.attribute.FileTime.fromMillis(
-          System.currentTimeMillis() - 10000L))
-      val t = new Thread(() => Refs.tag(store, "stolen-through"): Unit)
-      t.start(); t.join(15000)
-      assert(!t.isAlive, "waiter never stole a provably stale lock")
-      assert(Refs.tags(store).contains("stolen-through"))
-      assert(!Files.exists(lock), "stale lock not cleaned up after steal")
-    } finally {
-      prev match {
-        case Some(v) => sys.props("graft.refs.lockStaleMs") = v
-        case None => sys.props.remove("graft.refs.lockStaleMs"); ()
-      }
-    }
   }
 
   test("refs version-CAS: a conflicting commit between read and write " +
@@ -271,6 +222,50 @@ class RefsSpec extends AnyFunSuite {
     val (v, c) = Refs.readVersioned(store)
     assert(Refs.casWrite(store, v, c))
     assert(!Refs.casWrite(store, v, c), "second claim of one version won")
+  }
+
+  test("refs version-CAS: a writer stalled past the retire window re-runs " +
+    "instead of claiming a retired version") {
+    val dir = Files.createTempDirectory("graft-refs-ghost-").toString
+    val store = MetaStore.forClips(dir)
+    Append.run(spark, store, ClipSynth.dataset(spark, 4, 1, maxDurMs = 40).toDF())
+    Refs.tag(store, "base")
+    val others = (0 until 20).map(i => s"o$i")
+    var calls = 0
+    Refs.rmwRefs(store) { cur =>
+      calls += 1
+      // the stall: 20 commits land after our read, and retiring old
+      // versions deletes the name our casWrite is about to claim
+      if (calls == 1) others.foreach(Refs.tag(store, _))
+      (Some(cur.copy(tags = cur.tags + ("mine" -> "1"))), ())
+    }
+    assert(calls == 2, s"a ghost claim of a retired version counted as a win")
+    assert(Refs.tags(store).keySet == (others :+ "base" :+ "mine").toSet)
+  }
+
+  test("legacy refs.json: read as-is, migrated to v1 by the first " +
+    "mutation, then tombstoned") {
+    val dir = Files.createTempDirectory("graft-refs-legacy-").toString
+    val store = MetaStore.forClips(dir)
+    Append.run(spark, store, ClipSynth.dataset(spark, 4, 1, maxDurMs = 40).toDF())
+    val id = store.currentSnapshotId.get
+    val meta = java.nio.file.Paths.get(dir, "meta")
+    // a table written before versioned refs: one refs.json, no meta/refs/
+    Files.write(meta.resolve("refs.json"),
+      s"""{"tags":{"old":"$id"}}""".getBytes("UTF-8"))
+    assert(Refs.tags(store) == Map("old" -> id))
+
+    Refs.tag(store, "new", id)
+    assert(Files.exists(meta.resolve("refs").resolve("v1.json")))
+    assert(Refs.tags(store) == Map("old" -> id, "new" -> id))
+    // a reader that predates meta/refs/ must fail, not read stale tags
+    val tomb = new String(Files.readAllBytes(meta.resolve("refs.json")), "UTF-8")
+    intercept[Exception](graft.table.Json.mapper.readValue[graft.ops.RefsFile](tomb))
+
+    // versioned state gone, tombstone left: a typed error, not empty tags
+    Files.walk(meta.resolve("refs")).iterator().asScala.toSeq.reverse
+      .foreach(Files.delete)
+    intercept[graft.ops.RefsMigratedException](Refs.tags(store))
   }
 
   test("age-based retention: fresh snapshots are not expirable") {

@@ -83,6 +83,25 @@ class ScaleDataSpec extends AnyFunSuite {
     assert(wordJac((0L, 1L)) === wordJac((n0, n0 + 1L)))
   }
 
+  test("replica suffixing keeps a doc's non-empty-token count across " +
+    "doubled, leading and trailing spaces") {
+    val src = Seq((0L, "the  quick brown fox "), (1L, " a b  c  "))
+      .toDF("doc_id", "text")
+    def counts(d: org.apache.spark.sql.DataFrame): Map[Long, Int] =
+      d.select(col("doc_id"), split(col("text"), " ").as("w")).collect()
+        .map(r => r.getLong(0) -> r.getSeq[String](1).count(_.nonEmpty)).toMap
+    val want = counts(src)
+    assert(want == Map(0L -> 4, 1L -> 3))
+    for (rep <- 1 to 3) {
+      val d = ScaleData.suffixWords(src, rep)
+      assert(counts(d) == want, s"replica $rep")
+      // every non-empty token carries the suffix; no bare suffix appears
+      val toks = d.select(explode(split(col("text"), " "))).as[String]
+        .collect().filter(_.nonEmpty)
+      assert(toks.forall(t => t.endsWith(s"r$rep") && t != s"r$rep"), toks.toSeq)
+    }
+  }
+
   test("embedding rotation preserves the norm (linear work for norm/cosine " +
     "queries) while changing direction") {
     val e = spark.read.parquet(s"$outDir/embeddings.parquet")
