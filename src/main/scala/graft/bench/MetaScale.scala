@@ -108,8 +108,8 @@ object MetaScale {
       PlanScan.prune(spark, store, snap, probe)
       val (distPoint, tDistPoint) = time(PlanScan.prune(spark, store, snap, probe))
       val (distRange, tDistRange) = time(PlanScan.prune(spark, store, snap, preds))
-      val (paths, tDistList) = time(PlanScan.listPaths(spark, store, snap))
-      require(paths.size == k.toInt, s"listPaths ${paths.size} != $k")
+      val (unpruned, tDistList) = time(PlanScan.prune(spark, store, snap, Nil))
+      require(unpruned.kept.size == k.toInt, s"unpruned plan ${unpruned.kept.size} != $k")
       val (ptRows, tPartitionsFold) = time(PlanScan.partitionsFold(spark, store, snap))
 
       // ---- driver planning tier (K-bounded: materializes every entry) ----

@@ -141,9 +141,9 @@ object Compact {
     val inScope: graft.table.DataFile => Boolean =
       if (scope.isEmpty) _ => true
       else {
-        val tuplePruner = store.partitionSpec.map(_.pruner(scope))
-          .getOrElse((_: graft.table.DataFile) => true)
-        f => tuplePruner(f) && scope.forall(_.mayMatch(f))
+        val paths = graft.table.Pruning.tupleZone(store.partitionSpec, entries, scope)
+          ._2.iterator.map(_.path).toSet
+        f => paths.contains(f.path)
       }
     val (candidates, kept) =
       entries.partition(e => e.sizeBytes < threshold && inScope(e))

@@ -219,14 +219,6 @@ object Deletes {
     else visible
   }
 
-  /** Delete-aware snapshot scan (the [[MetaStore.scan]] route when the
-   * snapshot carries delete manifests). */
-  def scan(spark: SparkSession, store: MetaStore, snapshotId: Long): DataFrame = {
-    val entries = store.entries(snapshotId)
-    if (entries.isEmpty) store.emptyLike(spark)
-    else readFiles(spark, store, snapshotId, entries)
-  }
-
   /**
    * Commit an equality delete: write `keys` (any column subset of the table;
    * duplicates dropped) as one parquet delete file and commit a `delete`
@@ -347,12 +339,10 @@ object Deletes {
     val (covered, rest) = entries.partition(f => preds.forall(p =>
       spec.exists(_.mustMatchAll(f, p)) || p.mustMatchAll(f)))
 
-    // residue: files that may still contain matching rows (tuple + zonemap
-    // conservative keep), read delete-aware so already-deleted rows don't
-    // re-resolve
-    val tupleKeep = spec.map(_.pruner(preds))
-      .getOrElse((_: DataFile) => true)
-    val candidates = Pruning.keep(rest.filter(tupleKeep), preds)
+    // residue: files that may still contain matching rows (tuple, zonemap
+    // and bloom conservative keep), read delete-aware so already-deleted
+    // rows don't re-resolve
+    val candidates = Pruning.candidates(spark, store, rest, preds)
     val keyDf =
       if (candidates.isEmpty) None
       else if (positional)
@@ -578,25 +568,14 @@ object Deletes {
         val byCol = eqDels.zip(delColSets).groupBy(_._2.head)
         // a file needs a rewrite iff it MAY contain a key of SOME delete
         // that covers it (delete.seq > file.seq)
-        val mayPerCol: Map[String, DataFile => Boolean] =
-          byCol.map { case (c, ds) =>
-            val maxSeq = ds.map(_._1.seq).max
-            val vals = spark.read.parquet(ds.map(_._1.path): _*)
-              .distinct().collect().map(_.get(0)).toSeq
-            val pred = Pred.InSet(c, vals)
-            val tupleKeep = store.partitionSpec.map(_.pruner(Seq(pred)))
-              .getOrElse((_: DataFile) => true)
-            val bloomSurvivors: Option[Set[String]] =
-              if (store.bloomColumn.contains(c)) {
-                val zoneCand = coveredEq.filter(f =>
-                  f.seq < maxSeq && tupleKeep(f) && pred.mayMatch(f))
-                Some(graft.table.FileBloom.prunePaths(spark, store,
-                  zoneCand.map(_.path), vals.map(_.toString)))
-              } else None
-            c -> ((f: DataFile) => f.seq < maxSeq && tupleKeep(f) &&
-              pred.mayMatch(f) && bloomSurvivors.forall(_.contains(f.path)))
-          }
-        coveredEq.filter(f => mayPerCol.values.exists(_(f)))
+        val mayPaths: Set[String] = byCol.iterator.flatMap { case (c, ds) =>
+          val maxSeq = ds.map(_._1.seq).max
+          val vals = spark.read.parquet(ds.map(_._1.path): _*)
+            .distinct().collect().map(_.get(0)).toSeq
+          Pruning.candidates(spark, store, coveredEq.filter(_.seq < maxSeq),
+            Seq(Pred.InSet(c, vals))).map(_.path)
+        }.toSet
+        coveredEq.filter(f => mayPaths.contains(f.path))
       }
     val toRewrite = eqToRewrite ++
       coveredPos.filterNot(f => eqToRewrite.exists(_.path == f.path))

@@ -282,9 +282,10 @@ object Evolve {
    * of evolutions they predate (at most one group per era in practice), read
    * each group under the declared schema (absent columns -> NULL), fill that
    * group's defaults, and union. Rows are identical to a full
-   * rewrite-on-evolve, at zero write cost. Used by [[MetaStore.scan]] AND by
-   * direct-file maintenance readers (per-bin compaction), so every rewrite
-   * materializes the defaults regardless of which path it reads through.
+   * rewrite-on-evolve, at zero write cost. Used by every scan (through
+   * [[Deletes.readFiles]]) AND by direct-file maintenance readers (per-bin
+   * compaction), so every rewrite materializes the defaults regardless of
+   * which path it reads through.
    */
   /** @param withPos attach [[Deletes.PosPathCol]]/[[Deletes.PosIdxCol]]
    *   (normalized source path + 0-based row index, from the parquet source's
@@ -347,12 +348,5 @@ object Evolve {
     else StructType(org.apache.spark.sql.types.DataType
       .fromJson(e.schemaAfterJson).asInstanceOf[StructType]
       .fields.filterNot(_.name == e.column))
-  }
-
-  /** Evolution-aware snapshot scan (see [[readFiles]]). */
-  def scan(spark: SparkSession, store: MetaStore, snapshotId: Long): DataFrame = {
-    val entries = store.entries(snapshotId)
-    if (entries.isEmpty) spark.emptyDataFrame
-    else readFiles(spark, store, entries)
   }
 }

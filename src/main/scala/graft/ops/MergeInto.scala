@@ -91,15 +91,8 @@ object MergeInto {
     }
     val candidates = keyVals match {
       case Some(vs) if vs.nonEmpty =>
-        val pred = graft.table.Pred.InSet(keyCol, vs)
-        val tupleKeep = store.partitionSpec.map(_.pruner(Seq(pred)))
-          .getOrElse((_: graft.table.DataFile) => true)
-        val zoneKept = graft.table.Pruning.keep(entries.filter(tupleKeep), Seq(pred))
-        if (store.bloomColumn.contains(keyCol) && zoneKept.nonEmpty) {
-          val surviving = graft.table.FileBloom.prunePaths(spark, store,
-            zoneKept.map(_.path), vs.map(_.toString))
-          zoneKept.filter(e => surviving.contains(e.path))
-        } else zoneKept
+        graft.table.Pruning.candidates(spark, store, entries,
+          Seq(graft.table.Pred.InSet(keyCol, vs)))
       case _ => entries
     }
     val touchedPaths =
@@ -345,18 +338,8 @@ object MergeInto {
     val candidates =
       if (head.isEmpty) Nil
       else if (head.length > SmallKeySetLimit) entries // assume broad touch
-      else {
-        val vs = head.map(_.get(0)).toSeq
-        val pred = graft.table.Pred.InSet(keyCol, vs)
-        val tupleKeep = store.partitionSpec.map(_.pruner(Seq(pred)))
-          .getOrElse((_: graft.table.DataFile) => true)
-        val zoneKept = graft.table.Pruning.keep(entries.filter(tupleKeep), Seq(pred))
-        if (store.bloomColumn.contains(keyCol) && zoneKept.nonEmpty) {
-          val surviving = graft.table.FileBloom.prunePaths(spark, store,
-            zoneKept.map(_.path), vs.map(_.toString))
-          zoneKept.filter(e => surviving.contains(e.path))
-        } else zoneKept
-      }
+      else graft.table.Pruning.candidates(spark, store, entries,
+        Seq(graft.table.Pred.InSet(keyCol, head.map(_.get(0)).toSeq)))
     // batch size estimate from the update keys' row count x the table's
     // mean row width (the batch frame itself has no size until written)
     val tableRows = math.max(entries.map(_.rows).sum, 1L)

@@ -1,8 +1,10 @@
 package graft.ops
 
-import java.nio.file.{Files, Path, Paths}
+import java.io.IOException
+import java.nio.file.{FileVisitResult, Files, Path, Paths, SimpleFileVisitor}
+import java.nio.file.attribute.BasicFileAttributes
 
-import graft.table.MetaStore
+import graft.table.{MetaFs, MetaStore}
 
 import scala.jdk.CollectionConverters._
 
@@ -92,11 +94,27 @@ object RemoveOrphans {
   /** A commit that crashed between its snap-file claim and the CURRENT
    * rename leaves `snap-<k>.json` with k > CURRENT — unreachable, and
    * blocking the next writer's claim of that id (MetaStore.commit allocates
-   * CURRENT + 1). Deletes such debris (and its manifests) behind the same
-   * age floor that protects in-flight commits. */
+   * CURRENT + 1). A publish that crashed between its temp write and its
+   * link or rename leaves a [[MetaFs]] temp anywhere under `meta/`. Deletes
+   * such debris (and a crashed snapshot's manifests) behind the same age
+   * floor that protects in-flight commits. */
   private def removeCommitDebris(store: MetaStore, cutoffMs: Long): Int = {
-    val cur = store.currentSnapshotId.getOrElse(return 0)
     var removed = 0
+    Files.walkFileTree(Paths.get(store.tableDir, "meta"), new SimpleFileVisitor[Path] {
+      override def visitFile(p: Path, a: BasicFileAttributes): FileVisitResult = {
+        if (MetaFs.isTemp(p.getFileName.toString) &&
+            a.lastModifiedTime.toMillis < cutoffMs && Files.deleteIfExists(p))
+          removed += 1
+        FileVisitResult.CONTINUE
+      }
+      // live writers remove their own temps and lineage `_temporary` dirs
+      // while the walk runs: a vanished entry is not an error
+      override def visitFileFailed(p: Path, e: IOException): FileVisitResult =
+        FileVisitResult.CONTINUE
+      override def postVisitDirectory(d: Path, e: IOException): FileVisitResult =
+        FileVisitResult.CONTINUE
+    })
+    val cur = store.currentSnapshotId.getOrElse(return removed)
     store.allSnapshotIds.filter(_ > cur).foreach { id =>
       val p = Paths.get(store.tableDir, "meta", s"snap-$id.json")
       if (Files.exists(p) && Files.getLastModifiedTime(p).toMillis < cutoffMs) {

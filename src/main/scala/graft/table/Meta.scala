@@ -1,5 +1,8 @@
 package graft.table
 
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path}
+
 import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import com.fasterxml.jackson.module.scala.{ClassTagExtensions, DefaultScalaModule}
 
@@ -105,13 +108,19 @@ object Json {
     // (primitive Long `seq` defaults to 0 on its own)
     if (snap.deleteManifests == null) snap.copy(deleteManifests = Nil) else snap
   }
-  def readManifest(s: String): ManifestFile = {
-    val m = mapper.readValue[ManifestFile](s)
+  /** The one manifest codec: every data and delete manifest is read and
+   * written through this pair. Static, so PlanScan's executors call it. */
+  def readManifest(path: Path): Seq[DataFile] = {
+    val es = mapper.readValue[ManifestFile](
+      new String(Files.readAllBytes(path), StandardCharsets.UTF_8)).entries
     // pre-partitioning manifest-*.json lacks the field; Jackson leaves the
     // Map null (same back-compat rule as Snapshot.deleteManifests)
-    if (m.entries.exists(_.partition == null))
-      ManifestFile(m.entries.map(e =>
-        if (e.partition == null) e.copy(partition = Map.empty) else e))
-    else m
+    if (es.exists(_.partition == null))
+      es.map(e => if (e.partition == null) e.copy(partition = Map.empty) else e)
+    else es
+  }
+  def writeManifest(path: Path, entries: Seq[DataFile]): Unit = {
+    Files.write(path, write(ManifestFile(entries)).getBytes(StandardCharsets.UTF_8))
+    ()
   }
 }

@@ -27,6 +27,12 @@ object MetaFs {
     target.resolveSibling(
       s"${target.getFileName}.tmp-${UUID.randomUUID().toString.take(8)}")
 
+  private val TempName = """.+\.tmp-[0-9a-f]{8}""".r
+
+  /** Whether `fileName` is a publish temp (`<name>.tmp-<uuid8>`) — left
+   * behind only by a crash between its write and its link or rename. */
+  def isTemp(fileName: String): Boolean = TempName.matches(fileName)
+
   /** Publish `bytes` at `target` iff nothing is there yet. False when
    * another writer holds the name (its content is left untouched). */
   def claim(target: Path, bytes: Array[Byte]): Boolean = {

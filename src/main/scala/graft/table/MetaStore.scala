@@ -65,45 +65,22 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
 
   def allSnapshotIds: Seq[Long] = MetaFs.versions(metaDir, "snap-")
 
-  def entries(snapshotId: Long): Seq[DataFile] = {
-    val snap = snapshot(snapshotId)
-    snap.manifests.flatMap { m =>
-      Json.readManifest(new String(
-        Files.readAllBytes(metaDir.resolve(m)), StandardCharsets.UTF_8)).entries
-    }
-  }
+  def entries(snapshotId: Long): Seq[DataFile] =
+    snapshot(snapshotId).manifests.flatMap(m => Json.readManifest(metaDir.resolve(m)))
 
   /** Equality-delete files live for `snapshotId` (empty = no deletes). Each
    * entry's parquet holds key values; `seq` = the delete's commit id. */
-  def deleteEntries(snapshotId: Long): Seq[DataFile] = {
-    val snap = snapshot(snapshotId)
-    snap.deleteManifests.flatMap { m =>
-      Json.readManifest(new String(
-        Files.readAllBytes(metaDir.resolve(m)), StandardCharsets.UTF_8)).entries
-    }
-  }
+  def deleteEntries(snapshotId: Long): Seq[DataFile] =
+    snapshot(snapshotId).deleteManifests.flatMap(m => Json.readManifest(metaDir.resolve(m)))
 
-  /** Snapshot-isolated scan: the file list is frozen at commit time. With a
-   * non-empty evolution log the read goes through the evolution-aware path
-   * (declared schema + per-era defaults, graft.ops.Evolve.scan) — that keeps
-   * every maintenance rewrite (compact/cluster read through here) silently
-   * MATERIALIZING evolved defaults into its output files. */
-  def scan(spark: SparkSession, snapshotId: Long): DataFrame = {
-    val snap = snapshot(snapshotId)
-    if (snap.deleteManifests.nonEmpty)
-      return graft.ops.Deletes.scan(spark, this, snapshotId)
-    if (graft.ops.Evolve.evolutions(this).nonEmpty)
-      return graft.ops.Evolve.scan(spark, this, snapshotId)
-    // above the planning threshold the path listing is a Spark job over
-    // manifest shards — the driver never parses K entries' stats/tuples
-    // just to keep the path strings (PlanScan Scaladoc has the numbers)
-    val paths =
-      if (planDistributed(snap))
-        PlanScan.listPaths(spark, this, snap)
-      else entries(snapshotId).map(_.path)
-    if (paths.isEmpty) emptyLike(spark)
-    else spark.read.parquet(paths: _*)
-  }
+  /** Snapshot-isolated scan: the file list is frozen at commit time. It is
+   * [[scanPruned]] with no predicates — the one read path, so deletes are
+   * applied, evolved columns read under the declared schema with per-era
+   * defaults (every maintenance rewrite reading through here MATERIALIZES
+   * them into its output files), and planning picks its tier by
+   * [[planDistributed]]. */
+  def scan(spark: SparkSession, snapshotId: Long): DataFrame =
+    scanPruned(spark, snapshotId, Nil).df
 
   /** Zero-row frame that still CARRIES THE TABLE SCHEMA when any historical
    * data file is reachable (footer-only read under a constant-false filter)
@@ -154,16 +131,17 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
     sys.props.get("graft.plan.distributedThreshold").map(_.toLong)
       .getOrElse(100000L)
 
-  /** The one tier-selection decision (scan, scanPruned, partitionsTable,
-   * FileBloom.compact all route through it — a drifted copy of the
-   * predicate would silently plan on the wrong tier). */
+  /** The one tier-selection decision (scanPruned, which every scan goes
+   * through, partitionsTable and FileBloom.compact all route through it — a
+   * drifted copy of the predicate would silently plan on the wrong tier). */
   def planDistributed(snap: Snapshot): Boolean =
     PlanScan.estimatedFiles(this, snap) >= distributedPlanThreshold
 
-  /** Zonemap scan: skip whole data files whose manifest min/max stats prove
-   * they cannot match `preds` (see [[Pruning]]); result rows are identical to
-   * `scan(...).filter(Pred.and(preds))` by construction. Plans distributed
-   * above [[distributedPlanThreshold]]. */
+  /** The one way a snapshot is read: skip whole data files that the
+   * partition tuple, zonemap or bloom tiers prove cannot match `preds` (see
+   * [[Pruning]]), then read the rest delete- and evolution-aware; result
+   * rows are identical to `scan(...).filter(Pred.and(preds))` by
+   * construction. Plans distributed above [[distributedPlanThreshold]]. */
   def scanPruned(spark: SparkSession, snapshotId: Long,
                  preds: Seq[Pred]): PrunedScan = {
     val snap = snapshot(snapshotId)
@@ -694,16 +672,14 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
   }
 
   private[graft] def readManifestEntries(name: String): Seq[DataFile] = {
-    val es = Json.readManifest(new String(
-      Files.readAllBytes(metaDir.resolve(name)), StandardCharsets.UTF_8)).entries
+    val es = Json.readManifest(metaDir.resolve(name))
     cachePathSet(name, es)
     es
   }
 
   private def writeManifest(id: Long, shard: Seq[DataFile]): String = {
     val name = s"manifest-$id-${UUID.randomUUID().toString.take(8)}.json"
-    Files.write(metaDir.resolve(name),
-      Json.write(ManifestFile(shard)).getBytes(StandardCharsets.UTF_8))
+    Json.writeManifest(metaDir.resolve(name), shard)
     cachePathSet(name, shard)
     name
   }
@@ -719,8 +695,7 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
       case Some(ds) =>
         ds.grouped(manifestShardSize).map { shard =>
           val name = s"delmanifest-$id-${UUID.randomUUID().toString.take(8)}.json"
-          Files.write(metaDir.resolve(name),
-            Json.write(ManifestFile(shard)).getBytes(StandardCharsets.UTF_8))
+          Json.writeManifest(metaDir.resolve(name), shard)
           name
         }.toSeq
     }

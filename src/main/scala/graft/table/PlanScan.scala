@@ -1,7 +1,6 @@
 package graft.table
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.SparkSession
 
@@ -9,8 +8,9 @@ import org.apache.spark.sql.SparkSession
  * Distributed scan planning: prune manifest shards as a SPARK JOB instead of
  * a driver-side parse of every entry.
  *
- * The driver-side planning tier ([[MetaStore.entries]] → [[Pruning.scan]])
- * is O(table files) in JSON parse + [[DataFile]] materialization per query.
+ * The driver-side planning tier ([[MetaStore.entries]] parsed on the
+ * driver, then [[Pruning.tupleZone]]) is O(table files) in JSON parse +
+ * [[DataFile]] materialization per query.
  * At the measured 10^5–10^6-file regime that is seconds of driver time; at
  * the nominal 10^12-row / 10^7-file scale it is the one remaining
  * scale-killer (r4 verdict). Iceberg solves it the same way: manifests are
@@ -21,10 +21,11 @@ import org.apache.spark.sql.SparkSession
  * receives back only the KEPT entries plus aggregate evidence — for a point
  * probe on a clustered/bucketed table that is a handful of files regardless
  * of K. All three elimination tiers run exactly as the driver path does:
- * partition tuples and zonemaps inside the job (per-shard
- * [[PartitionSpec.pruner]] memo + [[Pruning.keep]] — the same code, so
- * distributed and driver planning cannot diverge), blooms afterwards on the
- * already-small kept set ([[FileBloom.prunePaths]], itself a Spark job).
+ * partition tuples and zonemaps inside the job ([[Pruning.tupleZone]] per
+ * shard — the same code, so distributed and driver planning cannot
+ * diverge), blooms afterwards on the already-small kept set (the bloom step
+ * of [[Pruning.scanDistributed]], itself a Spark job). An unpruned scan
+ * ([[MetaStore.scan]]) takes the same job with no predicates.
  *
  * Reference contract: stats-beside-data reads scale with the data volume,
  * not the driver (cursor/src/main/java/cursors/io/ISAMCursor.kt:175-211 —
@@ -57,13 +58,13 @@ object PlanScan {
     math.max(1, math.min(nShards, spark.sparkContext.defaultParallelism * 2))
 
   private def readShard(metaDir: String, name: String): Seq[DataFile] =
-    Json.readManifest(new String(
-      Files.readAllBytes(Paths.get(metaDir, name)),
-      StandardCharsets.UTF_8)).entries
+    Json.readManifest(Paths.get(metaDir, name))
 
   /** Partition-tuple + zonemap pruning of `snap`'s manifests, one task per
    * shard group. Identical keep/skip decisions to the driver path by
-   * construction (same pruner, same [[Pruning.keep]]). */
+   * construction (same [[Pruning.tupleZone]]). Kept entries come back
+   * WITHOUT `stats`: pruning has used them, and assembly reads only path,
+   * seq and rows — so an unpruned plan ships no more than the paths need. */
   def prune(spark: SparkSession, store: MetaStore, snap: Snapshot,
             preds: Seq[Pred]): PlannedFiles = {
     val names = snap.manifests
@@ -74,13 +75,9 @@ object PlanScan {
       .parallelize(names, planPartitions(spark, names.size))
       .map { name =>
         val es = readShard(metaDir, name)
-        val partKept = spec match {
-          case Some(s) => es.filter(s.pruner(preds)) // fresh memo per shard
-          case None => es
-        }
-        val zoneKept = Pruning.keep(partKept, preds)
-        (zoneKept, es.size.toLong, es.iterator.map(_.rows).sum,
-          partKept.size.toLong)
+        val (partKept, zoneKept) = Pruning.tupleZone(spec, es, preds)
+        (zoneKept.map(_.copy(stats = Map.empty)), es.size.toLong,
+          es.iterator.map(_.rows).sum, partKept.toLong)
       }
       .collect()
     PlannedFiles(
@@ -88,22 +85,6 @@ object PlanScan {
       shards.iterator.map(_._2).sum,
       shards.iterator.map(_._3).sum,
       shards.iterator.map(_._4).sum)
-  }
-
-  /** Path listing for an UNPRUNED scan: the parquet reader needs the path
-   * strings on the driver either way (Spark's file index is driver-side);
-   * this avoids parsing K entries' stats/tuples into driver [[DataFile]]s
-   * just to throw everything but `.path` away. */
-  def listPaths(spark: SparkSession, store: MetaStore,
-                snap: Snapshot): Seq[String] = {
-    val names = snap.manifests
-    if (names.isEmpty) return Nil
-    val metaDir = Paths.get(store.tableDir, "meta").toString
-    spark.sparkContext
-      .parallelize(names, planPartitions(spark, names.size))
-      .flatMap(name => readShard(metaDir, name).map(_.path))
-      .collect()
-      .toSeq
   }
 
   /** Live path set (data + delete files) as a DISTRIBUTED DataFrame — for

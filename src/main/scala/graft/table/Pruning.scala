@@ -170,6 +170,47 @@ object Pruning {
   def keep(entries: Seq[DataFile], preds: Seq[Pred]): Seq[DataFile] =
     entries.filter(f => preds.forall(_.mayMatch(f)))
 
+  /** The tuple then zonemap tiers, with the tuple tier's survivor count as
+   * evidence. Tuple elimination is exact and cheapest (a memoized string
+   * compare per file against the declared spec; files without a tuple are
+   * kept), so stats parsing never touches files it already excludes. Pure:
+   * [[PlanScan.prune]] runs it per manifest shard in executors, so the
+   * driver and distributed tiers cannot diverge. */
+  def tupleZone(spec: Option[PartitionSpec], entries: Seq[DataFile],
+                preds: Seq[Pred]): (Int, Seq[DataFile]) =
+    if (preds.isEmpty) (entries.size, entries)
+    else {
+      val partKept = spec.fold(entries)(s => entries.filter(s.pruner(preds)))
+      (partKept.size, keep(partKept, preds))
+    }
+
+  /** Point-lookup bloom tier: zonemaps cannot prune equality probes on a
+   * hash-scattered key (every file's min/max spans the key space after a
+   * curve rewrite); the per-file bloom side-table can. Conservative by
+   * construction: union of probe values, files without a bloom row kept. */
+  private def bloom(spark: SparkSession, store: MetaStore,
+                    zoneKept: Seq[DataFile], preds: Seq[Pred]): Seq[DataFile] = {
+    val values = preds.flatMap {
+      case Pred.EqualTo(c, v) if store.bloomColumn.contains(c) => Seq(v.toString)
+      case Pred.InSet(c, vs) if store.bloomColumn.contains(c) => vs.map(_.toString)
+      case _ => Nil
+    }
+    if (values.isEmpty || zoneKept.isEmpty) zoneKept
+    else {
+      val surviving = FileBloom.prunePaths(spark, store, zoneKept.map(_.path), values)
+      zoneKept.filter(e => surviving.contains(e.path))
+    }
+  }
+
+  /** The file-elimination stack — partition tuple, then zonemap, then bloom
+   * — on the driver: of `entries`, the files that may hold a row matching
+   * ALL of `preds`. Merge, the delete-where residue and delete
+   * materialization ask here; [[scan]] and [[scanDistributed]] compose the
+   * same two steps because they also report the tuple tier's count. */
+  def candidates(spark: SparkSession, store: MetaStore, entries: Seq[DataFile],
+                 preds: Seq[Pred]): Seq[DataFile] =
+    bloom(spark, store, tupleZone(store.partitionSpec, entries, preds)._2, preds)
+
   /**
    * Read only the surviving files, then re-apply the predicate exactly —
    * identical semantics to `scan + filter` regardless of stats quality.
@@ -183,65 +224,40 @@ object Pruning {
    */
   def scan(spark: SparkSession, store: MetaStore, snapshotId: Long,
            entries: Seq[DataFile], preds: Seq[Pred]): PrunedScan = {
-    // tier 0 — partition-tuple elimination (exact, cheapest: a string
-    // compare per file against the declared spec; files without a tuple
-    // are kept). Runs BEFORE zonemaps so stats parsing never touches files
-    // the tuple already excludes.
-    val partKept = store.partitionSpec match {
-      case Some(spec) => entries.filter(spec.pruner(preds))
-      case None => entries
-    }
-    val zoneKept = keep(partKept, preds)
-    assemble(spark, store, snapshotId, preds, zoneKept,
+    val (partKept, zoneKept) = tupleZone(store.partitionSpec, entries, preds)
+    assemble(spark, store, snapshotId, preds, bloom(spark, store, zoneKept, preds),
       filesTotal = entries.size.toLong, rowsTotal = entries.map(_.rows).sum,
-      filesKeptPartition = partKept.size.toLong,
+      filesKeptPartition = partKept.toLong,
       anyEntry = entries.headOption)
   }
 
-  /** Distributed variant of [[scan]]: the partition-tuple and zonemap tiers
-   * run as a Spark job over manifest shards ([[PlanScan.prune]]) so the
-   * driver never materializes the snapshot's full entry list — the bloom
-   * tier and the delete-aware assembly are shared with the driver path.
-   * Results are identical to [[scan]] by construction (same pruner, same
-   * [[keep]], same re-applied filter). */
+  /** Distributed variant of [[scan]]: the tuple and zonemap tiers run as a
+   * Spark job over manifest shards ([[PlanScan.prune]], the same
+   * [[tupleZone]]) so the driver never materializes the snapshot's full
+   * entry list — the bloom tier and the delete-aware assembly are shared
+   * with the driver path. */
   def scanDistributed(spark: SparkSession, store: MetaStore, snapshotId: Long,
                       snap: Snapshot, preds: Seq[Pred]): PrunedScan = {
     val plan = PlanScan.prune(spark, store, snap, preds)
     // anyEntry must cover BOTH all-pruned shapes: tuple/zonemap pruned
-    // everything (plan.kept empty) AND the bloom tier inside assemble
-    // pruned the zonemap survivors — in the latter case plan.kept is
-    // non-empty and its head is the schema donor (a bare None made
-    // assemble read zero files into a zero-COLUMN frame whose re-applied
-    // predicate then failed analysis)
-    assemble(spark, store, snapshotId, preds, plan.kept,
+    // everything (plan.kept empty) AND the bloom tier pruned the zonemap
+    // survivors — in the latter case plan.kept is non-empty and its head is
+    // the schema donor (a bare None made assemble read zero files into a
+    // zero-COLUMN frame whose re-applied predicate then failed analysis)
+    assemble(spark, store, snapshotId, preds, bloom(spark, store, plan.kept, preds),
       plan.filesTotal, plan.rowsTotal, plan.filesKeptPartition,
       anyEntry = plan.kept.headOption.orElse(
         if (plan.filesTotal == 0L) None else PlanScan.anyEntry(store, snap)))
   }
 
-  /** Bloom tier + delete-aware read + exact re-filter — everything after
-   * the (driver or distributed) tuple/zonemap tiers. */
+  /** Delete-aware read of the kept files + exact re-filter — everything
+   * after the (driver or distributed) elimination tiers. No predicates, no
+   * `Filter` node: an unpruned scan plans exactly as a bare read. */
   private def assemble(spark: SparkSession, store: MetaStore, snapshotId: Long,
-                       preds: Seq[Pred], zoneKept: Seq[DataFile],
+                       preds: Seq[Pred], kept: Seq[DataFile],
                        filesTotal: Long, rowsTotal: Long,
                        filesKeptPartition: Long,
                        anyEntry: => Option[DataFile]): PrunedScan = {
-    // point-lookup bloom prune: zonemaps cannot prune equality probes on a
-    // hash-scattered key (every file's min/max spans the key space after a
-    // curve rewrite); the per-file bloom side-table can. Conservative by
-    // construction: union of probe values, files without a bloom row kept.
-    val bloomValues = preds.flatMap {
-      case Pred.EqualTo(c, v) if store.bloomColumn.contains(c) => Seq(v.toString)
-      case Pred.InSet(c, vs) if store.bloomColumn.contains(c) => vs.map(_.toString)
-      case _ => Nil
-    }
-    val kept =
-      if (bloomValues.isEmpty || zoneKept.isEmpty) zoneKept
-      else {
-        val surviving = FileBloom.prunePaths(spark, store,
-          zoneKept.map(_.path), bloomValues)
-        zoneKept.filter(e => surviving.contains(e.path))
-      }
     // delete-aware read: pruning must never resurrect a deleted row — the
     // kept files are anti-joined against their applicable delete files
     // exactly as a full scan would (readFiles is a no-op without deletes)
@@ -253,7 +269,7 @@ object Pruning {
         readFiles(anyEntry.toSeq).filter(lit(false))
       else readFiles(kept)
     PrunedScan(
-      base.filter(Pred.and(preds)),
+      if (preds.isEmpty) base else base.filter(Pred.and(preds)),
       kept.size, filesTotal.toInt,
       kept.map(_.rows).sum, rowsTotal,
       filesKeptPartition = filesKeptPartition.toInt)

@@ -97,6 +97,24 @@ class EvolveSpec extends AnyFunSuite {
       "published export materializes the evolved default")
   }
 
+  test("an evolved table emptied by a partition drop scans under its declared schema") {
+    import graft.ops.Deletes
+    import graft.table.Pred
+    val dir = Files.createTempDirectory("graft-evolve-empty-").toString
+    val store = MetaStore.forClips(dir)
+    Append.run(spark, store, ClipSynth.dataset(spark, 40, 2, maxDurMs = 120).toDF())
+    val files = store.entries(store.currentSnapshotId.get).size
+    Evolve.addColumn(spark, store, "quality_score", "double", "0.75")
+    // every file's stats prove dur_ms >= 0: a metadata-only drop of them all,
+    // leaving an evolved snapshot with no files and no delete manifests
+    val res = Deletes.deleteWhere(spark, store, Seq(Pred.GtEq("dur_ms", 0L)))
+    assert(res.filesDropped == files && res.deleteFiles == 0)
+    val df = store.scanCurrent(spark)
+    assert(df.columns.toSeq == store.scanCurrentPruned(spark, Nil).df.columns.toSeq)
+    assert(df.columns.contains("quality_score"))
+    assert(df.filter(col("codec") === "ulaw").count() == 0L)
+  }
+
   test("renameColumn is metadata-only: old files read under the new name") {
     val dir = Files.createTempDirectory("graft-evolve-ren-").toString
     val store = MetaStore.forClips(dir)

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.ops.{Append, Deletes}
+import graft.ops.{Append, Deletes, Evolve}
 import graft.synth.ClipSynth
 import graft.table.{MetaStore, PartitionSpec, Partitioning, Pred}
 import org.apache.spark.sql.functions._
@@ -108,6 +108,25 @@ class PlanDistributedSpec extends AnyFunSuite {
     val b = dist.scanCurrent(spark).select("clip_id")
       .as[String](spark.implicits.newStringEncoder).collect().sorted.toSeq
     assert(b == a && a.size == 80)
+
+    // a live equality delete, a position delete and an evolution: both
+    // tiers assemble delete- and era-aware, row for row (bytes as a hash)
+    import spark.implicits._
+    val files = driver.entries(driver.currentSnapshotId.get).sortBy(-_.rows)
+    val key = spark.read.parquet(files(1).path).select("clip_id").head().getString(0)
+    Deletes.run(spark, driver, Seq(key).toDF("clip_id"))
+    Deletes.runPositional(spark, driver, Seq((files.head.path, 0L))
+      .toDF("file_path", "pos"), driver.currentSnapshotId.get)
+    Evolve.addColumn(spark, driver, "quality_score", "double", "0.75")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.withColumn("bytes", sha2(col("bytes"), 256)).collect()
+        .map(_.toSeq.mkString("|")).sorted.toSeq
+    val id = driver.currentSnapshotId.get
+    val want = rows(driver.scan(spark, id))
+    assert(want.size == 78 && want.forall(_.endsWith("|0.75")))
+    assert(rows(driver.scanPruned(spark, id, Nil).df) == want)
+    assert(rows(dist.scan(spark, id)) == want)
+    assert(rows(dist.scanPruned(spark, id, Nil).df) == want)
   }
 
   test("forced-distributed partial-rewrite classification equals driver parse") {

@@ -64,8 +64,18 @@ class RobustnessSpec extends AnyFunSuite {
     intercept[graft.table.ConcurrentCommitException] {
       storeA.commit("append", Seq.empty)
     }
-    val gc = RemoveOrphans.run(storeA, minAgeMs = 1L)
-    assert(gc.commitDebrisDeleted == 1)
+    // a publish that crashed between its temp write and its link/rename
+    // leaves a MetaFs temp; an old one is debris, a fresh one may be live
+    val oldTemp = Paths.get(dir, "meta", "refs", "v3.json.tmp-0badc0de")
+    val freshTemp = Paths.get(dir, "meta", "CURRENT.tmp-1234abcd")
+    Files.createDirectories(oldTemp.getParent)
+    Files.write(oldTemp, Array[Byte](1))
+    Files.setLastModifiedTime(oldTemp,
+      FileTime.fromMillis(System.currentTimeMillis() - 10_000))
+    Files.write(freshTemp, Array[Byte](2))
+    val gc = RemoveOrphans.run(storeA, minAgeMs = 5_000L)
+    assert(gc.commitDebrisDeleted == 2)
+    assert(!Files.exists(oldTemp) && Files.exists(freshTemp))
     assert(storeA.commit("append", Seq.empty) == cur + 1)
   }
 
