@@ -212,8 +212,8 @@ object Branches {
   def dataRoots(main: MetaStore): Set[String] =
     list(main).keys.flatMap { name =>
       val b = store(main, name)
-      b.allSnapshotIds.flatMap(id => b.entries(id) ++ b.deleteEntries(id))
-        .map(e => main.normalizePath(e.path))
+      b.reachablePaths(b.allSnapshotIds.map(b.snapshot)).asScala
+        .map(main.normalizePath)
     }.toSet
 
   /** In-flight (not-yet-committed) work staged THROUGH branch stores: WAP

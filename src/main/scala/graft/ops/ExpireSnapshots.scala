@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import graft.table.MetaStore
 
+import scala.jdk.CollectionConverters._
+
 final case class ExpireResult(
     expiredSnapshots: Seq[Long],
     retainedSnapshots: Seq[Long],
@@ -52,26 +54,28 @@ object ExpireSnapshots {
     // branch commit carries is reachable from that fork (Branches.scala)
     val tagged = (Refs.tags(store).values.toSeq ++ Branches.forkRoots(store))
       .filter(all.contains)
+    // each descriptor read once: the age filter, the retained set and the
+    // expired set all use it
+    val snaps = all.map(id => id -> store.snapshot(id)).toMap
     val cutoff = System.currentTimeMillis() - minAgeMs
     val young =
       if (minAgeMs <= 0L) Seq.empty
-      else all.filter(id => store.snapshot(id).timestampMs > cutoff)
+      else all.filter(id => snaps(id).timestampMs > cutoff)
     val retained =
       (all.takeRight(keepLast) ++ tagged ++ young :+ current).distinct.sorted
     val expired = all.filterNot(retained.contains)
 
-    // delete files and their manifests participate in reachability exactly
-    // like data files: a retained snapshot's equality-delete parquets must
-    // survive (dropping one would resurrect its deleted rows), an expired
-    // snapshot's go once nothing retained shares them
-    val reachableData = retained.flatMap(id =>
-      store.entries(id) ++ store.deleteEntries(id)).map(_.path).toSet
-    val reachableManifests = retained.map(store.snapshot)
-      .flatMap(s => s.manifests ++ s.deleteManifests).toSet
-    val expiredData = expired.flatMap(id =>
-      store.entries(id) ++ store.deleteEntries(id)).map(_.path).toSet
-    val expiredManifests = expired.map(store.snapshot)
-      .flatMap(s => s.manifests ++ s.deleteManifests).toSet
+    // reachability per DISTINCT manifest name, not per snapshot: manifests
+    // are immutable per name and consecutive snapshots share almost all of
+    // them (the Changes.fileDiff discipline). Delete files and their
+    // manifests participate exactly like data files: a retained snapshot's
+    // equality-delete parquets must survive (dropping one would resurrect
+    // its deleted rows), an expired snapshot's go once nothing retained
+    // shares them.
+    def names(ids: Seq[Long]): Set[String] =
+      ids.flatMap(id => snaps(id).manifests ++ snaps(id).deleteManifests).toSet
+    val reachableManifests = names(retained)
+    val doomed = names(expired) -- reachableManifests
 
     var dataDeleted = 0
     var manifestsDeleted = 0
@@ -82,14 +86,23 @@ object ExpireSnapshots {
     // owning side, files reachable from any LIVE BRANCH's log are pinned
     // even when every main snapshot referencing them expires (a replayed
     // intermediate can expire while the branch still needs its files).
+    // Candidates = paths only doomed manifests list, minus every path a
+    // reachable manifest lists — exactly (expired paths -- retained paths),
+    // since a path of a shared manifest is reachable by definition. All
+    // path sets are read BEFORE any manifest is deleted or forgotten.
     if (store.ownsData) {
+      val candidates = new java.util.HashSet[String]()
+      doomed.foreach(m => candidates.addAll(store.manifestPaths(m)))
+      val it = reachableManifests.iterator
+      while (!candidates.isEmpty && it.hasNext)
+        candidates.removeAll(store.manifestPaths(it.next()))
       val branchPinned = Branches.dataRoots(store)
-      (expiredData -- reachableData).foreach { p =>
+      candidates.asScala.foreach { p =>
         if (!branchPinned.contains(store.normalizePath(p)) &&
             Files.deleteIfExists(Paths.get(p))) dataDeleted += 1
       }
     }
-    (expiredManifests -- reachableManifests).foreach { m =>
+    doomed.foreach { m =>
       if (Files.deleteIfExists(Paths.get(store.tableDir, "meta", m))) {
         manifestsDeleted += 1
         store.forgetManifest(m)

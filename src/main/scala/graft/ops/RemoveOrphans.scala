@@ -53,8 +53,7 @@ object RemoveOrphans {
       s"${store.tableDir}: orphan GC must run on the owning table, not a " +
         "branch store (branch data lives in the parent's data directory)")
     val reachable: Set[String] =
-      store.allSnapshotIds.flatMap(id =>
-        store.entries(id) ++ store.deleteEntries(id)).map(_.path).toSet ++
+      store.reachablePaths(store.allSnapshotIds.map(store.snapshot)).asScala.toSet ++
         checkpointRoots(store) ++
         // staged-but-unpublished WAP batches: no snapshot references them,
         // but they are pending work, not garbage

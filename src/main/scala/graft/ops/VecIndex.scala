@@ -277,13 +277,25 @@ object VecIndex {
       indexDir
     }
 
+  /** `eras/<tag>/<table>` for every era of the index, listed rather than
+   * globbed: Spark probes a single glob path literally for a streaming-sink
+   * log and logs a WARN with a FileNotFoundException stack trace. */
+  private def eraTables(indexDir: String, table: String): Seq[String] = {
+    val s = Files.list(Paths.get(indexDir, "eras"))
+    try {
+      import scala.jdk.CollectionConverters._
+      s.iterator().asScala.map(_.resolve(table))
+        .filter(Files.isDirectory(_)).map(_.toString).toList.sorted
+    } finally s.close()
+  }
+
   def buckets(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.parquet(s"$indexDir/eras/*/buckets")
+    spark.read.parquet(eraTables(indexDir, "buckets"): _*)
 
   /** IVF centroids: exact global means from the per-era (sum, count)
    * partials — a tiny aggregate (labels × dims rows) at read time. */
   def centroids(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.parquet(s"$indexDir/eras/*/cstats")
+    spark.read.parquet(eraTables(indexDir, "cstats"): _*)
       .groupBy("label", "pos")
       .agg((sum("sx") / sum("cnt")).as("mean_x"))
 }

@@ -3,6 +3,7 @@ package graft.table
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructType}
 
 import scala.util.hashing.MurmurHash3
 
@@ -123,16 +124,18 @@ object FileBloom {
     try s.iterator().hasNext finally s.close()
   }
 
-  /** Current shard (per-write subdir) count — the [[compact]] trigger. */
-  def shardCount(store: MetaStore): Int = {
+  /** The side-table's shard (per-write subdir) directories. */
+  private def shardDirs(store: MetaStore): Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
     val root = bloomRoot(store)
-    if (!java.nio.file.Files.isDirectory(root)) return 0
+    if (!java.nio.file.Files.isDirectory(root)) return Nil
     val s = java.nio.file.Files.list(root)
-    try {
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala.count(java.nio.file.Files.isDirectory(_))
-    } finally s.close()
+    try s.iterator().asScala.filter(java.nio.file.Files.isDirectory(_)).toList
+    finally s.close()
   }
+
+  /** Current shard count — the [[compact]] trigger. */
+  def shardCount(store: MetaStore): Int = shardDirs(store).size
 
   final case class BloomCompaction(shardsBefore: Int, shardsAfter: Int,
                                    rowsKept: Long, rowsDropped: Long)
@@ -151,13 +154,7 @@ object FileBloom {
   def compact(spark: SparkSession, store: MetaStore): BloomCompaction = {
     import scala.jdk.CollectionConverters._
     val root = bloomRoot(store)
-    if (!java.nio.file.Files.isDirectory(root))
-      return BloomCompaction(0, 0, 0L, 0L)
-    val shards = {
-      val s = java.nio.file.Files.list(root)
-      try s.iterator().asScala.filter(java.nio.file.Files.isDirectory(_)).toSeq
-      finally s.close()
-    }
+    val shards = shardDirs(store)
     if (shards.size <= 1)
       return BloomCompaction(shards.size, shards.size, 0L, 0L)
     // ignoreMissingFiles: a concurrent compact's swap must degrade to
@@ -178,8 +175,7 @@ object FileBloom {
         if (store.planDistributed(snap))
           PlanScan.livePathsDF(spark, store, snap)
         else {
-          val livePaths = store.entries(id).map(_.path) ++
-            store.deleteEntries(id).map(_.path)
+          val livePaths = store.reachablePaths(Seq(snap)).asScala.toSeq
           spark.createDataset(spark.sparkContext.parallelize(
             livePaths, math.max(1, math.min(32, livePaths.size / 50000))))(
             org.apache.spark.sql.Encoders.STRING).toDF("path")
@@ -198,14 +194,32 @@ object FileBloom {
     BloomCompaction(shards.size, 1, kept, total - kept)
   }
 
-  /** ignoreMissingFiles: [[compact]] deletes folded shard dirs AFTER the
-   * swap, so a reader that resolved the glob just before loses files
-   * mid-scan — with the option the vanished rows simply drop out, which is
-   * exactly the documented degradation (missing bloom row = conservative
-   * keep) instead of a FileNotFoundException killing the query. */
-  def table(spark: SparkSession, store: MetaStore): DataFrame =
-    spark.read.option("ignoreMissingFiles", "true")
-      .parquet(s"${bloomRoot(store)}/*")
+  /** The side-table as (path, bloom) rows; empty when no shard exists.
+   * Reads the listed shard dirs, not a `*` glob: Spark probes a single glob
+   * path literally for a streaming-sink log and logs a WARN with a
+   * FileNotFoundException stack trace on every read.
+   * ignoreMissingFiles: [[compact]] deletes folded shard dirs AFTER the
+   * swap, so a reader that listed them just before loses files mid-scan —
+   * with the option the vanished rows simply drop out, which is exactly
+   * the documented degradation (missing bloom row = conservative keep)
+   * instead of a FileNotFoundException killing the query. A shard dir
+   * that vanishes between the listing and Spark's path check fails the
+   * read up front; the listing is then taken again (a fold always leaves
+   * its output shard, so the retry converges). */
+  def table(spark: SparkSession, store: MetaStore): DataFrame = {
+    val shards = shardDirs(store)
+    if (shards.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        StructType(Seq(StructField("path", StringType), StructField("bloom", BinaryType))))
+    else
+      try spark.read.option("ignoreMissingFiles", "true")
+        .parquet(shards.map(_.toString): _*)
+      catch {
+        case _: org.apache.spark.sql.AnalysisException
+            if !shards.forall(java.nio.file.Files.isDirectory(_)) =>
+          table(spark, store)
+      }
+  }
 
   /**
    * Distributed point-lookup prune: of `paths`, return those that MIGHT

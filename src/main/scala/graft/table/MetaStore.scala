@@ -626,8 +626,9 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
         "bytes" -> es.map(_.sizeBytes).sum.toString))
   }
 
-  /** Manifest shards are IMMUTABLE per name, so each one's path SET can be
-   * cached the first time it is written or parsed; a partial rewrite then
+  /** Manifest and delete-manifest shards are IMMUTABLE per name, so each
+   * one's path SET can be cached the first time it is written or parsed
+   * (GC reachability reads it through [[manifestPaths]]); a partial rewrite then
    * reuses every shard containing none of the removed paths WITHOUT
    * parsing its JSON. (A [min,max]-range summary was tried first and is
    * useless under hidden partitioning: the codec/window path segments
@@ -677,6 +678,37 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
     es
   }
 
+  /** The path set of manifest (or delete manifest) `name`: the cached set
+   * when there is one, else one parse through [[readManifestEntries]]
+   * (which caches it when the budget allows); past the budget a one-off
+   * set. GC reachability ([[graft.ops.ExpireSnapshots]],
+   * [[graft.ops.RemoveOrphans]], [[graft.ops.Branches.dataRoots]],
+   * [[FileBloom.compact]]) walks DISTINCT manifest names through here, so
+   * a shard shared by every snapshot of the log is read once, not once per
+   * snapshot. Read-only view: callers must not mutate it. */
+  private[graft] def manifestPaths(name: String): java.util.Set[String] = {
+    val cached = manifestPathSets.get(name)
+    val s = if (cached != null) cached else {
+      val es = readManifestEntries(name)
+      val now = manifestPathSets.get(name)
+      if (now != null) now else {
+        val one = new java.util.HashSet[String](es.size * 2)
+        es.foreach(e => one.add(e.path))
+        one
+      }
+    }
+    java.util.Collections.unmodifiableSet(s)
+  }
+
+  /** Union of [[manifestPaths]] over the DISTINCT manifest and delete
+   * manifest names of `snaps`. */
+  private[graft] def reachablePaths(snaps: Seq[Snapshot]): java.util.Set[String] = {
+    val out = new java.util.HashSet[String]()
+    snaps.flatMap(s => s.manifests ++ s.deleteManifests).distinct
+      .foreach(m => out.addAll(manifestPaths(m)))
+    out
+  }
+
   private def writeManifest(id: Long, shard: Seq[DataFile]): String = {
     val name = s"manifest-$id-${UUID.randomUUID().toString.take(8)}.json"
     Json.writeManifest(metaDir.resolve(name), shard)
@@ -696,6 +728,7 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
         ds.grouped(manifestShardSize).map { shard =>
           val name = s"delmanifest-$id-${UUID.randomUUID().toString.take(8)}.json"
           Json.writeManifest(metaDir.resolve(name), shard)
+          cachePathSet(name, shard)
           name
         }.toSeq
     }
@@ -710,27 +743,20 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
     val snap = Snapshot(id, parent, System.currentTimeMillis(), operation,
       manifestNames, summary, delManifestNames)
     val snapPath = metaDir.resolve(s"snap-$id.json")
-    def dropClaim(): Unit = {
-      Files.deleteIfExists(snapPath)
-      ownManifests.foreach { n =>
+    def dropOwn(): Unit =
+      (ownManifests ++ (if (ownDeletes) delManifestNames else Nil)).foreach { n =>
         Files.deleteIfExists(metaDir.resolve(n)); forgetManifest(n)
       }
-      if (ownDeletes)
-        delManifestNames.foreach(n => Files.deleteIfExists(metaDir.resolve(n)))
-    }
     if (!MetaFs.claim(snapPath, Json.write(snap).getBytes(StandardCharsets.UTF_8))) {
-      ownManifests.foreach { n =>
-        Files.deleteIfExists(metaDir.resolve(n)); forgetManifest(n)
-      }
-      if (ownDeletes)
-        delManifestNames.foreach(n => Files.deleteIfExists(metaDir.resolve(n)))
+      dropOwn()
       throw new ConcurrentCommitException(
         s"snapshot id $id was claimed by another writer (parent $parent)")
     }
     // check-and-set: re-read CURRENT after winning the id claim
     val nowParent = currentSnapshotId.getOrElse(-1L)
     if (nowParent != parent) {
-      dropClaim()
+      Files.deleteIfExists(snapPath)
+      dropOwn()
       throw new ConcurrentCommitException(
         s"CURRENT moved $parent -> $nowParent during commit of snapshot $id")
     }
