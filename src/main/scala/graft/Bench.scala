@@ -12,16 +12,13 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   /** Per-JVM scratch dir (warehouse for bucketed-table queries, shuffle
    * local dir), deleted on exit so repeated runs don't accumulate orphan
-   * dirs. Prefers tmpfs for the same reason as the e2e query stores
-   * (queries/Audio.scala e2eDir): q98's bucketBy layout writes and every
-   * shuffle should measure the engine, not this host's collapsing
+   * dirs. Under [[graft.queries.OracleFixtures.scratchRoot]] (tmpfs when it
+   * has room) like the e2e query stores: q98's bucketBy layout writes and
+   * every shuffle should measure the engine, not a collapsing shared-disk
    * small-write path. */
   private[graft] def tempWarehouse(): String = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val root =
-      if (java.nio.file.Files.isDirectory(shm) && java.nio.file.Files.isWritable(shm)) shm
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    val d = java.nio.file.Files.createTempDirectory(root, "graft-warehouse-")
+    val d = java.nio.file.Files.createTempDirectory(
+      graft.queries.OracleFixtures.scratchRoot, "graft-warehouse-")
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
       org.apache.commons.io.FileUtils.deleteQuietly(d.toFile): Unit))
     d.toString

@@ -41,11 +41,8 @@ object IncScale {
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
-    val root =
-      if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm")))
-        java.nio.file.Files.createTempDirectory(
-          java.nio.file.Paths.get("/dev/shm"), "graft-incscale")
-      else java.nio.file.Files.createTempDirectory("graft-incscale")
+    val root = java.nio.file.Files.createTempDirectory(
+      graft.queries.OracleFixtures.scratchRoot, "graft-incscale")
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
       org.apache.commons.io.FileUtils.deleteQuietly(root.toFile): Unit))
 

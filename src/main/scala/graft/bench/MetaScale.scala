@@ -13,10 +13,14 @@ import graft.table._
  * the real MetaStore, and times every metadata operation the engine does
  * per query or per commit:
  *
- *  - DISTRIBUTED planning tier ([[PlanScan]], always measured): point and
- *    range prune as a Spark job over manifest shards, path listing for an
- *    unpruned scan, the partitions-table fold — the per-query costs that
- *    must stay ~flat in driver time as K grows,
+ *  - snapshot planning ([[PlanScan.prune]], always measured): point and
+ *    range prune (summary skip, then the surviving manifests on the driver
+ *    or as a Spark job by their file count), path listing for an unpruned
+ *    scan, the partitions-table fold — the per-query costs that must stay
+ *    ~flat in driver time as K grows. `point_manifests_read` is the number
+ *    of manifests the point probe opened (O(matching manifests) on this
+ *    range-clustered layout) and `snapshot_bytes` the size of the snapshot
+ *    descriptor that carries the summaries,
  *  - driver planning tier (`entries()` load, partition + zonemap prune) —
  *    only at K ≤ driverMax (default 2·10^6): it materializes every entry
  *    driver-side, which is exactly the O(K) the distributed tier replaces,
@@ -102,8 +106,9 @@ object MetaScale {
         Pred.Between("dur_ms", 120L, 180L))
       val probe = Seq(Pred.EqualTo("clip_id", f"clip_${k * 5000L}%012d"))
       val snap = store.currentSnapshot.get
+      val snapshotBytes = Files.size(dir.resolve("meta").resolve(s"snap-${snap.id}.json"))
 
-      // ---- distributed planning tier (always): warm once, then measure —
+      // ---- snapshot planning (always): warm once, then measure —
       // planning runs once per QUERY, so warm-JVM cost is representative
       PlanScan.prune(spark, store, snap, probe)
       val (distPoint, tDistPoint) = time(PlanScan.prune(spark, store, snap, probe))
@@ -190,6 +195,7 @@ object MetaScale {
         f"""{"metric":"meta-scale","files":$k,"shards":${(k + store.manifestShardSize - 1) / store.manifestShardSize},"driver_tier":$driverTier,""" +
         f""""commit_full_ms":$tCommitFull%.1f,""" +
         f""""dist_plan_point_ms":$tDistPoint%.1f,"dist_point_kept":${distPoint.kept.size},""" +
+        f""""point_manifests_read":${distPoint.manifestsRead},"snapshot_bytes":$snapshotBytes,""" +
         f""""dist_plan_range_ms":$tDistRange%.1f,"dist_range_kept":${distRange.kept.size},""" +
         f""""dist_list_paths_ms":$tDistList%.1f,""" +
         f""""partitions_fold_ms":$tPartitionsFold%.1f,"partitions":${ptRows.length},""" +

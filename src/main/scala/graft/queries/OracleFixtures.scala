@@ -57,15 +57,28 @@ object OracleFixtures {
     registry.asScala.toMap
   }
 
-  /** Scratch root for fixture/e2e stores: tmpfs when available (this host's
-   * /tmp collapses under concurrent small writes — ScalingBench measured),
-   * else java.io.tmpdir. The ONE policy point for every fixture/e2e/bench
-   * store except ScalingBench's GRAFT_BENCH_DIR-overridable root. */
-  def scratchRoot: java.nio.file.Path = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    if (java.nio.file.Files.isDirectory(shm) && java.nio.file.Files.isWritable(shm)) shm
+  private val Shm = java.nio.file.Paths.get("/dev/shm")
+
+  /** tmpfs is RAM: below this much usable space it is not chosen, so a
+   * near-full /dev/shm degrades to disk speed instead of failing writes
+   * (or starving the host) mid-run. */
+  val TmpfsFloorBytes: Long = 1L << 30
+
+  /** The scratch-root choice as a pure function of /dev/shm's usable bytes
+   * (None = absent or not writable): tmpfs at or above the floor, else
+   * java.io.tmpdir. */
+  def scratchRootFor(shmUsableBytes: Option[Long]): java.nio.file.Path =
+    if (shmUsableBytes.exists(_ >= TmpfsFloorBytes)) Shm
     else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-  }
+
+  /** Scratch root for fixture/e2e/bench stores and the JVM's warehouse and
+   * shuffle dirs: tmpfs when available (a shared-disk /tmp collapses under
+   * concurrent small writes — ScalingBench measured), else java.io.tmpdir.
+   * The ONE policy point for all of them except ScalingBench's
+   * GRAFT_BENCH_DIR-overridable root. */
+  def scratchRoot: java.nio.file.Path = scratchRootFor(
+    if (!java.nio.file.Files.isDirectory(Shm) || !java.nio.file.Files.isWritable(Shm)) None
+    else scala.util.Try(java.nio.file.Files.getFileStore(Shm).getUsableSpace).toOption)
   private def root: java.nio.file.Path = scratchRoot
 
   /** Deterministic fixture dir for (query, sf); created if absent. */

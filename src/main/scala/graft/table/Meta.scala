@@ -3,6 +3,8 @@ package graft.table
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
 
+import scala.collection.mutable
+
 import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import com.fasterxml.jackson.module.scala.{ClassTagExtensions, DefaultScalaModule}
 
@@ -69,6 +71,11 @@ final case class SortOrder(
     hashCols: Seq[String],
     rangeCols: Seq[String])
 
+/** @param manifestSummaries bounds of each data manifest, keyed by its name
+ *   (Iceberg's manifest-list field summaries): scan planning tests them
+ *   before it opens a manifest ([[PlanScan.prune]]). A manifest without one
+ *   (listed by a snapshot written before summaries existed, or reused from
+ *   one) is always read. */
 final case class Snapshot(
     id: Long,
     parentId: Long, // -1 = none
@@ -76,7 +83,98 @@ final case class Snapshot(
     operation: String, // append | compact | cluster | merge | replace | delete
     manifests: Seq[String], // manifest file names relative to meta/
     summary: Map[String, String],
-    deleteManifests: Seq[String] = Nil)
+    deleteManifests: Seq[String] = Nil,
+    manifestSummaries: Map[String, ManifestSummary] = Map.empty)
+
+/** The distinct values one partition field takes across a manifest's
+ * entries; `missing` = some entry carries no value for the field. */
+final case class PartSummary(values: Seq[String], missing: Boolean)
+
+/** What all of a data manifest's entries share, written beside its name
+ * when the manifest is written. Every bound covers every entry, so a
+ * predicate the bounds rule out matches no entry of the manifest:
+ *  - `stats`: per stats column, the min of the entry mins and the max of the
+ *    entry maxes (zero-row and all-null entries, which no comparison
+ *    matches, stay out of the union) and the summed null count (each
+ *    entry's capped at its rows). A column is absent when some entry lacks
+ *    it, the entries disagree on `numeric`, or a numeric bound does not
+ *    parse — the cases in which [[Pred.mayMatch]] keeps an entry unread;
+ *  - `partitions`: per partition field carried by some entry, its distinct
+ *    values. A field with more than [[ManifestSummary.MaxPartitionValues]]
+ *    of them is named in `overCap` instead, and nothing is proven from it.
+ *    A field in neither is carried by no entry. */
+final case class ManifestSummary(
+    files: Long,
+    rows: Long,
+    stats: Map[String, ColStat],
+    partitions: Map[String, PartSummary],
+    overCap: Seq[String] = Nil) {
+
+  /** One file spanning the whole manifest: [[Pred.mayMatch]] false on it
+   * proves it false on every entry. */
+  def bound: DataFile = DataFile("", rows, 0L, stats)
+}
+
+object ManifestSummary {
+  val MaxPartitionValues = 64
+
+  def of(entries: Seq[DataFile]): ManifestSummary = {
+    // distinct values per field, collected up to one past the cap
+    val values = mutable.LinkedHashMap.empty[String, mutable.LinkedHashSet[String]]
+    entries.foreach(_.partition.foreach { case (n, v) =>
+      val vs = values.getOrElseUpdate(n, mutable.LinkedHashSet.empty[String])
+      if (vs.size <= MaxPartitionValues) vs += v
+    })
+    val (small, large) =
+      values.toSeq.sortBy(_._1).partition(_._2.size <= MaxPartitionValues)
+    ManifestSummary(
+      entries.size.toLong,
+      entries.iterator.map(_.rows).sum,
+      entries.headOption.fold(Map.empty[String, ColStat])(_.stats.flatMap {
+        case (c, s) => union(entries, c, s.numeric).map(c -> _)
+      }),
+      small.map { case (n, vs) =>
+        n -> PartSummary(vs.toVector, entries.exists(!_.partition.contains(n)))
+      }.toMap,
+      large.map(_._1))
+  }
+
+  private def parseNum(b: String): BigDecimal =
+    b.toLongOption match {
+      case Some(l) => BigDecimal(l)
+      case None => try BigDecimal(b) catch { case _: NumberFormatException => null }
+    }
+
+  /** Column `c`'s stat over all of `entries` (`numeric` = the first
+   * entry's flag); None when no sound one exists. One pass: this runs for
+   * every shard a commit writes. */
+  private def union(entries: Seq[DataFile], c: String,
+                    numeric: Boolean): Option[ColStat] = {
+    var nulls = 0L
+    var lo, hi: String = null
+    var loN, hiN: BigDecimal = null
+    val it = entries.iterator
+    while (it.hasNext) {
+      val e = it.next()
+      val s = e.stats.getOrElse(c, null)
+      if (s == null || s.numeric != numeric) return None
+      nulls += math.min(s.nullCount, e.rows)
+      // zero-row and all-null entries match no comparison: out of the union
+      if (e.rows > 0 && s.nullCount < e.rows) {
+        if (!numeric) {
+          if (lo == null || s.min < lo) lo = s.min
+          if (hi == null || s.max > hi) hi = s.max
+        } else {
+          val a = parseNum(s.min); val b = parseNum(s.max)
+          if (a == null || b == null) return None
+          if (lo == null || a < loN) { lo = s.min; loN = a }
+          if (hi == null || b > hiN) { hi = s.max; hiN = b }
+        }
+      }
+    }
+    Some(if (lo == null) ColStat("", "", numeric, nulls) else ColStat(lo, hi, numeric, nulls))
+  }
+}
 
 /** Per-item lineage/metrics row, persisted into the metadata side-table
  * (meta/lineage). The Spark analog of the reference's FibonacciReporter
@@ -104,9 +202,12 @@ object Json {
   def write(v: Any): String = mapper.writeValueAsString(v)
   def readSnapshot(s: String): Snapshot = {
     val snap = mapper.readValue[Snapshot](s)
-    // pre-deletes snap-*.json lacks the field; Jackson leaves the Seq null
-    // (primitive Long `seq` defaults to 0 on its own)
-    if (snap.deleteManifests == null) snap.copy(deleteManifests = Nil) else snap
+    // pre-deletes / pre-summaries snap-*.json lacks the field; Jackson
+    // leaves it null (primitive Long `seq` defaults to 0 on its own)
+    if (snap.deleteManifests != null && snap.manifestSummaries != null) snap
+    else snap.copy(
+      deleteManifests = Option(snap.deleteManifests).getOrElse(Nil),
+      manifestSummaries = Option(snap.manifestSummaries).getOrElse(Map.empty))
   }
   /** The one manifest codec: every data and delete manifest is read and
    * written through this pair. Static, so PlanScan's executors call it. */

@@ -65,13 +65,18 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
 
   def allSnapshotIds: Seq[Long] = MetaFs.versions(metaDir, "snap-")
 
-  def entries(snapshotId: Long): Seq[DataFile] =
-    snapshot(snapshotId).manifests.flatMap(m => Json.readManifest(metaDir.resolve(m)))
+  def entries(snapshotId: Long): Seq[DataFile] = entriesOf(snapshot(snapshotId))
+
+  private def entriesOf(snap: Snapshot): Seq[DataFile] =
+    snap.manifests.flatMap(m => Json.readManifest(metaDir.resolve(m)))
 
   /** Equality-delete files live for `snapshotId` (empty = no deletes). Each
    * entry's parquet holds key values; `seq` = the delete's commit id. */
   def deleteEntries(snapshotId: Long): Seq[DataFile] =
-    snapshot(snapshotId).deleteManifests.flatMap(m => Json.readManifest(metaDir.resolve(m)))
+    deleteEntriesOf(snapshot(snapshotId))
+
+  private def deleteEntriesOf(snap: Snapshot): Seq[DataFile] =
+    snap.deleteManifests.flatMap(m => Json.readManifest(metaDir.resolve(m)))
 
   /** Snapshot-isolated scan: the file list is frozen at commit time. It is
    * [[scanPruned]] with no predicates — the one read path, so deletes are
@@ -131,25 +136,24 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
     sys.props.get("graft.plan.distributedThreshold").map(_.toLong)
       .getOrElse(100000L)
 
-  /** The one tier-selection decision (scanPruned, which every scan goes
-   * through, partitionsTable and FileBloom.compact all route through it — a
-   * drifted copy of the predicate would silently plan on the wrong tier). */
-  def planDistributed(snap: Snapshot): Boolean =
-    PlanScan.estimatedFiles(this, snap) >= distributedPlanThreshold
+  /** The one tier-selection rule: plan `files` data files as a Spark job?
+   * Scan planning ([[PlanScan.prune]]) asks it with the file count of the
+   * manifests its summaries did not skip; partitionsTable and
+   * FileBloom.compact, which read every manifest, with the snapshot's. A
+   * drifted copy of the predicate would silently plan on the wrong tier. */
+  def planDistributed(files: Long): Boolean = files >= distributedPlanThreshold
 
-  /** The one way a snapshot is read: skip whole data files that the
-   * partition tuple, zonemap or bloom tiers prove cannot match `preds` (see
-   * [[Pruning]]), then read the rest delete- and evolution-aware; result
-   * rows are identical to `scan(...).filter(Pred.and(preds))` by
-   * construction. Plans distributed above [[distributedPlanThreshold]]. */
+  def planDistributed(snap: Snapshot): Boolean =
+    planDistributed(PlanScan.estimatedFiles(this, snap))
+
+  /** The one way a snapshot is read: skip whole manifests their summaries
+   * rule out, then whole data files that the partition tuple, zonemap or
+   * bloom tiers prove cannot match `preds` (see [[PlanScan]], [[Pruning]]),
+   * then read the rest delete- and evolution-aware; result rows are
+   * identical to `scan(...).filter(Pred.and(preds))` by construction. */
   def scanPruned(spark: SparkSession, snapshotId: Long,
-                 preds: Seq[Pred]): PrunedScan = {
-    val snap = snapshot(snapshotId)
-    if (planDistributed(snap))
-      Pruning.scanDistributed(spark, this, snapshotId, snap, preds)
-    else
-      Pruning.scan(spark, this, snapshotId, entries(snapshotId), preds)
-  }
+                 preds: Seq[Pred]): PrunedScan =
+    Pruning.scanPlanned(spark, this, snapshotId, snapshot(snapshotId), preds)
 
   def scanCurrentPruned(spark: SparkSession, preds: Seq[Pred]): PrunedScan =
     scanPruned(spark,
@@ -433,23 +437,24 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
         s"commit planned against snapshot $p but current is $parent")
     }
     val id = if (parent == -1L) 1L else parent + 1L
+    val parentSnap = if (parent == -1L) None else Some(snapshot(parent))
     // stamp data sequence numbers: an entry carried from an older snapshot
     // arrives with its original seq (> 0, from the manifest) and keeps it; a
     // NEW entry (collectStats constructs seq = 0) gets this commit's id —
     // unless the parent already tracked the path (legacy seq-0 manifests
     // stay 0 = oldest, conservatively covered by every delete)
     lazy val parentSeq: Map[String, Long] =
-      if (parent == -1L) Map.empty
-      else this.entries(parent).map(e => e.path -> e.seq).toMap
+      parentSnap.fold(Map.empty[String, Long])(
+        entriesOf(_).map(e => e.path -> e.seq).toMap)
     val stamped = entries.map { e =>
       if (e.seq > 0L) e
       else e.copy(seq = parentSeq.getOrElse(e.path, id))
     }
     val shards = if (stamped.isEmpty) Seq(stamped) else
       stamped.grouped(manifestShardSize).toSeq
-    val manifestNames = shards.map(writeManifest(id, _))
-    publish(operation, parent, id, manifestNames, manifestNames,
-      deleteManifestNames(parent, id, deletes),
+    val manifests = shards.map(writeManifest(id, _))
+    publish(operation, parent, id, manifests.map(_._1), manifests.toMap,
+      manifests.map(_._1), deleteManifestNames(parentSnap, id, deletes),
       deletes.isDefined,
       summary ++ Map("files" -> stamped.size.toString,
                      "rows" -> stamped.map(_.rows).sum.toString,
@@ -504,19 +509,22 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
         s"commit planned against snapshot $p but current is $parent")
     }
     val id = if (parent == -1L) 1L else parent + 1L
-    val effDeletes: Option[Seq[DataFile]] =
-      if (addedDeletes.nonEmpty && parent != -1L)
-        Some(deleteEntries(parent) ++
+    // the parent descriptor is read ONCE per commit and passed down
+    val parentSnap = if (parent == -1L) None else Some(snapshot(parent))
+    val effDeletes: Option[Seq[DataFile]] = parentSnap match {
+      case Some(p) if addedDeletes.nonEmpty =>
+        Some(deleteEntriesOf(p) ++
           addedDeletes.map(d => if (d.seq > 0L) d else d.copy(seq = id)))
-      else deletes
+      case _ => deletes
+    }
     val stampedAdded = added.map(e => if (e.seq > 0L) e else e.copy(seq = id))
-    val parentManifests = if (parent == -1L) Nil else snapshot(parent).manifests
+    val parentManifests = parentSnap.fold(Seq.empty[String])(_.manifests)
     var removedRows = 0L; var removedBytes = 0L; var removedFiles = 0L
     // ONE JSON parse per parent manifest: classify and rewrite in the same
     // pass (a second read per touched shard doubled the dominant cost of a
     // partial rewrite at the 10^5-file regime — measured by MetaScale)
     val reused = Seq.newBuilder[String]
-    val rewrittenNames = Seq.newBuilder[String]
+    val rewritten = Seq.newBuilder[(String, ManifestSummary)]
     var rewrittenCount = 0
     // path-set fast path: a cached shard containing none of the removed
     // paths is reused by name without a JSON parse (exact, not a summary).
@@ -556,28 +564,30 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
             if (out) { removedRows += e.rows; removedBytes += e.sizeBytes; removedFiles += 1 }
             !out
           }
-          if (kept.nonEmpty) rewrittenNames += writeManifest(id, kept)
+          if (kept.nonEmpty) rewritten += writeManifest(id, kept)
         }
       }
     }
-    val addedNames = stampedAdded.grouped(manifestShardSize).map(writeManifest(id, _)).toSeq
     val reusedNames = reused.result()
-    val ownNames = rewrittenNames.result() ++ addedNames
-    val manifestNames = reusedNames ++ ownNames
+    val own = rewritten.result() ++
+      stampedAdded.grouped(manifestShardSize).map(writeManifest(id, _))
+    // a reused manifest keeps the summary its parent recorded, unparsed
+    // (none under a legacy parent: every plan then reads the manifest)
+    val reusedSummaries = parentSnap.fold(Map.empty[String, ManifestSummary])(p =>
+      reusedNames.flatMap(m => p.manifestSummaries.get(m).map(m -> _)).toMap)
     // totals incrementally from the parent's recorded summary (avoids the
     // O(table) manifest read the delta commit exists to skip)
-    def parentCount(k: String): Long =
-      if (parent == -1L) 0L
-      else snapshot(parent).summary.get(k).flatMap(_.toLongOption).getOrElse {
-        val es = this.entries(parent)
-        k match {
-          case "files" => es.size.toLong
-          case "rows" => es.map(_.rows).sum
-          case _ => es.map(_.sizeBytes).sum
-        }
-      }
-    publish(operation, parent, id, manifestNames, ownNames,
-      deleteManifestNames(parent, id, effDeletes),
+    lazy val parentEntries = parentSnap.fold(Seq.empty[DataFile])(entriesOf)
+    def parentCount(k: String): Long = parentSnap.fold(0L) { p =>
+      p.summary.get(k).flatMap(_.toLongOption).getOrElse(k match {
+        case "files" => parentEntries.size.toLong
+        case "rows" => parentEntries.map(_.rows).sum
+        case _ => parentEntries.map(_.sizeBytes).sum
+      })
+    }
+    publish(operation, parent, id, reusedNames ++ own.map(_._1),
+      reusedSummaries ++ own, own.map(_._1),
+      deleteManifestNames(parentSnap, id, effDeletes),
       effDeletes.isDefined,
       summary ++ Map(
         "files" -> (parentCount("files") - removedFiles + stampedAdded.size).toString,
@@ -593,11 +603,12 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
    * (new snapshot id, manifests before, after). */
   def compactManifests(): (Long, Int, Int) = MetaStore.withCommitRetry() {
     val cur = currentSnapshotId.getOrElse(sys.error(s"$tableDir: no current snapshot"))
-    val before = snapshot(cur).manifests.size
+    val snap = snapshot(cur)
+    val before = snap.manifests.size
     // CAS on the snapshot whose full entry list we serialized: without it an
     // append landing between entries(cur) and the commit would be silently
     // clobbered by this stale re-shard (retry re-reads and re-shards)
-    val id = commit("rewrite-manifests", entries(cur),
+    val id = commit("rewrite-manifests", entriesOf(snap),
       Map("manifestsBefore" -> before.toString),
       expectedParent = Some(cur))
     (id, before, snapshot(id).manifests.size)
@@ -614,12 +625,14 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
    * coherent sequence space across both logs. */
   def seedFork(from: MetaStore, snapshotId: Long): Long = synchronized {
     require(currentSnapshotId.isEmpty, s"$tableDir: seedFork on a non-empty store")
-    val es = from.entries(snapshotId)
+    val source = from.snapshot(snapshotId)
+    val es = from.entriesOf(source)
     val shards = if (es.isEmpty) Seq(es) else es.grouped(manifestShardSize).toSeq
-    val names = shards.map(writeManifest(snapshotId, _))
-    val dels = from.deleteEntries(snapshotId)
-    publish("branch-fork", -1L, snapshotId, names, names,
-      deleteManifestNames(-1L, snapshotId, if (dels.isEmpty) None else Some(dels)),
+    val manifests = shards.map(writeManifest(snapshotId, _))
+    val dels = from.deleteEntriesOf(source)
+    publish("branch-fork", -1L, snapshotId, manifests.map(_._1), manifests.toMap,
+      manifests.map(_._1),
+      deleteManifestNames(None, snapshotId, if (dels.isEmpty) None else Some(dels)),
       dels.nonEmpty,
       Map("forkOf" -> from.tableDir, "forkSnapshot" -> snapshotId.toString,
         "files" -> es.size.toString, "rows" -> es.map(_.rows).sum.toString,
@@ -630,10 +643,12 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
    * one's path SET can be cached the first time it is written or parsed
    * (GC reachability reads it through [[manifestPaths]]); a partial rewrite then
    * reuses every shard containing none of the removed paths WITHOUT
-   * parsing its JSON. (A [min,max]-range summary was tried first and is
-   * useless under hidden partitioning: the codec/window path segments
-   * interleave within every shard, so every range spans the whole path
-   * space.) The sets hold REFERENCES to the entry path strings (~40 B/path
+   * parsing its JSON. (Classifying a removal by each shard's [min,max]
+   * range of PATHS was tried first and is useless under hidden
+   * partitioning: the codec/window path segments interleave within every
+   * shard, so every path range spans the whole path space. The snapshot's
+   * stats summaries, [[ManifestSummary]], bound column values, not paths.)
+   * The sets hold REFERENCES to the entry path strings (~40 B/path
    * of overhead), capped globally; past the cap a shard simply stays
    * uncached and is parsed — the cache is never a correctness input.
    * Cold-cache commits (a fresh driver) parse everything once and are
@@ -709,20 +724,21 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
     out
   }
 
-  private def writeManifest(id: Long, shard: Seq[DataFile]): String = {
+  /** Write one data manifest; returns its name and the summary the new
+   * snapshot records beside it. */
+  private def writeManifest(id: Long, shard: Seq[DataFile]): (String, ManifestSummary) = {
     val name = s"manifest-$id-${UUID.randomUUID().toString.take(8)}.json"
     Json.writeManifest(metaDir.resolve(name), shard)
     cachePathSet(name, shard)
-    name
+    name -> ManifestSummary.of(shard)
   }
 
   /** Delete manifests: inherited by NAME (immutable, shared across
    * snapshots like data files), or rewritten when the op changes the set. */
-  private def deleteManifestNames(parent: Long, id: Long,
+  private def deleteManifestNames(parent: Option[Snapshot], id: Long,
                                   deletes: Option[Seq[DataFile]]): Seq[String] =
     deletes match {
-      case None =>
-        if (parent == -1L) Nil else snapshot(parent).deleteManifests
+      case None => parent.fold(Seq.empty[String])(_.deleteManifests)
       case Some(ds) if ds.isEmpty => Nil
       case Some(ds) =>
         ds.grouped(manifestShardSize).map { shard =>
@@ -734,14 +750,17 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
     }
 
   /** Claim snap-<id>.json, CAS CURRENT, replace CURRENT ([[MetaFs]]).
+   * `manifestSummaries` holds a summary for each manifest that has one.
    * `ownManifests` / `ownDeletes` = files THIS commit wrote (cleaned up on
    * failure); reused/inherited names are never touched. */
   private def publish(operation: String, parent: Long, id: Long,
-                      manifestNames: Seq[String], ownManifests: Seq[String],
+                      manifestNames: Seq[String],
+                      manifestSummaries: Map[String, ManifestSummary],
+                      ownManifests: Seq[String],
                       delManifestNames: Seq[String], ownDeletes: Boolean,
                       summary: Map[String, String]): Long = {
     val snap = Snapshot(id, parent, System.currentTimeMillis(), operation,
-      manifestNames, summary, delManifestNames)
+      manifestNames, summary, delManifestNames, manifestSummaries)
     val snapPath = metaDir.resolve(s"snap-$id.json")
     def dropOwn(): Unit =
       (ownManifests ++ (if (ownDeletes) delManifestNames else Nil)).foreach { n =>

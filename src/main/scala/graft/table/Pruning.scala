@@ -174,8 +174,8 @@ object Pruning {
    * evidence. Tuple elimination is exact and cheapest (a memoized string
    * compare per file against the declared spec; files without a tuple are
    * kept), so stats parsing never touches files it already excludes. Pure:
-   * [[PlanScan.prune]] runs it per manifest shard in executors, so the
-   * driver and distributed tiers cannot diverge. */
+   * [[PlanScan.prune]] runs it per surviving manifest shard, on the driver
+   * or in executors, so the two tiers cannot diverge. */
   def tupleZone(spec: Option[PartitionSpec], entries: Seq[DataFile],
                 preds: Seq[Pred]): (Int, Seq[DataFile]) =
     if (preds.isEmpty) (entries.size, entries)
@@ -205,7 +205,7 @@ object Pruning {
   /** The file-elimination stack — partition tuple, then zonemap, then bloom
    * — on the driver: of `entries`, the files that may hold a row matching
    * ALL of `preds`. Merge, the delete-where residue and delete
-   * materialization ask here; [[scan]] and [[scanDistributed]] compose the
+   * materialization ask here; [[scan]] and [[scanPlanned]] compose the
    * same two steps because they also report the tuple tier's count. */
   def candidates(spark: SparkSession, store: MetaStore, entries: Seq[DataFile],
                  preds: Seq[Pred]): Seq[DataFile] =
@@ -231,13 +231,14 @@ object Pruning {
       anyEntry = entries.headOption)
   }
 
-  /** Distributed variant of [[scan]]: the tuple and zonemap tiers run as a
-   * Spark job over manifest shards ([[PlanScan.prune]], the same
-   * [[tupleZone]]) so the driver never materializes the snapshot's full
-   * entry list — the bloom tier and the delete-aware assembly are shared
-   * with the driver path. */
-  def scanDistributed(spark: SparkSession, store: MetaStore, snapshotId: Long,
-                      snap: Snapshot, preds: Seq[Pred]): PrunedScan = {
+  /** [[scan]] of a whole snapshot, the one read path behind
+   * [[MetaStore.scanPruned]]: the tuple and zonemap tiers run through
+   * [[PlanScan.prune]] (summary skip, then the surviving manifests on the
+   * driver or as a Spark job, the same [[tupleZone]]), so neither tier
+   * materializes entries of manifests the summaries rule out — the bloom
+   * tier and the delete-aware assembly are [[scan]]'s. */
+  def scanPlanned(spark: SparkSession, store: MetaStore, snapshotId: Long,
+                  snap: Snapshot, preds: Seq[Pred]): PrunedScan = {
     val plan = PlanScan.prune(spark, store, snap, preds)
     // anyEntry must cover BOTH all-pruned shapes: tuple/zonemap pruned
     // everything (plan.kept empty) AND the bloom tier pruned the zonemap
@@ -251,8 +252,8 @@ object Pruning {
   }
 
   /** Delete-aware read of the kept files + exact re-filter — everything
-   * after the (driver or distributed) elimination tiers. No predicates, no
-   * `Filter` node: an unpruned scan plans exactly as a bare read. */
+   * after the elimination tiers. No predicates, no `Filter` node: an
+   * unpruned scan plans exactly as a bare read. */
   private def assemble(spark: SparkSession, store: MetaStore, snapshotId: Long,
                        preds: Seq[Pred], kept: Seq[DataFile],
                        filesTotal: Long, rowsTotal: Long,

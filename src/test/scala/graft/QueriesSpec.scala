@@ -18,6 +18,17 @@ class QueriesSpec extends AnyFunSuite {
     assert(empty.isEmpty, s"empty queries: ${empty.map(_._1)}")
   }
 
+  test("scratch root: tmpfs only at or above the free-space floor") {
+    import graft.queries.OracleFixtures.{TmpfsFloorBytes, scratchRootFor}
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    val shm = java.nio.file.Paths.get("/dev/shm")
+    assert(scratchRootFor(None) == tmp)
+    assert(scratchRootFor(Some(0L)) == tmp)
+    assert(scratchRootFor(Some(TmpfsFloorBytes - 1)) == tmp)
+    assert(scratchRootFor(Some(TmpfsFloorBytes)) == shm)
+    assert(scratchRootFor(Some(Long.MaxValue)) == shm)
+  }
+
   test("every oracle key has a matching query") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracles without queries: $missing")

@@ -204,8 +204,8 @@ class RefsSpec extends AnyFunSuite {
     Refs.rmwRefs(store) { cur =>
       calls += 1
       if (calls == 1) {
-        // a conflicting writer (e.g. one that wrongly stole the advisory
-        // lock — the irreducible mtime-lease failure mode) lands AFTER our
+        // a conflicting writer (any concurrent refs update — there is no
+        // lock, the version claim is the only arbiter) lands AFTER our
         // read: it claims the next version, so OUR casWrite must lose and
         // the body must re-run against the thief's state
         val (v, c) = Refs.readVersioned(store)
