@@ -368,7 +368,7 @@ object Maintain {
         println(s"bloom shards ${r.shardsBefore} -> ${r.shardsAfter}: " +
           s"kept ${r.rowsKept} live rows, dropped ${r.rowsDropped} dead")
       case "compact-lineage" =>
-        val (before, after) = store.compactLineage(spark)
+        val (before, after) = store.compactLineage()
         println(s"lineage shards $before -> $after")
       case "layout" =>
         // zonemap quality per stats column: expected files opened per probe

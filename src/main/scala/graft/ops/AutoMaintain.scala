@@ -72,8 +72,8 @@ final case class MaintenancePolicy(
      * trigger): every write adds one shard, dead files keep their rows —
      * fold to one live-only shard past this. */
     maxBloomShards: Int = 32,
-    /** Lineage side-table shard bound ([[graft.table.MetaStore.compactLineage]]
-     * trigger): one subdir per batch; fold past this. */
+    /** Lineage side-table file bound ([[graft.table.MetaStore.compactLineage]]
+     * trigger): one `.jsonl` file per op; fold past this. */
     maxLineageShards: Int = 64)
 
 object AutoMaintain {
@@ -268,7 +268,7 @@ object AutoMaintain {
           graft.table.FileBloom.compact(spark, store)
           store.currentSnapshotId.getOrElse(-1L) // side-table only, no commit
         case "compact-lineage" =>
-          store.compactLineage(spark)
+          store.compactLineage()
           store.currentSnapshotId.getOrElse(-1L) // side-table only, no commit
         case "expire" =>
           ExpireSnapshots.run(store, policy.expireKeepLast, policy.expireMinAgeMs)

@@ -275,7 +275,7 @@ object Cluster {
       }
 
     val wallMs = (System.nanoTime() - t0) / 1000000
-    store.appendLineage(spark, newEntries.zipWithIndex.map { case (e, p) =>
+    store.appendLineage(newEntries.zipWithIndex.map { case (e, p) =>
       LineageRecord(runId, snapId, s"cluster-$curve", e.path, p, e.rows, e.sizeBytes,
         wallMs, System.currentTimeMillis(), "done")
     }.toSeq)
@@ -403,7 +403,7 @@ object Cluster {
       }
       es
     }
-    store.appendLineage(spark, lineageBuf.result())
+    store.appendLineage(lineageBuf.result())
     val rewrittenPaths = toRewrite.flatten.map(_.path).toSet
     // planned against snapId delete-aware: an interleaved commit (above all
     // an equality delete whose keys this rewrite did NOT apply) must fail

@@ -77,7 +77,7 @@ object Compact {
       .write.mode("overwrite").partitionBy("_bin" +: pnames: _*).parquet(outDir)
     val newEntries = store.collectStats(spark, outDir)
     val wallMs = (System.nanoTime() - t0) / 1000000
-    store.appendLineage(spark, newEntries.zipWithIndex.map { case (e, p) =>
+    store.appendLineage(newEntries.zipWithIndex.map { case (e, p) =>
       LineageRecord(runId, snapId, "compact", "single-job", p, e.rows,
         e.sizeBytes, wallMs, System.currentTimeMillis(), "done")
     })
@@ -164,9 +164,8 @@ object Compact {
     }
 
     var skipped = 0
-    // lineage writes are buffered and appended ONCE after the pool drains —
-    // concurrent appends to one parquet dir would race on the shared
-    // _temporary committer dir
+    // lineage rows are buffered and appended ONCE after the pool drains:
+    // one lineage file per op, not one per bin
     val lineageBuf = new java.util.concurrent.ConcurrentLinkedQueue[LineageRecord]()
     val pool = Executors.newFixedThreadPool(math.max(1, maxConcurrentBins))
     val tasks = toRewrite.zipWithIndex.map { case (bin, i) =>
@@ -221,7 +220,7 @@ object Compact {
     val newEntries =
       try pool.invokeAll(tasks.asJava).asScala.flatMap(_.get()).toSeq
       finally { pool.shutdown(); pool.awaitTermination(1, TimeUnit.HOURS) }
-    store.appendLineage(spark, lineageBuf.asScala.toSeq)
+    store.appendLineage(lineageBuf.asScala.toSeq)
 
     val filesAfter = entries.size - toRewrite.map(_.size).sum + newEntries.size
     val newSnap = store.commitDelta("compact", newEntries,

@@ -589,7 +589,7 @@ object Deletes {
         store.collectStats(spark, outDir)
       }
     val t0 = System.currentTimeMillis()
-    store.appendLineage(spark, newEntries.zipWithIndex.map { case (e, p) =>
+    store.appendLineage(newEntries.zipWithIndex.map { case (e, p) =>
       graft.table.LineageRecord(runId, snapId, "materialize", e.path, p,
         e.rows, e.sizeBytes, 0L, t0, "done")
     })

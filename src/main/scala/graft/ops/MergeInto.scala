@@ -162,7 +162,7 @@ object MergeInto {
 
     val newEntries = store.collectStats(spark, outDir)
     val wallMs = (System.nanoTime() - t0) / 1000000
-    store.appendLineage(spark, newEntries.zipWithIndex.map { case (e, p) =>
+    store.appendLineage(newEntries.zipWithIndex.map { case (e, p) =>
       LineageRecord(runId, snapId, "merge", e.path, p, e.rows, e.sizeBytes,
         wallMs, System.currentTimeMillis(), "done")
     })
@@ -294,7 +294,7 @@ object MergeInto {
     // lineage AFTER the commit succeeds: inside the retry block every lost
     // race would append the same records again (duplicate metrics rows)
     val wallMs = (System.nanoTime() - t0) / 1000000
-    store.appendLineage(spark, addedRaw.zipWithIndex.map { case (e, p) =>
+    store.appendLineage(addedRaw.zipWithIndex.map { case (e, p) =>
       LineageRecord(runId, result.snapshotId - 1, "merge-mor", e.path, p,
         e.rows, e.sizeBytes, wallMs, System.currentTimeMillis(), "done")
     })

@@ -106,8 +106,8 @@ object RemoveOrphans {
           removed += 1
         FileVisitResult.CONTINUE
       }
-      // live writers remove their own temps and lineage `_temporary` dirs
-      // while the walk runs: a vanished entry is not an error
+      // live writers remove their own temps and bloom shards' `_temporary`
+      // dirs while the walk runs: a vanished entry is not an error
       override def visitFileFailed(p: Path, e: IOException): FileVisitResult =
         FileVisitResult.CONTINUE
       override def postVisitDirectory(d: Path, e: IOException): FileVisitResult =

@@ -60,7 +60,7 @@ object Transcode {
       .write.mode("overwrite").parquet(outDir)
     val newEntries = store.collectStats(spark, outDir)
     val wallMs = (System.nanoTime() - t0) / 1000000
-    store.appendLineage(spark, newEntries.zipWithIndex.map { case (e, p) =>
+    store.appendLineage(newEntries.zipWithIndex.map { case (e, p) =>
       LineageRecord(runId, snapId, "transcode", s"$targetCodec@$targetSrHz",
         p, e.rows, e.sizeBytes, wallMs, System.currentTimeMillis(), "done")
     })

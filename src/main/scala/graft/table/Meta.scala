@@ -177,9 +177,9 @@ object ManifestSummary {
 }
 
 /** Per-item lineage/metrics row, persisted into the metadata side-table
- * (meta/lineage). The Spark analog of the reference's FibonacciReporter
- * rows/sec instrumentation (vector-like/src/main/java/vec/util/
- * FibonacciReporter.kt:15-35). */
+ * (meta/lineage, one JSON object per line, one `.jsonl` file per op). The
+ * Spark analog of the reference's FibonacciReporter rows/sec
+ * instrumentation (vector-like/src/main/java/vec/util/FibonacciReporter.kt:15-35). */
 final case class LineageRecord(
     runId: String,
     snapshotId: Long,

@@ -11,11 +11,11 @@ import java.util.UUID
  *  - [[claim]]: create-once. The temp is HARD-LINKED to the target; link(2)
  *    fails atomically with EEXIST when the name exists, so of N racing
  *    claimers exactly one wins and the first content is never replaced.
- *    Snapshot-id claims, refs versions, branch records and evolution
- *    entries use it.
+ *    Snapshot-id claims, refs versions, branch records, evolution
+ *    entries and lineage files use it.
  *  - [[replace]]: last writer wins. The temp is renamed over the target
  *    (rename(2) replaces atomically). CURRENT, the partition spec, the sort
- *    order and mutable records use it.
+ *    order, checkpoint markers and payloads, and mutable records use it.
  *
  * A rename is NOT a claim: on POSIX `rename` silently replaces an existing
  * target, `ATOMIC_MOVE` without `REPLACE_EXISTING` included. Temp names

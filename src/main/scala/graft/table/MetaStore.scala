@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
  *   <tableDir>/meta/snap-<id>.json             snapshot descriptors
  *   <tableDir>/meta/manifest-<id>-<uuid>.json  file lists + stats
  *   <tableDir>/meta/CURRENT                    atomic pointer (current snapshot id)
- *   <tableDir>/meta/lineage/                   lineage/metrics side-table (parquet)
+ *   <tableDir>/meta/lineage/<uuid>.jsonl       lineage/metrics rows, one file per op
  *   <tableDir>/meta/checkpoints/<runId>/       per-item completion markers
  * }}}
  *
@@ -784,78 +784,68 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
   }
 
   // ---- lineage side-table ----
-  def appendLineage(spark: SparkSession, recs: Seq[LineageRecord]): Unit = {
-    if (recs.isEmpty) return
-    import spark.implicits._
-    // unique subdir per batch (same discipline as the blooms side-table):
-    // concurrent writers — racing merges/appends are a supported shape —
-    // must not share one FileOutputCommitter _temporary dir, where the
-    // first job to commit deletes it and aborts the others mid-task
-    val out = metaDir.resolve("lineage")
-      .resolve(UUID.randomUUID().toString.take(12))
-    recs.toDS().write.mode("overwrite").parquet(out.toString)
-  }
+  private def lineageDir = metaDir.resolve("lineage")
 
-  def lineage(spark: SparkSession): DataFrame = {
-    val dir = metaDir.resolve("lineage")
-    val hasData = {
-      val s = Files.walk(dir)
-      try s.anyMatch(_.toString.endsWith(".parquet")) finally s.close()
-    }
-    // recursive lookup reads both layouts: flat legacy files and the
-    // per-batch subdirs appendLineage writes now
-    if (hasData) spark.read.option("recursiveFileLookup", "true")
-      .parquet(dir.toString)
-    else spark.emptyDataFrame
-  }
-
-  /** Lineage shard count (per-batch subdirs + legacy flat files) — the
-   * [[compactLineage]] trigger. */
-  def lineageShardCount: Int = {
-    val dir = metaDir.resolve("lineage")
-    if (!Files.isDirectory(dir)) return 0
-    val s = Files.list(dir)
+  /** (`.jsonl` files, legacy parquet shards): flat files or per-batch
+   * subdirs from before lineage was JSON, read but never written or folded.
+   * `_`/`.`-prefixed names (committer debris) are skipped, as Spark does. */
+  private def lineageFiles: (Seq[JPath], Seq[JPath]) = {
+    if (!Files.isDirectory(lineageDir)) return (Nil, Nil)
+    val s = Files.list(lineageDir)
     try {
       import scala.jdk.CollectionConverters._
-      s.iterator().asScala.count(p =>
-        Files.isDirectory(p) || p.toString.endsWith(".parquet"))
+      val ps = s.iterator().asScala.filterNot { p =>
+        val n = p.getFileName.toString
+        n.startsWith("_") || n.startsWith(".")
+      }.toSeq
+      (ps.filter(_.toString.endsWith(".jsonl")),
+        ps.filter(p => Files.isDirectory(p) || p.toString.endsWith(".parquet")))
     } finally s.close()
   }
 
-  /** Fold the per-batch lineage subdirs into ONE (rows preserved): each
-   * append/merge/maintenance batch writes its own subdir so concurrent
-   * writers never share a committer dir, which leaves one dir per batch —
-   * a long-running stream accumulates unbounded metadata file count.
-   * Captured-first like FileBloom.compact: a shard added mid-fold is
-   * neither folded nor deleted. Lineage is diagnostics; a reader racing
-   * the swap may briefly see duplicate or partial rows. Returns
-   * (shards before, after). */
-  def compactLineage(spark: SparkSession): (Int, Int) = {
-    val dir = metaDir.resolve("lineage")
-    if (!Files.isDirectory(dir)) return (0, 0)
-    val shards = {
-      val s = Files.list(dir)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.filter(p =>
-          Files.isDirectory(p) || p.toString.endsWith(".parquet")).toSeq
-      } finally s.close()
-    }
+  /** Publish `bytes` as a new `<uuid>.jsonl` through [[MetaFs]]: readers
+   * see it whole or not at all, and concurrent writers never share a file. */
+  private def claimLineage(bytes: Array[Byte]): Unit =
+    while (!MetaFs.claim(lineageDir.resolve(s"${UUID.randomUUID()}.jsonl"), bytes)) ()
+
+  /** Append `recs` as ONE JSON-lines file. A driver-side write: no Spark
+   * job. Ops buffer their rows and call this once. */
+  def appendLineage(recs: Seq[LineageRecord]): Unit =
+    if (recs.nonEmpty)
+      claimLineage(recs.map(r => Json.write(r) + "\n").mkString
+        .getBytes(StandardCharsets.UTF_8))
+
+  /** Every lineage row, JSON and legacy parquet alike, with
+   * [[LineageRecord]]'s schema (zero rows on a table without lineage). */
+  def lineage(spark: SparkSession): DataFrame = {
+    val schema = org.apache.spark.sql.Encoders.product[LineageRecord].schema
+    val (json, parquet) = lineageFiles
+    val frames =
+      (if (json.isEmpty) Nil
+       else Seq(spark.read.schema(schema).json(json.map(_.toString): _*))) ++
+      (if (parquet.isEmpty) Nil
+       else Seq(spark.read.schema(schema).parquet(parquet.map(_.toString): _*)))
+    frames.reduceOption(_ unionByName _).getOrElse(spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema))
+  }
+
+  /** Lineage `.jsonl` file count — the [[compactLineage]] trigger. Legacy
+   * parquet shards are not counted: nothing adds to them. */
+  def lineageShardCount: Int = lineageFiles._1.size
+
+  /** Concatenate the lineage `.jsonl` files into ONE on the driver (rows
+   * preserved): each op claims its own file, so a long-running stream
+   * accumulates unbounded metadata file count.
+   * Captured-first like FileBloom.compact: a file added mid-fold is neither
+   * folded nor deleted. Lineage is diagnostics; a reader racing the fold
+   * may briefly see duplicate rows or miss a deleted input. Returns
+   * (files before, after). */
+  def compactLineage(): (Int, Int) = {
+    val shards = lineageFiles._1
     if (shards.size <= 1) return (shards.size, shards.size)
-    val out = dir.resolve(UUID.randomUUID().toString.take(12))
-    spark.read.option("recursiveFileLookup", "true")
-      .parquet(shards.map(_.toString): _*)
-      .coalesce(1)
-      .write.mode("overwrite").parquet(out.toString)
-    shards.foreach { p =>
-      if (Files.isDirectory(p)) {
-        val w = Files.walk(p)
-        try {
-          import scala.jdk.CollectionConverters._
-          w.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-        } finally w.close()
-      } else Files.deleteIfExists(p)
-    }
+    // every file ends in a newline, so the concatenation is JSON lines
+    claimLineage(Array.concat(shards.map(Files.readAllBytes(_)): _*))
+    shards.foreach(Files.deleteIfExists(_))
     (shards.size, 1)
   }
 
@@ -867,16 +857,16 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
   }
 
   def markDone(runId: String, item: String): Unit =
-    Files.write(checkpointDir(runId).resolve(s"done-$item"), Array.emptyByteArray)
+    MetaFs.replace(checkpointDir(runId).resolve(s"done-$item"), Array.emptyByteArray)
 
   def isDone(runId: String, item: String): Boolean =
     Files.exists(checkpointDir(runId).resolve(s"done-$item"))
 
-  /** Read back a per-item payload written by [[saveItemResult]]. */
   def saveItemResult(runId: String, item: String, payload: String): Unit =
-    Files.write(checkpointDir(runId).resolve(s"result-$item"),
+    MetaFs.replace(checkpointDir(runId).resolve(s"result-$item"),
       payload.getBytes(StandardCharsets.UTF_8))
 
+  /** Read back a per-item payload written by [[saveItemResult]]. */
   def itemResult(runId: String, item: String): Option[String] = {
     val p = checkpointDir(runId).resolve(s"result-$item")
     if (Files.exists(p)) Some(new String(Files.readAllBytes(p), StandardCharsets.UTF_8))

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import graft.ops._
 import graft.synth.ClipSynth
-import graft.table.MetaStore
+import graft.table.{LineageRecord, MetaFs, MetaStore}
 import graft.verify.ScanEquality
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -161,6 +161,7 @@ class MaintenanceSpec extends AnyFunSuite {
     while (doneMarkers.hasNext) {
       val n = doneMarkers.next().getFileName.toString
       if (n.startsWith("done-bin-0-")) sawDone = true
+      assert(!MetaFs.isTemp(n), s"checkpoint publish left a temp: $n")
     }
     assert(sawDone, "no content-scoped done marker for bin 0")
     // replaying run 1's id against the SAME layout skips; against a CHANGED
@@ -170,6 +171,20 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(lineage.count() > 0)
     assert(lineage.filter(col("phase") === "compact").count() > 0)
   }
+
+  /** Plans compact-lineage past one lineage file, and nothing else. */
+  private val lineageOnlyPolicy = MaintenancePolicy(maxLineageShards = 1,
+    maxSmallFiles = Int.MaxValue, maxOverlapDepth = Double.MaxValue,
+    expireKeepLast = Int.MaxValue, maxBloomShards = Int.MaxValue)
+
+  private def lineageEntries(dir: String): Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    val s = Files.list(java.nio.file.Paths.get(dir, "meta", "lineage"))
+    try s.iterator().asScala.toSeq finally s.close()
+  }
+
+  private def lineageRec(run: String, i: Int) = LineageRecord(run, 1L, "probe",
+    s"$run-$i", i, 10L + i, 100L, 5L, 1000L + i, "done")
 
   test("lineage side-table records per-item metrics for every pass") {
     val store = MetaStore.forClips(tableDir)
@@ -185,16 +200,77 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(before > 0)
     assert(store.lineageShardCount > 1,
       "maintenance passes should have left multiple lineage shards")
-    val (b, a) = store.compactLineage(spark)
+    val (b, a) = store.compactLineage()
     assert(b > 1 && a == 1)
     assert(store.lineageShardCount == 1)
     assert(store.lineage(spark).count() == before, "fold must preserve rows")
     // trigger plans and clears
-    val policy = graft.ops.MaintenancePolicy(maxLineageShards = 1,
-      maxSmallFiles = Int.MaxValue, maxOverlapDepth = Double.MaxValue,
-      expireKeepLast = Int.MaxValue, maxBloomShards = Int.MaxValue)
-    assert(!graft.ops.AutoMaintain.plan(store, policy)
+    assert(!AutoMaintain.plan(store, lineageOnlyPolicy)
       .exists(_.op == "compact-lineage"), "1 folded shard clears the trigger")
+  }
+
+  test("lineage on a table without lineage is a zero-row LineageRecord frame") {
+    val store = MetaStore.forClips(
+      Files.createTempDirectory("graft-lineage-fresh-").toString)
+    assert(store.lineage(spark).filter(col("phase") === "x").count() == 0)
+    assert(store.lineage(spark).orderBy("tsMs").count() == 0)
+  }
+
+  test("lineage reads legacy parquet shards beside JSON files; the fold leaves them") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-lineage-legacy-").toString
+    val store = MetaStore.forClips(dir)
+    // AutoMaintain plans only tables with a snapshot
+    Append.run(spark, store, ClipSynth.dataset(spark, 20, 1, maxDurMs = 40).toDF())
+    val lin = java.nio.file.Paths.get(dir, "meta", "lineage")
+    // the two parquet layouts older tables hold: flat part files in the
+    // lineage dir, and one subdir per batch
+    Seq(lineageRec("flat", 0)).toDS().write.mode("append").parquet(lin.toString)
+    val sub = lin.resolve("0123456789ab")
+    Seq(lineageRec("sub", 0), lineageRec("sub", 1)).toDS()
+      .write.mode("overwrite").parquet(sub.toString)
+    val flatFiles = lineageEntries(dir).filter(_.toString.endsWith(".parquet"))
+    assert(flatFiles.nonEmpty)
+    store.appendLineage(Seq(lineageRec("json", 0)))
+    store.appendLineage(Seq(lineageRec("json", 1), lineageRec("json", 2)))
+
+    val want = Seq(lineageRec("flat", 0), lineageRec("sub", 0), lineageRec("sub", 1),
+      lineageRec("json", 0), lineageRec("json", 1), lineageRec("json", 2))
+    def check(): Unit = {
+      val ln = store.lineage(spark)
+      assert(ln.schema.map(f => f.name -> f.dataType) ==
+        org.apache.spark.sql.Encoders.product[LineageRecord].schema
+          .map(f => f.name -> f.dataType))
+      assert(ln.as[LineageRecord].collect().sortBy(_.item).toSeq == want.sortBy(_.item))
+    }
+    check()
+    assert(store.lineageShardCount == 2, "only the .jsonl files count")
+    assert(AutoMaintain.plan(store, lineageOnlyPolicy).exists(_.op == "compact-lineage"))
+    assert(store.compactLineage() == (2, 1))
+    assert(store.lineageShardCount == 1)
+    flatFiles.foreach(p => assert(Files.exists(p), s"fold touched legacy $p"))
+    assert(Files.isDirectory(sub))
+    check()
+    assert(!AutoMaintain.plan(store, lineageOnlyPolicy)
+      .exists(_.op == "compact-lineage"), "1 folded file clears the trigger")
+  }
+
+  test("concurrent appendLineage: every row read back once, no temps left") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-lineage-race-").toString
+    val store = MetaStore.forClips(dir)
+    val threads = (0 until 8).map { t =>
+      new Thread(() => (0 until 25).foreach(i =>
+        store.appendLineage(Seq(lineageRec(s"t$t", i)))))
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    val items = store.lineage(spark).select("item").as[String].collect()
+    assert(items.length == 200)
+    assert(items.toSet == (for (t <- 0 until 8; i <- 0 until 25) yield s"t$t-$i").toSet)
+    lineageEntries(dir).map(_.getFileName.toString)
+      .foreach(n => assert(!MetaFs.isTemp(n), s"publish temp left behind: $n"))
+    assert(store.lineageShardCount == 200)
   }
 
   test("manifests shard at commit; entries() and expire see all shards") {
