@@ -257,7 +257,7 @@ object Maintain {
         val r = RemoveOrphans.run(store, minAgeMs)
         println(s"scanned ${r.scanned} files, deleted ${r.orphansDeleted} " +
           s"orphans (${r.bytesFreed} bytes), " +
-          s"${r.commitDebrisDeleted} crashed-commit snap claims")
+          s"${r.commitDebrisDeleted} crashed-publish temps")
       case "transcode" =>
         val codec = rest.headOption.getOrElse(graft.audio.Pcm.Pcm16le)
         val rate = rest.lift(1).map(_.toInt).getOrElse(16000)

@@ -32,7 +32,7 @@ object Append {
     // O(batch) commit: parent manifests are reused structurally — a
     // streaming ingest against a 10^5-manifest-entry table never reads or
     // rewrites the existing file list. An append is valid against ANY newer
-    // snapshot, so a lost commit race (another writer advanced CURRENT) is
+    // snapshot, so a lost commit race (another writer claimed the id) is
     // retried rather than surfaced — multi-writer appends just work.
     MetaStore.withCommitRetry() {
       store.commitDelta("append", newEntries, summary = summary)

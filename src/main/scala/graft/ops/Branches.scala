@@ -50,8 +50,8 @@ final case class BranchRec(
  *    log's cross-process safety hinges on same-parent racers contending on
  *    the same `snap-<parent+1>.json` create-once claim; interleaving branch
  *    snapshots into that log would break the claim discipline (a branch
- *    commit at `CURRENT+1` would livelock main writers). Instead each
- *    branch gets its own log DIRECTORY with the same claim machinery,
+ *    commit at head + 1 would livelock main writers). Instead each
+ *    branch gets its own log DIRECTORY, the same [[graft.table.MetaLog]],
  *    seeded AT the fork id so branch commit ids stay strictly above every
  *    carried data-sequence number (equality-delete coverage) and line up
  *    id-for-id with a later replay.
@@ -168,7 +168,7 @@ object Branches {
     b.bloomColumn = main.bloomColumn
     val fork = if (fromSnapshot >= 0) fromSnapshot
       else main.currentSnapshotId.getOrElse(sys.error("branch: empty table"))
-    require(main.allSnapshotIds.contains(fork), s"branch: no snapshot $fork")
+    require(Files.exists(main.log.path(fork)), s"branch: no snapshot $fork")
     // schema-era + partition metadata travel with the fork (read-side deps)
     val srcMeta = Paths.get(main.tableDir, "meta")
     val dstMeta = Paths.get(b.tableDir, "meta")
@@ -274,7 +274,7 @@ object Branches {
     // resume check: every main commit past the fork must be OUR replay.
     // Replayed snapshots that expiry already dropped can no longer prove
     // anything either way — skip them; the surviving ones (always including
-    // CURRENT, which expiry retains) must all carry our stamp.
+    // the head, which expiry retains) must all carry our stamp.
     (fork + 1 to cur).foreach { id =>
       val sOpt =
         try Some(main.snapshot(id))
@@ -393,7 +393,7 @@ object Branches {
     val b = store(main, name)
     require(branchSnapshotId > rec.forkSnapshot.toLong,
       s"cherry-pick: $branchSnapshotId is not a branch-local commit of '$name'")
-    require(b.allSnapshotIds.contains(branchSnapshotId),
+    require(Files.exists(b.log.path(branchSnapshotId)),
       s"cherry-pick: branch '$name' has no snapshot $branchSnapshotId")
     // BOTH eras must sit at the fork era: a main-side evolution would
     // mis-default old-era files, and a branch-side evolution means the

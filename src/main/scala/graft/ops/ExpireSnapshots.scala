@@ -33,14 +33,10 @@ object ExpireSnapshots {
    *    rely on: a consumer lagging less than the window never loses a batch.
    *    0 = age is no protection (keepLast/current/tags still are). */
   def run(store: MetaStore, keepLast: Int = 1, minAgeMs: Long = 0L): ExpireResult = {
-    val current = store.currentSnapshotId.getOrElse(sys.error("expire: empty table"))
-    // only COMMITTED history participates: a snap file with id > CURRENT is
-    // either crash debris or a commit in flight — counting it toward the
-    // keepLast window would silently shrink real retention by one per such
-    // file (and expire a snapshot a lagging ChangeFeed consumer was
-    // promised), and deleting it could kill a commit mid-publish. Debris is
-    // RemoveOrphans' job (age-floored), not expiry's.
-    val all = store.allSnapshotIds.filter(_ <= current)
+    // every snap file is a committed snapshot (the claim is the commit), so
+    // the newest one listed is the head
+    val all = store.allSnapshotIds
+    val current = all.lastOption.getOrElse(sys.error("expire: empty table"))
     // per-ref retention first: a tag past its declared maxRefAgeMs stops
     // being a GC root NOW, in the same pass — otherwise an aged-out nightly
     // tag pins its snapshot for one extra expiry cycle
@@ -108,9 +104,7 @@ object ExpireSnapshots {
         store.forgetManifest(m)
       }
     }
-    expired.foreach { id =>
-      Files.deleteIfExists(Paths.get(store.tableDir, "meta", s"snap-$id.json"))
-    }
+    store.log.retire(expired)
     ExpireResult(expired, retained, dataDeleted, manifestsDeleted,
       droppedTags, droppedBranches)
   }

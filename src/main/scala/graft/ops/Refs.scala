@@ -3,7 +3,7 @@ package graft.ops
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import graft.table.{Json, MetaFs, MetaStore}
+import graft.table.{Json, MetaFs, MetaLog, MetaStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Snapshot ids are stored as strings: Jackson erases Map[String, Long] to
@@ -28,15 +28,13 @@ final class RefsMigratedException(msg: String) extends IllegalStateException(msg
  * is touched). [[ExpireSnapshots]] treats tagged snapshots as GC roots, so a
  * tag pins its files for as long as it exists.
  *
- * Durability model: refs state is a chain of immutable version files
- * (`meta/refs/v<N>.json`). A mutation reads the top version, computes the
- * next state and publishes it with a create-once [[MetaFs.claim]] of
- * `v<N+1>.json` ([[casWrite]]). Of N concurrent read-modify-writes exactly
- * one wins each version; every loser re-runs against the winner's state
- * ([[rmwRefs]]). Retiring old versions frees their names, so a writer
- * stalled past the retire window can claim a freed name; [[rmwRefs]]
- * detects that ghost claim and re-runs it as a loss ([[retire]]). No update
- * is lost and no lock is needed. Tables written
+ * Durability model: refs state is a [[MetaLog]] (`meta/refs/v<N>.json`). A
+ * mutation reads the head, computes the next state and appends it
+ * ([[casWrite]]); of N concurrent read-modify-writes exactly one wins each
+ * version and every loser re-runs against the new head ([[rmwRefs]]), as
+ * does a writer whose parent was retired while it stalled (refused by
+ * parent identity). No update is lost or applied twice, and no lock is
+ * needed. Tables written
  * before versioning read their legacy single `refs.json` until the first
  * mutation migrates it to v1 and replaces `refs.json` with a tombstone that
  * a pre-versioning reader fails to parse.
@@ -60,103 +58,73 @@ object Refs {
     if (f.retention == null) f.copy(retention = Map.empty) else f
   }
 
-  /** Committed version numbers present under meta/refs/, ascending. */
-  private def versionsOf(store: MetaStore): Seq[Long] =
-    MetaFs.versions(refsDir(store), "v")
+  private def log(store: MetaStore) = new MetaLog(refsDir(store), "v")
 
-  /** (version, state). Version 0 = no CAS commit yet — state comes from the
-   * legacy single refs.json (or is empty); the first [[casWrite]] migrates
-   * it to v1. Every version file is published complete ([[MetaFs.claim]]),
-   * so a parse failure means external damage, not a torn write — surfaced,
-   * same as the legacy path. A tombstoned refs.json with no versions throws
-   * [[RefsMigratedException]]. */
-  private[graft] def readVersioned(store: MetaStore): (Long, RefsFile) = {
-    var attempt = 0
-    while (true) {
-      versionsOf(store).lastOption match {
-        case Some(v) =>
-          // the listed TOP version can only vanish if Keep newer commits
-          // land between the list and this read (retire's window) — a
-          // narrow race, but a reader must re-list rather than crash on it
-          try return (v,
-            parseRefs(Files.readAllBytes(refsDir(store).resolve(s"v$v.json"))))
-          catch {
-            case _: java.nio.file.NoSuchFileException if attempt < 20 =>
-              attempt += 1
-          }
-        case None =>
-          val p = refsPath(store)
-          if (!Files.exists(p)) return (0L, RefsFile(Map.empty))
-          val bytes = Files.readAllBytes(p)
-          if (new String(bytes, StandardCharsets.UTF_8) != Tombstone)
-            return (0L, parseRefs(bytes))
-          // a migration that landed between the listing and this read
-          // leaves v1 behind: re-list
-          if (versionsOf(store).isEmpty)
-            throw new RefsMigratedException(s"${store.tableDir}: meta/refs.json " +
-              "is a migration tombstone but meta/refs/ holds no version")
-      }
+  /** (version, its nonce, state). Version 0 = no version yet — state comes
+   * from the legacy single refs.json (or is empty) and the nonce is null;
+   * the first [[casWrite]] migrates it to v1. A parse failure means external
+   * damage (versions are published whole), surfaced. A tombstoned refs.json
+   * with no versions throws [[RefsMigratedException]]. */
+  @scala.annotation.tailrec
+  private def readHead(store: MetaStore): (Long, String, RefsFile) =
+    log(store).latest match {
+      case Some((v, bytes)) => (v, MetaLog.nonceOf(bytes), parseRefs(bytes))
+      case None if !Files.exists(refsPath(store)) => (0L, null, RefsFile(Map.empty))
+      case None =>
+        val bytes = Files.readAllBytes(refsPath(store))
+        if (new String(bytes, StandardCharsets.UTF_8) != Tombstone) (0L, null, parseRefs(bytes))
+        // a migration that landed after the head read left v1 behind
+        else if (log(store).head.nonEmpty) readHead(store)
+        else throw new RefsMigratedException(s"${store.tableDir}: meta/refs.json " +
+          "is a migration tombstone but meta/refs/ holds no version")
     }
-    sys.error("unreachable")
+
+  private[graft] def readVersioned(store: MetaStore): (Long, RefsFile) = {
+    val (v, _, f) = readHead(store)
+    (v, f)
   }
 
-  private def readFile(store: MetaStore): RefsFile = readVersioned(store)._2
+  private def readFile(store: MetaStore): RefsFile = readHead(store)._3
 
-  /** Publish `f` as version `expected + 1` IFF no other writer got there
-   * first — a filesystem compare-and-swap ([[MetaFs.claim]]: exactly one
-   * concurrent claimer per version wins). Losers re-read and re-run their
-   * read-modify-write ([[rmwRefs]]). Winning v1 over a legacy refs.json
-   * tombstones it. */
-  private[graft] def casWrite(store: MetaStore, expected: Long,
-                              f: RefsFile): Boolean = {
-    val dir = refsDir(store)
-    Files.createDirectories(dir)
-    val won = MetaFs.claim(dir.resolve(s"v${expected + 1}.json"),
-      Json.mapper.writeValueAsString(f).getBytes(StandardCharsets.UTF_8))
-    if (won && expected == 0L && Files.exists(refsPath(store)))
-      MetaFs.replace(refsPath(store), Tombstone.getBytes(StandardCharsets.UTF_8))
-    won
-  }
-
-  /** Versions [[retire]] keeps below the newest one. */
+  /** Each win retires the version this far below it. */
   private val Keep = 16
 
-  /** After claiming version `won`: retire every version `Keep` or more
-   * below the newest, and report whether `won` is a GHOST — a name an
-   * earlier retire had already deleted, re-claimed by a writer that read its
-   * parent before `Keep` newer commits landed. Its state sits below the
-   * newest version, so the write is lost. A name is only retired once a
-   * version `Keep` above it exists, and the newest version is never
-   * retired, so a ghost always lists a version `won + Keep` or higher. A
-   * real win lists that high only if `Keep` commits land between its link
-   * and this listing; it is then re-run too, which repeats its update. */
-  private def retire(store: MetaStore, won: Long): Boolean = {
-    val vs = versionsOf(store)
-    val newest = vs.lastOption.getOrElse(won)
-    vs.filter(_ <= newest - Keep).foreach { v =>
-      try Files.deleteIfExists(refsDir(store).resolve(s"v$v.json"))
-      catch { case _: java.io.IOException => () }
+  /** Publish `f` as version `expected + 1` IFF no other writer got there
+   * first ([[MetaLog.append]]); losers re-run their read-modify-write
+   * ([[rmwRefs]]). Winning v1 over a legacy refs.json tombstones it. */
+  private[graft] def casWrite(store: MetaStore, expected: Long, f: RefsFile): Boolean =
+    casWrite(store, expected, log(store).nonce(expected), f)
+
+  /** On the parent whose nonce the writer read with its state. */
+  private def casWrite(store: MetaStore, expected: Long, parentNonce: String,
+                       f: RefsFile): Boolean = {
+    val lg = log(store)
+    Files.createDirectories(lg.dir)
+    val won = lg.append(expected, parentNonce, Json.mapper.writeValueAsBytes(f))
+    if (won) {
+      if (expected == 0L && Files.exists(refsPath(store)))
+        MetaFs.replace(refsPath(store), Tombstone.getBytes(StandardCharsets.UTF_8))
+      if (expected + 1 > Keep) lg.retire(Seq(expected + 1 - Keep))
     }
-    newest >= won + Keep
+    won
   }
 
   /** Run a refs read-modify-write with CAS publication: `body` maps the
    * current state to (Some(newState) to commit | None for read-only, plus
-   * the caller's result). On a lost CAS race, or a ghost claim of a retired
-   * version ([[retire]]), the body RE-RUNS against the winner's state, so
-   * no update is ever silently clobbered. */
+   * the caller's result). On a lost CAS race — another writer's win, or a
+   * parent retired while this writer stalled — the body RE-RUNS against
+   * the new head's state, so no update is ever silently clobbered. */
   private[graft] def rmwRefs[A](store: MetaStore)
                                (body: RefsFile => (Option[RefsFile], A)): A = {
     var attempts = 0
     var out: Option[A] = None
     while (out.isEmpty) {
-      val (v, cur) = readVersioned(store)
+      val (v, nonce, cur) = readHead(store)
       val (next, result) = body(cur)
       next match {
         case None => out = Some(result)
         case Some(nf) =>
-          if (casWrite(store, v, nf) && !retire(store, v + 1))
-            out = Some(result)
+          if (casWrite(store, v, nonce, nf)) out = Some(result)
           else {
             attempts += 1
             if (attempts > 100)
@@ -196,7 +164,7 @@ object Refs {
           maxRefAgeMs: Long = -1L): Long = {
     val id = if (snapshotId >= 0) snapshotId
       else store.currentSnapshotId.getOrElse(sys.error("tag: empty table"))
-    require(store.allSnapshotIds.contains(id), s"tag: no snapshot $id")
+    require(Files.exists(store.log.path(id)), s"tag: no snapshot $id")
     rmwRefs(store) { f =>
       val ret =
         if (maxRefAgeMs > 0L)
@@ -269,7 +237,7 @@ object Refs {
    * expiry.
    */
   def rollback(store: MetaStore, toSnapshotId: Long): Long = {
-    require(store.allSnapshotIds.contains(toSnapshotId),
+    require(Files.exists(store.log.path(toSnapshotId)),
       s"rollback: no snapshot $toSnapshotId")
     // restore the target's equality-delete set too: its entries carry their
     // original seqs, so the target's deletes land on exactly the same rows

@@ -90,13 +90,10 @@ object RemoveOrphans {
     OrphanResult(scanned, deleted, freed, removeCommitDebris(store, cutoff))
   }
 
-  /** A commit that crashed between its snap-file claim and the CURRENT
-   * rename leaves `snap-<k>.json` with k > CURRENT — unreachable, and
-   * blocking the next writer's claim of that id (MetaStore.commit allocates
-   * CURRENT + 1). A publish that crashed between its temp write and its
-   * link or rename leaves a [[MetaFs]] temp anywhere under `meta/`. Deletes
-   * such debris (and a crashed snapshot's manifests) behind the same age
-   * floor that protects in-flight commits. */
+  /** A publish that crashed between its temp write and its link or rename
+   * leaves a [[MetaFs]] temp anywhere under `meta/`. Deletes such debris
+   * behind the same age floor that protects in-flight commits. Never a
+   * `snap-*.json`: a claimed snapshot is committed ([[graft.table.MetaLog]]). */
   private def removeCommitDebris(store: MetaStore, cutoffMs: Long): Int = {
     var removed = 0
     Files.walkFileTree(Paths.get(store.tableDir, "meta"), new SimpleFileVisitor[Path] {
@@ -113,22 +110,6 @@ object RemoveOrphans {
       override def postVisitDirectory(d: Path, e: IOException): FileVisitResult =
         FileVisitResult.CONTINUE
     })
-    val cur = store.currentSnapshotId.getOrElse(return removed)
-    store.allSnapshotIds.filter(_ > cur).foreach { id =>
-      val p = Paths.get(store.tableDir, "meta", s"snap-$id.json")
-      if (Files.exists(p) && Files.getLastModifiedTime(p).toMillis < cutoffMs) {
-        val snap = store.snapshot(id)
-        // delta commits REUSE manifests by name (and inherit delete
-        // manifests) — only remove the files this crashed commit wrote
-        // itself, identified by the id baked into the name
-        val own = snap.manifests.filter(_.startsWith(s"manifest-$id-")) ++
-          snap.deleteManifests.filter(_.startsWith(s"delmanifest-$id-"))
-        Files.delete(p)
-        own.foreach(m =>
-          Files.deleteIfExists(Paths.get(store.tableDir, "meta", m)))
-        removed += 1
-      }
-    }
     removed
   }
 }

@@ -16,7 +16,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
  * summary (`streamBatchId`) and a replayed batch is detected against the
  * snapshot log and skipped — the table's own commit history is the
  * idempotence ledger, the same trick Iceberg/Delta streaming sinks use.
- * Combined with the store's atomic CURRENT swap, readers see each batch
+ * Combined with the store's atomic snapshot claim, readers see each batch
  * exactly once or not yet, never partially.
  */
 object StreamAppend {

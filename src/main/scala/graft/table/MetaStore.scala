@@ -13,15 +13,16 @@ import org.apache.spark.sql.functions._
  * Layout:
  * {{{
  *   <tableDir>/data/<snapshotTag>/...parquet   data files (immutable once committed)
- *   <tableDir>/meta/snap-<id>.json             snapshot descriptors
+ *   <tableDir>/meta/snap-<id>.json             snapshot log: a claimed id is a commit
  *   <tableDir>/meta/manifest-<id>-<uuid>.json  file lists + stats
- *   <tableDir>/meta/CURRENT                    atomic pointer (current snapshot id)
+ *   <tableDir>/meta/CURRENT                    hint: a recently committed id (may lag)
  *   <tableDir>/meta/lineage/<uuid>.jsonl       lineage/metrics rows, one file per op
  *   <tableDir>/meta/checkpoints/<runId>/       per-item completion markers
  * }}}
  *
- * Commits claim `snap-<id>.json` and then replace CURRENT, both through
- * [[MetaFs]], with a parent check between (SURVEY.md §7.5 risk item). Data
+ * The snapshot log is a [[MetaLog]]: a commit is the create-once claim of
+ * `snap-<parent+1>.json`, and the hint written after it may lag
+ * (SURVEY.md §7.5 risk item). Data
  * files are never mutated — maintenance writes new files and commits a new
  * snapshot, so a reader holding a snapshot id sees a frozen file list
  * (snapshot isolation). This is the engine analog of the reference's
@@ -50,20 +51,18 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
   Files.createDirectories(metaDir.resolve("lineage"))
   Files.createDirectories(metaDir.resolve("checkpoints"))
 
-  private def currentPath = metaDir.resolve("CURRENT")
+  private[graft] val log = new MetaLog(metaDir, "snap-")
 
-  def currentSnapshotId: Option[Long] =
-    if (Files.exists(currentPath))
-      Some(new String(Files.readAllBytes(currentPath), StandardCharsets.UTF_8).trim.toLong)
-    else None
+  def currentSnapshotId: Option[Long] = log.head
 
-  def snapshot(id: Long): Snapshot =
-    Json.readSnapshot(new String(
-      Files.readAllBytes(metaDir.resolve(s"snap-$id.json")), StandardCharsets.UTF_8))
+  private def parseSnapshot(bytes: Array[Byte]): Snapshot =
+    Json.readSnapshot(new String(bytes, StandardCharsets.UTF_8))
 
-  def currentSnapshot: Option[Snapshot] = currentSnapshotId.map(snapshot)
+  def snapshot(id: Long): Snapshot = parseSnapshot(log.read(id))
 
-  def allSnapshotIds: Seq[Long] = MetaFs.versions(metaDir, "snap-")
+  def currentSnapshot: Option[Snapshot] = log.latest.map(h => parseSnapshot(h._2))
+
+  def allSnapshotIds: Seq[Long] = log.versions
 
   def entries(snapshotId: Long): Seq[DataFile] = entriesOf(snapshot(snapshotId))
 
@@ -402,22 +401,12 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
    * Atomically commit a new snapshot holding exactly `entries`.
    * Returns the new snapshot id.
    *
-   * Cross-PROCESS safe, not just JVM-local. The id is always `parent + 1`
-   * (parent = CURRENT at entry), claimed by a create-once [[MetaFs.claim]]
-   * of `snap-<id>.json` — so the id claim IS the check-and-set: CURRENT can
-   * only ever advance to `CURRENT + 1`, and of N writers racing from the
-   * same base the filesystem admits exactly one; every loser (including one
-   * holding an arbitrarily stale base, whose `parent + 1` file already
-   * exists) gets [[ConcurrentCommitException]] and may re-read + retry.
-   * Snapshot ids therefore stay CONTIGUOUS with `parentId == id - 1` by
-   * construction — the invariant [[graft.streaming.ChangeFeed]]'s
-   * retention-gap detection relies on. One corner needs the post-claim
-   * re-check of CURRENT: a claim of an id that expiry deleted earlier (a
-   * writer stale by more than the retention window) wins the claim against
-   * a ghost — the CAS sees CURRENT ≠ parent, deletes the claim, and throws.
-   * A commit that crashes between claim and CURRENT rename leaves a
-   * snap-file > CURRENT that would block the next writer's claim;
-   * [[RemoveOrphans]] GCs such debris behind its age floor.
+   * Cross-PROCESS safe: the commit IS the create-once claim of
+   * `snap-<parent+1>.json` ([[MetaLog.append]], parent = the head at entry).
+   * Of N writers racing from one base exactly one wins; every loser, and a
+   * writer with a stale base, gets [[ConcurrentCommitException]] and may
+   * re-read + retry. Ids stay CONTIGUOUS with `parentId == id - 1`, which
+   * [[graft.streaming.ChangeFeed]]'s retention-gap detection relies on.
    */
   /** @param deletes equality-delete entries for the NEW snapshot:
    *   `None` (the default) inherits the parent's delete manifests verbatim —
@@ -431,13 +420,8 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
              summary: Map[String, String] = Map.empty,
              deletes: Option[Seq[DataFile]] = None,
              expectedParent: Option[Long] = None): Long = synchronized {
-    val parent = currentSnapshotId.getOrElse(-1L)
-    expectedParent.foreach { p =>
-      if (p != parent) throw new ConcurrentCommitException(
-        s"commit planned against snapshot $p but current is $parent")
-    }
-    val id = if (parent == -1L) 1L else parent + 1L
-    val parentSnap = if (parent == -1L) None else Some(snapshot(parent))
+    val (parent, parentSnap, parentNonce) = headFor(expectedParent)
+    val id = parent.max(0L) + 1L
     // stamp data sequence numbers: an entry carried from an older snapshot
     // arrives with its original seq (> 0, from the manifest) and keeps it; a
     // NEW entry (collectStats constructs seq = 0) gets this commit's id —
@@ -453,7 +437,7 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
     val shards = if (stamped.isEmpty) Seq(stamped) else
       stamped.grouped(manifestShardSize).toSeq
     val manifests = shards.map(writeManifest(id, _))
-    publish(operation, parent, id, manifests.map(_._1), manifests.toMap,
+    publish(operation, parent, parentNonce, id, manifests.map(_._1), manifests.toMap,
       manifests.map(_._1), deleteManifestNames(parentSnap, id, deletes),
       deletes.isDefined,
       summary ++ Map("files" -> stamped.size.toString,
@@ -503,14 +487,9 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
                   expectedParent: Option[Long] = None): Long = synchronized {
     require(deletes.isEmpty || addedDeletes.isEmpty,
       "commitDelta: pass deletes (replace) or addedDeletes (append), not both")
-    val parent = currentSnapshotId.getOrElse(-1L)
-    expectedParent.foreach { p =>
-      if (p != parent) throw new ConcurrentCommitException(
-        s"commit planned against snapshot $p but current is $parent")
-    }
-    val id = if (parent == -1L) 1L else parent + 1L
     // the parent descriptor is read ONCE per commit and passed down
-    val parentSnap = if (parent == -1L) None else Some(snapshot(parent))
+    val (parent, parentSnap, parentNonce) = headFor(expectedParent)
+    val id = parent.max(0L) + 1L
     val effDeletes: Option[Seq[DataFile]] = parentSnap match {
       case Some(p) if addedDeletes.nonEmpty =>
         Some(deleteEntriesOf(p) ++
@@ -585,7 +564,7 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
         case _ => parentEntries.map(_.sizeBytes).sum
       })
     }
-    publish(operation, parent, id, reusedNames ++ own.map(_._1),
+    publish(operation, parent, parentNonce, id, reusedNames ++ own.map(_._1),
       reusedSummaries ++ own, own.map(_._1),
       deleteManifestNames(parentSnap, id, effDeletes),
       effDeletes.isDefined,
@@ -630,7 +609,7 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
     val shards = if (es.isEmpty) Seq(es) else es.grouped(manifestShardSize).toSeq
     val manifests = shards.map(writeManifest(snapshotId, _))
     val dels = from.deleteEntriesOf(source)
-    publish("branch-fork", -1L, snapshotId, manifests.map(_._1), manifests.toMap,
+    publish("branch-fork", -1L, null, snapshotId, manifests.map(_._1), manifests.toMap,
       manifests.map(_._1),
       deleteManifestNames(None, snapshotId, if (dels.isEmpty) None else Some(dels)),
       dels.nonEmpty,
@@ -749,11 +728,23 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
         }.toSeq
     }
 
-  /** Claim snap-<id>.json, CAS CURRENT, replace CURRENT ([[MetaFs]]).
-   * `manifestSummaries` holds a summary for each manifest that has one.
-   * `ownManifests` / `ownDeletes` = files THIS commit wrote (cleaned up on
-   * failure); reused/inherited names are never touched. */
-  private def publish(operation: String, parent: Long, id: Long,
+  /** The head as a commit's parent: (id, descriptor, nonce), or (-1, None,
+   * null) on an empty log; [[ConcurrentCommitException]] if not `expected`. */
+  private def headFor(expected: Option[Long]): (Long, Option[Snapshot], String) = {
+    val head = log.latest
+    val parent = head.fold(-1L)(_._1)
+    expected.foreach { p =>
+      if (p != parent) throw new ConcurrentCommitException(
+        s"commit planned against snapshot $p but current is $parent")
+    }
+    (parent, head.map(h => parseSnapshot(h._2)), head.map(h => MetaLog.nonceOf(h._2)).orNull)
+  }
+
+  /** Append snapshot `id` on the parent whose nonce the commit read
+   * ([[MetaLog.append]]). `manifestSummaries` holds a summary for each
+   * manifest that has one. `ownManifests` / `ownDeletes` = files THIS commit
+   * wrote (deleted when it loses); reused/inherited names are never touched. */
+  private def publish(operation: String, parent: Long, parentNonce: String, id: Long,
                       manifestNames: Seq[String],
                       manifestSummaries: Map[String, ManifestSummary],
                       ownManifests: Seq[String],
@@ -761,25 +752,13 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
                       summary: Map[String, String]): Long = {
     val snap = Snapshot(id, parent, System.currentTimeMillis(), operation,
       manifestNames, summary, delManifestNames, manifestSummaries)
-    val snapPath = metaDir.resolve(s"snap-$id.json")
-    def dropOwn(): Unit =
+    if (!log.append(id - 1, parentNonce, Json.write(snap).getBytes(StandardCharsets.UTF_8))) {
       (ownManifests ++ (if (ownDeletes) delManifestNames else Nil)).foreach { n =>
         Files.deleteIfExists(metaDir.resolve(n)); forgetManifest(n)
       }
-    if (!MetaFs.claim(snapPath, Json.write(snap).getBytes(StandardCharsets.UTF_8))) {
-      dropOwn()
       throw new ConcurrentCommitException(
-        s"snapshot id $id was claimed by another writer (parent $parent)")
+        s"snapshot $id: parent $parent is no longer the head")
     }
-    // check-and-set: re-read CURRENT after winning the id claim
-    val nowParent = currentSnapshotId.getOrElse(-1L)
-    if (nowParent != parent) {
-      Files.deleteIfExists(snapPath)
-      dropOwn()
-      throw new ConcurrentCommitException(
-        s"CURRENT moved $parent -> $nowParent during commit of snapshot $id")
-    }
-    MetaFs.replace(currentPath, id.toString.getBytes(StandardCharsets.UTF_8))
     id
   }
 
@@ -874,9 +853,10 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
   }
 }
 
-/** Thrown when two writers race a commit; the loser's snapshot id claim or
- * CURRENT check-and-set failed and nothing was published. Safe to retry
- * after re-reading the table state. */
+/** Thrown when a commit's parent is no longer the log's head: another
+ * writer claimed the next snapshot id first, or the commit was planned
+ * against an older snapshot. Nothing was published. Safe to retry after
+ * re-reading the table state. */
 class ConcurrentCommitException(msg: String) extends RuntimeException(msg)
 
 object MetaStore {

@@ -243,6 +243,29 @@ class RefsSpec extends AnyFunSuite {
     assert(Refs.tags(store).keySet == (others :+ "base" :+ "mine").toSet)
   }
 
+  test("refs version-CAS: a win that sees 20 newer versions before its " +
+    "writer returns runs its body exactly once") {
+    val dir = Files.createTempDirectory("graft-refs-latewin-").toString
+    val store = MetaStore.forClips(dir)
+    Append.run(spark, store, ClipSynth.dataset(spark, 4, 1, maxDurMs = 40).toDF())
+    Refs.tag(store, "base")
+    val others = (0 until 20).map(i => s"o$i")
+    val refsDir = java.nio.file.Paths.get(dir, "meta", "refs")
+    var calls = 0
+    var landed = false
+    // right after our claim wins, 20 commits land on top of it (retiring
+    // our own version) before our writer gets to run again
+    graft.table.MetaLog.afterClaim.put(refsDir, _ =>
+      if (!landed) { landed = true; others.foreach(Refs.tag(store, _)) })
+    try Refs.rmwRefs(store) { cur =>
+      calls += 1
+      (Some(cur.copy(tags = cur.tags + ("mine" -> "1"))), ())
+    } finally graft.table.MetaLog.afterClaim.remove(refsDir)
+    assert(landed)
+    assert(calls == 1, s"a real win was re-run as a ghost (calls=$calls)")
+    assert(Refs.tags(store).keySet == (others :+ "base" :+ "mine").toSet)
+  }
+
   test("legacy refs.json: read as-is, migrated to v1 by the first " +
     "mutation, then tombstoned") {
     val dir = Files.createTempDirectory("graft-refs-legacy-").toString

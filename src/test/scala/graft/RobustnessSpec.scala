@@ -53,17 +53,17 @@ class RobustnessSpec extends AnyFunSuite {
     assert(conflicts.get() > 0,
       "barrier-aligned rounds should produce at least one detected conflict")
 
-    // crash debris: a claim without the CURRENT rename blocks the next
-    // writer's id; orphan GC clears it behind the age floor, unblocking
+    // a writer that died between its claim and its hint write has
+    // committed: the claimed snapshot above the stale hint is the head, and
+    // the next commit lands above it with no orphan GC run
     val cur = storeA.currentSnapshotId.get
-    val debris = Paths.get(dir, "meta", s"snap-${cur + 1}.json")
-    Files.write(debris, Json.write(storeA.snapshot(cur).copy(id = cur + 1))
+    val claimed = Paths.get(dir, "meta", s"snap-${cur + 1}.json")
+    Files.write(claimed, Json.write(storeA.snapshot(cur).copy(id = cur + 1, parentId = cur))
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    Files.setLastModifiedTime(debris,
+    Files.setLastModifiedTime(claimed,
       FileTime.fromMillis(System.currentTimeMillis() - 10_000))
-    intercept[graft.table.ConcurrentCommitException] {
-      storeA.commit("append", Seq.empty)
-    }
+    assert(storeA.currentSnapshotId.contains(cur + 1))
+    assert(storeA.commit("append", Seq.empty) == cur + 2)
     // a publish that crashed between its temp write and its link/rename
     // leaves a MetaFs temp; an old one is debris, a fresh one may be live
     val oldTemp = Paths.get(dir, "meta", "refs", "v3.json.tmp-0badc0de")
@@ -74,9 +74,9 @@ class RobustnessSpec extends AnyFunSuite {
       FileTime.fromMillis(System.currentTimeMillis() - 10_000))
     Files.write(freshTemp, Array[Byte](2))
     val gc = RemoveOrphans.run(storeA, minAgeMs = 5_000L)
-    assert(gc.commitDebrisDeleted == 2)
+    assert(gc.commitDebrisDeleted == 1, "only the old temp is debris")
     assert(!Files.exists(oldTemp) && Files.exists(freshTemp))
-    assert(storeA.commit("append", Seq.empty) == cur + 1)
+    assert(Files.exists(claimed), "orphan GC deleted a committed snapshot")
   }
 
   test("change feed: expired cursor/parent raises a retention error, not a crash") {
@@ -400,24 +400,23 @@ class RobustnessSpec extends AnyFunSuite {
     assert(f.statLong("missing", lower = true).isEmpty)
   }
 
-  test("commit debris above CURRENT neither shrinks retention nor gets expired") {
-    import spark.implicits._
+  test("a claimed snapshot above a stale hint is committed: expiry counts it") {
     val store = MetaStore.forClips(
-      Files.createTempDirectory("graft-exp-debris").toString)
+      Files.createTempDirectory("graft-exp-claimed").toString)
     (0 until 4).foreach { k =>
       Append.run(spark, store, ClipSynth.dataset(spark, (k + 1) * 10L, 1,
         maxDurMs = 40).toDF()
         .filter(col("clip_id") > ClipSynth.clipId(k * 10L - 1)))
     }
     val cur = store.currentSnapshotId.get // 4
-    val debris = Paths.get(store.tableDir, "meta", s"snap-${cur + 1}.json")
-    Files.write(debris, Json.write(store.snapshot(cur).copy(id = cur + 1))
+    // a writer that died between its claim and its hint write
+    val claimed = Paths.get(store.tableDir, "meta", s"snap-${cur + 1}.json")
+    Files.write(claimed, Json.write(store.snapshot(cur).copy(id = cur + 1, parentId = cur))
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     val res = ExpireSnapshots.run(store, keepLast = 3)
-    assert(res.expiredSnapshots == Seq(1L), s"window = last 3 COMMITTED snapshots: $res")
-    assert(res.retainedSnapshots == Seq(2L, 3L, 4L), s"debris must not eat a slot: $res")
-    assert(Files.exists(debris), "expiry must not touch an in-flight commit")
+    assert(res.expiredSnapshots == Seq(1L, 2L), s"window = last 3 snapshots: $res")
+    assert(res.retainedSnapshots == Seq(3L, 4L, 5L), s"the claim is committed: $res")
+    assert(Files.exists(claimed) && store.currentSnapshotId.contains(cur + 1))
     assert(store.scanCurrent(spark).count() == 40)
-    Files.delete(debris)
   }
 }
