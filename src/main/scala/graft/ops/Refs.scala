@@ -29,12 +29,11 @@ final class RefsMigratedException(msg: String) extends IllegalStateException(msg
  * tag pins its files for as long as it exists.
  *
  * Durability model: refs state is a [[MetaLog]] (`meta/refs/v<N>.json`). A
- * mutation reads the head, computes the next state and appends it
- * ([[casWrite]]); of N concurrent read-modify-writes exactly one wins each
- * version and every loser re-runs against the new head ([[rmwRefs]]), as
- * does a writer whose parent was retired while it stalled (refused by
- * parent identity). No update is lost or applied twice, and no lock is
- * needed. Tables written
+ * mutation reads the head, computes the next state and appends it; of N
+ * concurrent read-modify-writes exactly one wins each version and every
+ * loser re-runs against the new head ([[rmwRefs]]), as does a writer whose
+ * parent was retired while it stalled ([[MetaLog.append]] refuses it). No
+ * update is lost or applied twice, and no lock is needed. Tables written
  * before versioning read their legacy single `refs.json` until the first
  * mutation migrates it to v1 and replaces `refs.json` with a tombstone that
  * a pre-versioning reader fails to parse.
@@ -62,7 +61,7 @@ object Refs {
 
   /** (version, its nonce, state). Version 0 = no version yet — state comes
    * from the legacy single refs.json (or is empty) and the nonce is null;
-   * the first [[casWrite]] migrates it to v1. A parse failure means external
+   * the first write migrates it to v1. A parse failure means external
    * damage (versions are published whole), surfaced. A tombstoned refs.json
    * with no versions throws [[RefsMigratedException]]. */
   @scala.annotation.tailrec
@@ -79,43 +78,21 @@ object Refs {
           "is a migration tombstone but meta/refs/ holds no version")
     }
 
-  private[graft] def readVersioned(store: MetaStore): (Long, RefsFile) = {
-    val (v, _, f) = readHead(store)
-    (v, f)
-  }
-
   private def readFile(store: MetaStore): RefsFile = readHead(store)._3
 
-  /** Each win retires the version this far below it. */
+  /** Versions kept at and below the head; each win retires the rest. */
   private val Keep = 16
 
-  /** Publish `f` as version `expected + 1` IFF no other writer got there
-   * first ([[MetaLog.append]]); losers re-run their read-modify-write
-   * ([[rmwRefs]]). Winning v1 over a legacy refs.json tombstones it. */
-  private[graft] def casWrite(store: MetaStore, expected: Long, f: RefsFile): Boolean =
-    casWrite(store, expected, log(store).nonce(expected), f)
-
-  /** On the parent whose nonce the writer read with its state. */
-  private def casWrite(store: MetaStore, expected: Long, parentNonce: String,
-                       f: RefsFile): Boolean = {
-    val lg = log(store)
-    Files.createDirectories(lg.dir)
-    val won = lg.append(expected, parentNonce, Json.mapper.writeValueAsBytes(f))
-    if (won) {
-      if (expected == 0L && Files.exists(refsPath(store)))
-        MetaFs.replace(refsPath(store), Tombstone.getBytes(StandardCharsets.UTF_8))
-      if (expected + 1 > Keep) lg.retire(Seq(expected + 1 - Keep))
-    }
-    won
-  }
-
-  /** Run a refs read-modify-write with CAS publication: `body` maps the
-   * current state to (Some(newState) to commit | None for read-only, plus
-   * the caller's result). On a lost CAS race — another writer's win, or a
-   * parent retired while this writer stalled — the body RE-RUNS against
-   * the new head's state, so no update is ever silently clobbered. */
+  /** Run a refs read-modify-write: `body` maps the current state to
+   * (Some(newState) to commit | None for read-only, plus the caller's
+   * result). A new state is appended on the version it was computed from
+   * ([[MetaLog.append]]); winning v1 over a legacy refs.json tombstones it.
+   * On a lost race — another writer's win, or a parent retired while this
+   * writer stalled — the body RE-RUNS against the new head's state, so no
+   * update is ever silently clobbered. */
   private[graft] def rmwRefs[A](store: MetaStore)
                                (body: RefsFile => (Option[RefsFile], A)): A = {
+    val lg = log(store)
     var attempts = 0
     var out: Option[A] = None
     while (out.isEmpty) {
@@ -124,8 +101,16 @@ object Refs {
       next match {
         case None => out = Some(result)
         case Some(nf) =>
-          if (casWrite(store, v, nonce, nf)) out = Some(result)
-          else {
+          Files.createDirectories(lg.dir)
+          if (lg.append(v, nonce, Json.mapper.writeValueAsBytes(nf))) {
+            if (v == 0L && Files.exists(refsPath(store)))
+              MetaFs.replace(refsPath(store), Tombstone.getBytes(StandardCharsets.UTF_8))
+            // every older version still present, so a crash before a retire
+            // is repaired by the next win
+            lg.retire(Iterator.iterate(v + 1 - Keep)(_ - 1)
+              .takeWhile(k => k > 0 && Files.exists(lg.path(k))).toSeq)
+            out = Some(result)
+          } else {
             attempts += 1
             if (attempts > 100)
               sys.error(s"refs CAS: lost $attempts races in a row " +

@@ -1,6 +1,6 @@
 package graft.table
 
-import java.nio.file.{FileAlreadyExistsException, Files, Path, StandardCopyOption}
+import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException, Path, StandardCopyOption}
 import java.util.UUID
 
 /**
@@ -14,9 +14,9 @@ import java.util.UUID
  *    [[MetaLog]] records (snapshots, refs versions), branch records,
  *    evolution entries and lineage files use it.
  *  - [[replace]]: last writer wins. The temp is renamed over the target
- *    (rename(2) replaces atomically). The [[MetaLog]] hint, the partition
- *    spec, the sort order, checkpoint markers and payloads, and mutable
- *    records use it.
+ *    (rename(2) replaces atomically). The [[MetaLog]] hint and floor, the
+ *    partition spec, the sort order, checkpoint markers and payloads, and
+ *    mutable records use it.
  *
  * A rename is NOT a claim: on POSIX `rename` silently replaces an existing
  * target, `ATOMIC_MOVE` without `REPLACE_EXISTING` included. Temp names
@@ -28,23 +28,30 @@ object MetaFs {
     target.resolveSibling(
       s"${target.getFileName}.tmp-${UUID.randomUUID().toString.take(8)}")
 
-  private val TempName = """.+\.tmp-[0-9a-f]{8}""".r
+  private val TempName = """(.+)\.tmp-[0-9a-f]{8}""".r
 
-  /** Whether `fileName` is a publish temp (`<name>.tmp-<uuid8>`) — left
-   * behind only by a crash between its write and its link or rename. */
-  def isTemp(fileName: String): Boolean = TempName.matches(fileName)
+  /** The target a publish temp (`<name>.tmp-<uuid8>`) is for: an in-flight
+   * publish, or debris of a crash between its write and its link or rename. */
+  def tempTarget(fileName: String): Option[String] = fileName match {
+    case TempName(target) => Some(target)
+    case _ => None
+  }
 
-  /** Publish `bytes` at `target` iff nothing is there yet. False when
-   * another writer holds the name (its content is left untouched). */
-  def claim(target: Path, bytes: Array[Byte]): Boolean = {
+  def isTemp(fileName: String): Boolean = tempTarget(fileName).nonEmpty
+
+  /** Publish `bytes` at `target` iff nothing is there yet and `ready`, asked
+   * once the temp is written, holds. False when another writer holds the
+   * name (its content is left untouched), `ready` fails, or the temp was
+   * deleted before its link (which cancels an in-flight claim). */
+  def claim(target: Path, bytes: Array[Byte], ready: () => Boolean = () => true): Boolean = {
     if (Files.exists(target)) return false // cheap early-out for a loser
     val tmp = tempFor(target)
     Files.write(tmp, bytes)
-    try {
+    try ready() && {
       Files.createLink(target, tmp)
       true
     } catch {
-      case _: FileAlreadyExistsException => false
+      case _: FileAlreadyExistsException | _: NoSuchFileException => false
     } finally {
       Files.deleteIfExists(tmp)
       ()

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
  *   <tableDir>/data/<snapshotTag>/...parquet   data files (immutable once committed)
  *   <tableDir>/meta/snap-<id>.json             snapshot log: a claimed id is a commit
  *   <tableDir>/meta/manifest-<id>-<uuid>.json  file lists + stats
- *   <tableDir>/meta/CURRENT                    hint: a recently committed id (may lag)
+ *   <tableDir>/meta/HINT, FLOOR                where head lookup starts (MetaLog)
  *   <tableDir>/meta/lineage/<uuid>.jsonl       lineage/metrics rows, one file per op
  *   <tableDir>/meta/checkpoints/<runId>/       per-item completion markers
  * }}}

@@ -1,10 +1,10 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
-import graft.ops.{Append, Compact, ExpireSnapshots, MergeInto, Refs}
+import graft.ops.{Append, Compact, ExpireSnapshots, MergeInto, Refs, RefsFile}
 import graft.synth.ClipSynth
-import graft.table.MetaStore
+import graft.table.{Json, MetaLog, MetaStore}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -206,11 +206,9 @@ class RefsSpec extends AnyFunSuite {
       if (calls == 1) {
         // a conflicting writer (any concurrent refs update — there is no
         // lock, the version claim is the only arbiter) lands AFTER our
-        // read: it claims the next version, so OUR casWrite must lose and
+        // read: it claims the next version, so OUR append must lose and
         // the body must re-run against the thief's state
-        val (v, c) = Refs.readVersioned(store)
-        assert(Refs.casWrite(store, v,
-          c.copy(tags = c.tags + ("thief" -> "1"))), "conflict seed failed")
+        Refs.tag(store, "thief")
       }
       (Some(cur.copy(tags = cur.tags + ("mine" -> "1"))), ())
     }
@@ -219,9 +217,11 @@ class RefsSpec extends AnyFunSuite {
     assert(t.contains("thief") && t.contains("mine") && t.contains("base"),
       s"an update was lost: $t")
     // double-claim of one version: exactly one writer wins
-    val (v, c) = Refs.readVersioned(store)
-    assert(Refs.casWrite(store, v, c))
-    assert(!Refs.casWrite(store, v, c), "second claim of one version won")
+    val log = new MetaLog(Paths.get(dir, "meta", "refs"), "v")
+    val v = log.head.get
+    val bytes = Json.mapper.writeValueAsBytes(RefsFile(t.map { case (k, id) => k -> id.toString }))
+    assert(log.append(v, log.nonce(v), bytes))
+    assert(!log.append(v, log.nonce(v), bytes), "second claim of one version won")
   }
 
   test("refs version-CAS: a writer stalled past the retire window re-runs " +
@@ -264,6 +264,29 @@ class RefsSpec extends AnyFunSuite {
     assert(landed)
     assert(calls == 1, s"a real win was re-run as a ghost (calls=$calls)")
     assert(Refs.tags(store).keySet == (others :+ "base" :+ "mine").toSet)
+  }
+
+  test("refs version-CAS: a writer stalled between its checks and its link " +
+    "past the retire window re-runs instead of claiming a retired version") {
+    val dir = Files.createTempDirectory("graft-refs-latelink-").toString
+    val store = MetaStore.forClips(dir)
+    Append.run(spark, store, ClipSynth.dataset(spark, 4, 1, maxDurMs = 40).toDF())
+    Refs.tag(store, "base")
+    val others = (0 until 20).map(i => s"o$i")
+    val refsDir = Paths.get(dir, "meta", "refs")
+    var calls = 0
+    var landed = false
+    // our checks pass; before our link, 20 commits land and retiring old
+    // versions frees the name we are about to link
+    MetaLog.beforeLink.put(refsDir, _ =>
+      if (!landed) { landed = true; others.foreach(Refs.tag(store, _)) })
+    try Refs.rmwRefs(store) { cur =>
+      calls += 1
+      (Some(cur.copy(tags = cur.tags + ("mine" -> "1"))), ())
+    } finally MetaLog.beforeLink.remove(refsDir)
+    assert(landed && calls == 2, s"a ghost link counted as a win (calls=$calls)")
+    assert(Refs.tags(store).keySet == (others :+ "base" :+ "mine").toSet)
+    assert(!Files.exists(new MetaLog(refsDir, "v").path(2L)), "the freed name was linked")
   }
 
   test("legacy refs.json: read as-is, migrated to v1 by the first " +

@@ -67,7 +67,7 @@ class RobustnessSpec extends AnyFunSuite {
     // a publish that crashed between its temp write and its link/rename
     // leaves a MetaFs temp; an old one is debris, a fresh one may be live
     val oldTemp = Paths.get(dir, "meta", "refs", "v3.json.tmp-0badc0de")
-    val freshTemp = Paths.get(dir, "meta", "CURRENT.tmp-1234abcd")
+    val freshTemp = Paths.get(dir, "meta", "HINT.tmp-1234abcd")
     Files.createDirectories(oldTemp.getParent)
     Files.write(oldTemp, Array[Byte](1))
     Files.setLastModifiedTime(oldTemp,
