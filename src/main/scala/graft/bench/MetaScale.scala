@@ -174,7 +174,6 @@ object MetaScale {
       // MB/s; it extrapolates linearly in shard bytes by construction).
       val bloomFiles = math.min(k, 16000L).toInt
       val perShard = bloomFiles / 16
-      import spark.implicits._
       val livePathSeq = (0L until bloomFiles * 4L / 5L).map(synthEntry(_, 1L).path)
       val deadPaths = (0 until bloomFiles / 5).map(i => s"/warehouse/clips/data/dead/part-$i.parquet")
       val bloomBytes = {
@@ -184,9 +183,7 @@ object MetaScale {
       }
       (0 until 16).foreach { sh =>
         val slice = (livePathSeq ++ deadPaths).drop(sh * perShard).take(perShard)
-        FileBloom.writeShard(store,
-          slice.toDF("_file").withColumn("_bloom",
-            org.apache.spark.sql.functions.lit(bloomBytes)))
+        FileBloom.writeShard(store, slice.map(_ -> bloomBytes))
       }
       val (foldRes, tBloomFold) = time(FileBloom.compact(spark, store))
       val foldMb = 16.0 * perShard * bloomBytes.length / 1e6

@@ -162,7 +162,7 @@ object Branches {
     require(!Files.exists(recordPath(main, name)),
       s"branch '$name' already exists")
     val dir = branchDir(main, name)
-    if (Files.exists(dir)) deleteTree(dir) // unrecorded leftover: condemned
+    MetaFs.deleteTree(dir) // an unrecorded leftover is condemned
     val b = new MetaStore(dir.toString, main.statsColumns,
       Some(Paths.get(main.tableDir, "data").toString))
     b.bloomColumn = main.bloomColumn
@@ -444,15 +444,7 @@ object Branches {
     require(force || merged(main, name),
       s"branch '$name' has unmerged commits; fast-forward first or force")
     Files.deleteIfExists(recordPath(main, name))
-    deleteTree(branchDir(main, name))
-  }
-
-  private def deleteTree(d: JPath): Unit = {
-    if (!Files.exists(d)) return
-    val stream = Files.walk(d)
-    try stream.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(Files.deleteIfExists(_))
-    finally stream.close()
+    MetaFs.deleteTree(branchDir(main, name))
   }
 
   /** Force-drop every branch whose age exceeds its declared maxRefAgeMs

@@ -113,14 +113,12 @@ object Cluster {
   private def writeCurveFiles(spark: SparkSession, store: MetaStore,
                               keyed: org.apache.spark.sql.DataFrame,
                               nFiles: Int, outDir: String): Seq[graft.table.DataFile] = {
-    val tq0 = System.nanoTime()
     val probs = (1 until nFiles).map(_.toDouble / nFiles).toArray
     val bounds: Array[Long] =
       if (nFiles <= 1) Array.empty
       else keyed.select("_ckey").stat
         .approxQuantile("_ckey", probs, 0.001)
         .map(_.toLong).distinct.sorted
-    System.err.println(f"[cluster] quantile pass ${(System.nanoTime()-tq0)/1e9}%.1f s")
     val n = bounds.length + 1
     // Collision-free reducer assignment: pick one int token per key range
     // such that Spark's HashPartitioning (murmur3 seed 42, pmod n) sends
@@ -163,7 +161,6 @@ object Cluster {
     // fan each key range out per tuple (Iceberg fanout writer) — the
     // rewrite preserves exact partition pruning, and within each tuple
     // every file still covers one contiguous key range.
-    val tw0 = System.nanoTime()
     val pfields = store.partitionSpec.map(_.fields).getOrElse(Nil)
     val pnames = pfields.map(graft.table.Partitioning.ColPrefix + _.name)
     val assigned = keyed.withColumn("_file", assign(col("_ckey")))
@@ -176,11 +173,7 @@ object Cluster {
       .sortWithinPartitions(("_file" +: pnames :+ "_ckey").map(col): _*)
       .drop("_ckey")
       .write.mode("overwrite").partitionBy("_file" +: pnames: _*).parquet(outDir)
-    System.err.println(f"[cluster] shuffle+sort+write ${(System.nanoTime()-tw0)/1e9}%.1f s")
-    val ts0 = System.nanoTime()
-    val st = store.collectStats(spark, outDir)
-    System.err.println(f"[cluster] stats pass ${(System.nanoTime()-ts0)/1e9}%.1f s")
-    st
+    store.collectStats(spark, outDir)
   }
 
   def run(spark: SparkSession, store: MetaStore,
@@ -288,6 +281,7 @@ object Cluster {
       "batches" -> batches.toString,
       "filesBefore" -> entries.size.toString),
       expectedParent = Some(snapId))
+    store.dropCheckpoints(runId)
     ClusterResult(newSnap, runId, entries.size, newEntries.size,
       newEntries.map(_.rows).sum, curve.toString)
   }
@@ -383,7 +377,6 @@ object Cluster {
         .filter(_.forall(e =>
           java.nio.file.Files.exists(java.nio.file.Paths.get(e.path))))
       val es = intact.getOrElse {
-        val tg0 = System.nanoTime()
         val df = Deletes.readFiles(spark, store, snapId, group)
         val key = keyColumn(curve, hashCols.map(col),
           scaledRangeCols(group, rangeCols, bitsPerDim), bitsPerDim)
@@ -393,8 +386,6 @@ object Cluster {
           nFiles, s"$outDir/group=$gi")
         store.saveItemResult(runId, item, graft.table.Json.write(res))
         store.markDone(runId, item)
-        System.err.println(f"[cluster-inc] group $gi: ${group.size} files -> " +
-          f"${res.size} in ${(System.nanoTime()-tg0)/1e9}%.1f s")
         res
       }
       lineageBuf ++= es.zipWithIndex.map { case (e, p) =>
@@ -416,6 +407,7 @@ object Cluster {
         "groupsRewritten" -> toRewrite.size.toString,
         "filesRewritten" -> rewrittenPaths.size.toString,
         "filesKept" -> (entries.size - rewrittenPaths.size).toString))
+    store.dropCheckpoints(runId)
     IncClusterResult(newSnap, runId, toRewrite.size, rewrittenPaths.size,
       entries.size - rewrittenPaths.size, added.size,
       added.map(_.rows).sum, curve.toString)

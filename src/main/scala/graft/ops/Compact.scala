@@ -233,6 +233,7 @@ object Compact {
         "binsRewritten" -> toRewrite.size.toString,
         "filesBefore" -> entries.size.toString,
         "filesAfter" -> filesAfter.toString))
+    store.dropCheckpoints(runId)
     CompactResult(newSnap, runId, entries.size, filesAfter,
       toRewrite.size, skipped, newEntries.map(_.rows).sum)
   }

@@ -72,6 +72,11 @@ object ExpireSnapshots {
       ids.flatMap(id => snaps(id).manifests ++ snaps(id).deleteManifests).toSet
     val reachableManifests = names(retained)
     val doomed = names(expired) -- reachableManifests
+    // the records go BEFORE any file they name: a crash after this point
+    // leaves only unreferenced manifests and data files (orphan GC takes
+    // the data files), never a record naming a deleted manifest, which
+    // every later expiry and orphan GC would fail to read
+    store.log.retire(expired)
 
     var dataDeleted = 0
     var manifestsDeleted = 0
@@ -104,7 +109,6 @@ object ExpireSnapshots {
         store.forgetManifest(m)
       }
     }
-    store.log.retire(expired)
     ExpireResult(expired, retained, dataDeleted, manifestsDeleted,
       droppedTags, droppedBranches)
   }

@@ -8,6 +8,9 @@ import graft.table.{MetaFs, MetaStore}
 
 import scala.jdk.CollectionConverters._
 
+/** @param commitDebrisDeleted publish temps under `meta/` plus bloom
+ *   staging shards ([[graft.table.FileBloom.newStaging]]) whose writer died
+ *   before it published them. */
 final case class OrphanResult(scanned: Int, orphansDeleted: Int, bytesFreed: Long,
                               commitDebrisDeleted: Int = 0)
 
@@ -87,7 +90,8 @@ object RemoveOrphans {
         }
       }
     } finally stream.close()
-    OrphanResult(scanned, deleted, freed, removeCommitDebris(store, cutoff))
+    OrphanResult(scanned, deleted, freed, removeCommitDebris(store, cutoff) +
+      graft.table.FileBloom.removeStaleStaging(store, cutoff))
   }
 
   /** A publish that crashed between its temp write and its link or rename
@@ -103,8 +107,8 @@ object RemoveOrphans {
           removed += 1
         FileVisitResult.CONTINUE
       }
-      // live writers remove their own temps and bloom shards' `_temporary`
-      // dirs while the walk runs: a vanished entry is not an error
+      // live writers remove their own temps and publish their staging
+      // shards while the walk runs: a vanished entry is not an error
       override def visitFileFailed(p: Path, e: IOException): FileVisitResult =
         FileVisitResult.CONTINUE
       override def postVisitDirectory(d: Path, e: IOException): FileVisitResult =

@@ -1,7 +1,6 @@
 package graft.table
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructType}
 
@@ -20,8 +19,10 @@ import scala.util.hashing.MurmurHash3
  * independent of ordering.
  *
  * Storage: a parquet side-table `meta/blooms/<uuid>/` of (path, bloom) rows,
- * one write per maintenance output dir (unique subdir per call — concurrent
- * bins never race a shared committer dir). Readers load it as ONE Spark scan
+ * one shard per maintenance output dir (unique subdir per call — concurrent
+ * bins never race a shared dir). A shard is built under
+ * `meta/blooms-staging/` and moved into `meta/blooms/` in one atomic rename,
+ * so readers never list a partial one. Readers load it as ONE Spark scan
  * and evaluate membership DISTRIBUTED, collecting only the surviving paths —
  * at 10^6 files the driver never holds 10^6 blooms.
  *
@@ -70,51 +71,80 @@ object FileBloom {
     out.array()
   }
 
-  /** Typed UDAF building one bloom per group (file) — distributed, one pass. */
-  final class BloomAgg(nBits: Int) extends Aggregator[String, Array[Long], Array[Byte]] {
-    def zero: Array[Long] = new Array[Long](nBits / 64)
-    def reduce(b: Array[Long], a: String): Array[Long] = {
-      if (a != null) add(b, a)
-      b
-    }
-    def merge(x: Array[Long], y: Array[Long]): Array[Long] = {
-      var i = 0
-      while (i < x.length) { x(i) |= y(i); i += 1 }
-      x
-    }
-    def finish(b: Array[Long]): Array[Byte] = pack(b)
-    def bufferEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
   private def bloomRoot(store: MetaStore): java.nio.file.Path =
     java.nio.file.Paths.get(store.tableDir, "meta", "blooms")
 
-  /** Aggregation column building one bloom per file group — composed into
-   * [[MetaStore.collectStats]]'s single grouped pass so a maintenance
-   * output is scanned ONCE for stats + blooms (the r3 separate
-   * `FileBloom.write` pass re-read every output and cost the scaling
-   * bench's cluster phase ~1.6x). */
-  def aggColumn(keyCol: org.apache.spark.sql.Column,
-                nBits: Int = DefaultBits): org.apache.spark.sql.Column =
-    udaf(new BloomAgg(nBits)).apply(keyCol.cast("string")).as("_bloom")
+  /** Where shards are built before [[publish]] moves them into
+   * `meta/blooms/`, so no reader ever lists a partial shard. */
+  private[graft] def stagingRoot(store: MetaStore): java.nio.file.Path =
+    java.nio.file.Paths.get(store.tableDir, "meta", "blooms-staging")
 
-  /**
-   * Persist one shard of per-file blooms from an already-aggregated frame
-   * of (`_file` = raw input_file_name, `_bloom`) rows. A unique subdir per
-   * call keeps concurrent compaction bins from racing one committer
-   * directory.
-   */
-  def writeShard(store: MetaStore, grouped: DataFrame): Unit = {
-    val out = bloomRoot(store).resolve(
-      java.util.UUID.randomUUID().toString.take(12))
-    // decode the URI-encoded input_file_name to the filesystem form the
-    // manifests store (static function: no MetaStore instance captured);
-    // runs once per FILE-group row, not per data row
-    val norm = udf((p: String) => MetaStore.decodePath(p)).apply(col("_file"))
-    grouped.select(norm.as("path"), col("_bloom").as("bloom"))
-      .write.mode("overwrite").parquet(out.toString)
+  /** A fresh, empty staging shard directory. */
+  def newStaging(store: MetaStore): java.nio.file.Path =
+    java.nio.file.Files.createDirectories(stagingRoot(store).resolve(
+      java.util.UUID.randomUUID().toString.take(12)))
+
+  /** Publish a staged shard with one atomic directory move; a shard with
+   * no file (no output had the key column) is dropped instead. */
+  def publish(store: MetaStore, staged: java.nio.file.Path): Unit =
+    if (FileStats.dataFiles(staged).isEmpty) MetaFs.deleteTree(staged)
+    else {
+      val root = java.nio.file.Files.createDirectories(bloomRoot(store))
+      MetaFs.moveInto(staged, root.resolve(staged.getFileName))
+    }
+
+  private val ShardSchema: org.apache.parquet.schema.MessageType = {
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.BINARY
+    Types.buildMessage()
+      .optional(BINARY).as(LogicalTypeAnnotation.stringType()).named("path")
+      .optional(BINARY).named("bloom")
+      .named("spark_schema")
+  }
+
+  /** Write (path, bloom) rows as ONE parquet file with parquet-mr (no
+   * Hadoop FS): built under a hidden name and renamed into place, so a
+   * retried task replaces its file instead of adding a torn one. */
+  def writeFile(file: String, rows: Seq[(String, Array[Byte])]): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroup
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    val dst = java.nio.file.Paths.get(file)
+    val tmp = dst.resolveSibling(s".${dst.getFileName}.${java.util.UUID.randomUUID()}")
+    val w = ExampleParquetWriter.builder(new org.apache.parquet.io.LocalOutputFile(tmp))
+      .withConf(new org.apache.parquet.conf.PlainParquetConfiguration())
+      .withType(ShardSchema)
+      .withCompressionCodec(org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
+      .build()
+    try rows.foreach { case (p, b) =>
+      val g = new SimpleGroup(ShardSchema)
+      g.add("path", p)
+      g.add("bloom", org.apache.parquet.io.api.Binary.fromConstantByteArray(b))
+      w.write(g)
+    } finally w.close()
+    MetaFs.moveInto(tmp, dst)
+  }
+
+  /** One shard of (path, bloom) rows written on the driver. */
+  def writeShard(store: MetaStore, rows: Seq[(String, Array[Byte])]): Unit = {
+    val staged = newStaging(store)
+    writeFile(staged.resolve("part-0.parquet").toString, rows)
+    publish(store, staged)
+  }
+
+  /** Staging shards of writers that died before [[publish]]: deletes those
+   * last modified before `cutoffMs`. Returns how many it deleted. */
+  def removeStaleStaging(store: MetaStore, cutoffMs: Long): Int = {
+    import scala.jdk.CollectionConverters._
+    val root = stagingRoot(store)
+    if (!java.nio.file.Files.isDirectory(root)) return 0
+    val s = java.nio.file.Files.list(root)
+    // a writer publishing meanwhile moves its shard away: not stale
+    val stale = try s.iterator().asScala.filter(d =>
+      try java.nio.file.Files.getLastModifiedTime(d).toMillis < cutoffMs
+      catch { case _: java.nio.file.NoSuchFileException => false }).toList
+    finally s.close()
+    stale.foreach(MetaFs.deleteTree)
+    stale.size
   }
 
   def hasBlooms(store: MetaStore): Boolean = {
@@ -153,7 +183,6 @@ object FileBloom {
    */
   def compact(spark: SparkSession, store: MetaStore): BloomCompaction = {
     import scala.jdk.CollectionConverters._
-    val root = bloomRoot(store)
     val shards = shardDirs(store)
     if (shards.size <= 1)
       return BloomCompaction(shards.size, shards.size, 0L, 0L)
@@ -161,8 +190,6 @@ object FileBloom {
     // fewer folded rows (conservative), not kill this pass mid-scan
     val all = spark.read.option("ignoreMissingFiles", "true")
       .parquet(shards.map(_.toString): _*)
-    val total = all.count()
-    val out = root.resolve(java.util.UUID.randomUUID().toString.take(12))
     // live-path frame: above the planning threshold the manifest parse runs
     // in EXECUTORS (PlanScan.livePathsDF) — at 10^7 entries the old
     // store.entries() materialized every DataFile driver-side (~60 s of a
@@ -181,16 +208,19 @@ object FileBloom {
             org.apache.spark.sql.Encoders.STRING).toDF("path")
         }
     }
+    // the report's row counts come from the footers, not two count() jobs;
+    // a shard a concurrent fold deleted meanwhile counts as empty
+    def rows(dir: java.nio.file.Path): Long =
+      try FileStats.dataFiles(dir).map(FileStats.rowCount).sum
+      catch { case _: java.nio.file.NoSuchFileException => 0L }
+    val total = shards.map(rows).sum
+    val staged = newStaging(store)
     all.join(liveDf, Seq("path"), "inner")
       .dropDuplicates("path")
-      .write.mode("overwrite").parquet(out.toString)
-    val kept = spark.read.parquet(out.toString).count()
-    shards.foreach { d =>
-      val w = java.nio.file.Files.walk(d)
-      try w.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally w.close()
-    }
+      .write.mode("overwrite").parquet(staged.toString)
+    val kept = rows(staged)
+    publish(store, staged)
+    shards.foreach(MetaFs.deleteTree)
     BloomCompaction(shards.size, 1, kept, total - kept)
   }
 

@@ -17,6 +17,8 @@ import java.util.UUID
  *    (rename(2) replaces atomically). The [[MetaLog]] hint and floor, the
  *    partition spec, the sort order, checkpoint markers and payloads, and
  *    mutable records use it.
+ *  - [[moveInto]]: a file or directory built aside is renamed into place
+ *    (bloom shards and their part files).
  *
  * A rename is NOT a claim: on POSIX `rename` silently replaces an existing
  * target, `ATOMIC_MOVE` without `REPLACE_EXISTING` included. Temp names
@@ -72,6 +74,14 @@ object MetaFs {
     ()
   }
 
+  /** Move `built`, a file or directory written aside, to `target` in one
+   * atomic rename, replacing a file there (a directory `target` must be
+   * absent). Bloom shards and their part files publish this way. */
+  def moveInto(built: Path, target: Path): Unit = {
+    Files.move(built, target, StandardCopyOption.ATOMIC_MOVE)
+    ()
+  }
+
   /** The N of every `<prefix><N>.json` in `dir`, ascending (empty when the
    * directory does not exist). */
   def versions(dir: Path, prefix: String): Seq[Long] = {
@@ -87,5 +97,12 @@ object MetaFs {
       }
       out.sorted.toSeq
     } finally s.close()
+  }
+
+  /** Delete `d` and everything under it; an absent `d` is fine. */
+  def deleteTree(d: Path): Unit = if (Files.exists(d)) {
+    val w = Files.walk(d)
+    try w.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.deleteIfExists(p))
+    finally w.close()
   }
 }

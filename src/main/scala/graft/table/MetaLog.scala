@@ -126,6 +126,7 @@ final class MetaLog(val dir: Path, prefix: String) {
       .foreach(Files.deleteIfExists(_))
     finally s.close()
     vs.foreach(v => Files.deleteIfExists(path(v)))
+    seam(MetaLog.afterRetire, vs.max)
   }
 }
 
@@ -148,7 +149,9 @@ object MetaLog {
 
   /** Fault-injection seams, keyed by log directory and called with the
    * version a writer is claiming: between its checks and its link, and
-   * after a won claim, before the hint write. */
+   * after a won claim, before the hint write; and with the newest retired
+   * version once [[MetaLog.retire]] has deleted its versions. */
   private[graft] val beforeLink = new ConcurrentHashMap[Path, Long => Unit]()
   private[graft] val afterClaim = new ConcurrentHashMap[Path, Long => Unit]()
+  private[graft] val afterRetire = new ConcurrentHashMap[Path, Long => Unit]()
 }

@@ -318,77 +318,42 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
 
   /**
    * Collect manifest entries for every parquet file under `dir` (recursive):
-   * per-file min/max/nullCount for `statsColumns` + row count, via ONE
-   * column-pruned Spark scan grouped by `input_file_name()` — the distributed
-   * analog of the reference's single-pass `featureRange` stats
-   * (vector-like/src/main/java/vec/ml/FeatureRange.kt:14-33).
+   * per-file row count and min/max/nullCount for `statsColumns`, plus the
+   * per-file key bloom ([[FileBloom]]), in ONE map-only Spark job with no
+   * shuffle. Each task opens its files with parquet-mr ([[FileStats]]):
+   * rows and integral/UTF-8 bounds come from the footers the writer filled
+   * (Iceberg writers likewise record column metrics instead of rescanning);
+   * other types, and the bloom key, are decoded from their column chunks
+   * alone, never the payload. Each task writes its (path, bloom) rows as
+   * one parquet file into a staging shard, which the driver moves into
+   * `meta/blooms/` in one atomic rename after the job. Entries are sorted
+   * by path; zero-row files are left out.
    */
   def collectStats(spark: SparkSession, dir: String): Seq[DataFile] = {
+    val files = FileStats.dataFiles(Paths.get(dir))
     // a PARTITIONED write of an empty batch produces zero files (the
     // dynamic-partition writer has no tuple to open a file for, unlike the
-    // plain writer's schema-bearing empty part file) — an empty append must
-    // commit zero entries, not crash schema inference
-    val hasParquet = {
-      val s = Files.walk(Paths.get(dir))
-      try s.anyMatch(p => p.toString.endsWith(".parquet")) finally s.close()
-    }
-    if (!hasParquet) return Seq.empty
-    val df = spark.read.parquet(dir)
-    val present = statsColumns.filter(df.columns.contains)
-    val numeric = present.filter { c =>
-      df.schema(c).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]
-    }.toSet
-    // bloom maintenance rides the SAME grouped pass as the stats: the
-    // output dir is scanned once, with the per-file key bloom as one more
-    // aggregate column (an r3 separate bloom pass re-read every maintenance
-    // output and cost the scaling bench's cluster phase ~1.6x)
-    val bloomKey = bloomColumn.filter(df.columns.contains)
-    val aggs = present.flatMap { c =>
-      Seq(min(col(c)).cast("string").as(s"min_$c"),
-          max(col(c)).cast("string").as(s"max_$c"),
-          sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"nulls_$c"))
-    } ++ Seq(count(lit(1)).as("_rows")) ++
-      bloomKey.map(c => FileBloom.aggColumn(col(c))).toSeq
-    val grouped = df
-      .withColumn("_file", input_file_name())
-      .groupBy(col("_file"))
-      .agg(aggs.head, aggs.tail: _*)
-    val rows = bloomKey match {
-      case Some(_) =>
-        // two consumers (bloom side-table write + driver stats collect) of
-        // one data scan: cache the grouped rows — #files x ~16 KiB,
-        // distributed — so the underlying output dir is read exactly once
-        grouped.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          FileBloom.writeShard(this, grouped.select(col("_file"), col("_bloom")))
-          grouped.drop("_bloom").collect()
-        } finally {
-          grouped.unpersist()
-          ()
-        }
-      case None => grouped.collect()
-    }
-    rows.map { r =>
-      val rawPath = r.getAs[String]("_file")
-      val path = normalizePath(rawPath)
-      val stats = present.map { c =>
-        c -> ColStat(
-          Option(r.getAs[String](s"min_$c")).getOrElse(""),
-          Option(r.getAs[String](s"max_$c")).getOrElse(""),
-          numeric.contains(c),
-          r.getAs[Long](s"nulls_$c"))
-      }.toMap
-      DataFile(path, r.getAs[Long]("_rows"), fileSize(path), stats,
-        partition = Partitioning.tupleOf(path))
-    }.toSeq.sortBy(_.path)
+    // plain writer's schema-bearing empty part file) — an empty append
+    // commits zero entries and writes no shard
+    if (!files.exists(_.endsWith(".parquet"))) return Seq.empty
+    val staged = bloomColumn.map(_ => FileBloom.newStaging(this))
+    val cols = statsColumns
+    val key = bloomColumn
+    val tz = spark.sessionState.conf.sessionLocalTimeZone
+    val stagedDir = staged.map(_.toString)
+    try {
+      val entries = spark.sparkContext
+        .parallelize(files, math.min(files.size, spark.sparkContext.defaultParallelism))
+        .mapPartitionsWithIndex { (i, it) =>
+          FileStats.collect(it.toSeq, cols, key, tz,
+            stagedDir.map(d => s"$d/part-$i.parquet")).iterator
+        }.collect()
+      staged.foreach(FileBloom.publish(this, _))
+      entries.toSeq.sortBy(_.path)
+    } finally staged.foreach(MetaFs.deleteTree) // gone once published
   }
 
   def normalizePath(p: String): String = MetaStore.decodePath(p)
-
-  private def fileSize(path: String): Long = {
-    val f = new java.io.File(path)
-    if (f.exists()) f.length() else -1L
-  }
 
   /** Max data-file entries per manifest shard. One giant JSON manifest
    * makes the driver's commit/read O(table files) in a single blob — at
@@ -829,17 +794,22 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
   }
 
   // ---- checkpoints (resumable maintenance) ----
-  def checkpointDir(runId: String): JPath = {
-    val d = metaDir.resolve("checkpoints").resolve(runId)
-    Files.createDirectories(d)
-    d
-  }
+  private def checkpointPath(runId: String): JPath =
+    metaDir.resolve("checkpoints").resolve(runId)
+
+  private def checkpointDir(runId: String): JPath =
+    Files.createDirectories(checkpointPath(runId))
 
   def markDone(runId: String, item: String): Unit =
     MetaFs.replace(checkpointDir(runId).resolve(s"done-$item"), Array.emptyByteArray)
 
   def isDone(runId: String, item: String): Boolean =
-    Files.exists(checkpointDir(runId).resolve(s"done-$item"))
+    Files.exists(checkpointPath(runId).resolve(s"done-$item"))
+
+  /** Forget a run's checkpoints once its commit has landed: its outputs
+   * are snapshot-reachable from then on, so they no longer need to be
+   * orphan-GC roots, and a rerun under the same id starts afresh. */
+  def dropCheckpoints(runId: String): Unit = MetaFs.deleteTree(checkpointPath(runId))
 
   def saveItemResult(runId: String, item: String, payload: String): Unit =
     MetaFs.replace(checkpointDir(runId).resolve(s"result-$item"),
@@ -847,7 +817,7 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
 
   /** Read back a per-item payload written by [[saveItemResult]]. */
   def itemResult(runId: String, item: String): Option[String] = {
-    val p = checkpointDir(runId).resolve(s"result-$item")
+    val p = checkpointPath(runId).resolve(s"result-$item")
     if (Files.exists(p)) Some(new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
     else None
   }

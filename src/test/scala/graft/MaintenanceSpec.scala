@@ -9,6 +9,8 @@ import graft.verify.ScanEquality
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 /**
  * The SURVEY.md §7.4 end-to-end slice: synthesize -> S0 (many small files) ->
  * compact -> cluster(Z) -> every snapshot scan-equal (SNR>=30dB + transcript)
@@ -148,22 +150,27 @@ class MaintenanceSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-resume-").toString
     val store = MetaStore.forClips(dir)
     Append.run(spark, store, ClipSynth.dataset(spark, 400, 12, maxDurMs = 100).toDF())
-    val r1 = Compact.run(spark, store, targetBytes = 1L * 1024 * 1024,
+    // the markers live until the run's commit lands: list them between the
+    // commit's checks and its link
+    val cp = java.nio.file.Paths.get(dir, "meta", "checkpoints", "resume-run")
+    var atCommit = Seq.empty[String]
+    graft.table.MetaLog.beforeLink.put(store.log.dir, _ => if (atCommit.isEmpty) {
+      val s = Files.list(cp)
+      try atCommit = s.iterator().asScala.map(_.getFileName.toString).toSeq
+      finally s.close()
+    })
+    val r1 = try Compact.run(spark, store, targetBytes = 1L * 1024 * 1024,
       runId = "resume-run")
+    finally graft.table.MetaLog.beforeLink.remove(store.log.dir)
     assert(r1.binsSkippedByCheckpoint === 0)
     // same runId again: every bin already checkpointed
     val r2 = Compact.run(spark, store, targetBytes = 64L * 1024 * 1024,
       runId = "resume-run2")
-    // checkpoint markers are content-scoped: a done marker exists for run 1
-    val doneMarkers = java.nio.file.Files.list(
-      store.checkpointDir("resume-run")).iterator()
-    var sawDone = false
-    while (doneMarkers.hasNext) {
-      val n = doneMarkers.next().getFileName.toString
-      if (n.startsWith("done-bin-0-")) sawDone = true
-      assert(!MetaFs.isTemp(n), s"checkpoint publish left a temp: $n")
-    }
-    assert(sawDone, "no content-scoped done marker for bin 0")
+    // checkpoint markers are content-scoped: a done marker existed for run 1
+    atCommit.foreach(n => assert(!MetaFs.isTemp(n), s"checkpoint publish left a temp: $n"))
+    assert(atCommit.exists(_.startsWith("done-bin-0-")),
+      s"no content-scoped done marker for bin 0: $atCommit")
+    assert(!Files.exists(cp), "a committed run's checkpoints are dropped")
     // replaying run 1's id against the SAME layout skips; against a CHANGED
     // layout the content hash differs, so stale results cannot resurrect
     // (regression for the stale-checkpoint hazard found in round-1 verify)
@@ -316,5 +323,29 @@ class MaintenanceSpec extends AnyFunSuite {
     val res2 = MergeInto.run(spark, store, ins, runId = "mp-insert")
     assert(store.snapshot(res2.snapshotId).summary("filesScannedForDiscovery").toInt == 0)
     assert(store.scanCurrent(spark).count() === 2005)
+  }
+
+  test("committed compact and cluster runs drop their checkpoint directories") {
+    val dir = Files.createTempDirectory("graft-cpdrop-").toString
+    val store = MetaStore.forClips(dir)
+    (0 until 3).foreach(i => Append.run(spark, store,
+      ClipSynth.dataset(spark, 60, 2, maxDurMs = 150).toDF()
+        .withColumn("clip_id", concat(lit(s"b${i}_"), col("clip_id")))))
+    val cpRoot = java.nio.file.Paths.get(dir, "meta", "checkpoints")
+    def runDirs: Seq[String] = {
+      val s = Files.list(cpRoot)
+      try s.iterator().asScala.map(_.getFileName.toString).toSeq finally s.close()
+    }
+    val inc = Cluster.incremental(spark, store, ZOrderCurve, runId = "cp-inc")
+    assert(inc.groupsRewritten > 0)
+    assert(runDirs.isEmpty, s"after incremental cluster: $runDirs")
+    Append.run(spark, store, ClipSynth.dataset(spark, 20, 2, maxDurMs = 150).toDF()
+      .withColumn("clip_id", concat(lit("c_"), col("clip_id"))))
+    val cmp = Compact.run(spark, store, targetBytes = 64L * 1024 * 1024, runId = "cp-compact")
+    assert(cmp.binsRewritten > 0)
+    assert(runDirs.isEmpty, s"after compact: $runDirs")
+    Cluster.run(spark, store, ZOrderCurve, targetBytes = 256L * 1024,
+      runId = "cp-cluster", batches = 2)
+    assert(runDirs.isEmpty, s"after batched cluster: $runDirs")
   }
 }

@@ -132,6 +132,31 @@ class RobustnessSpec extends AnyFunSuite {
     assert(res.orphansDeleted == 1)
   }
 
+  test("expiry that dies right after retiring its records leaves only orphans") {
+    val dir = Files.createTempDirectory("graft-expirecrash-").toString
+    val store = MetaStore.forClips(dir)
+    (0 until 3).foreach(i => Append.run(spark, store,
+      ClipSynth.dataset(spark, 10, 1, maxDurMs = 120).toDF()
+        .withColumn("clip_id", concat(lit(s"e${i}_"), col("clip_id")))))
+    val old = store.entries(store.currentSnapshotId.get).map(_.path)
+    val head = Compact.run(spark, store, targetBytes = 64L * 1024 * 1024).snapshotId
+    val manifests = (1L until head).flatMap(id => store.snapshot(id).manifests).distinct
+    // the process dies right after the retire, before any delete
+    graft.table.MetaLog.afterRetire.put(store.log.dir, _ => throw new IllegalStateException("crash"))
+    try intercept[IllegalStateException] { ExpireSnapshots.run(store, keepLast = 1) }
+    finally graft.table.MetaLog.afterRetire.remove(store.log.dir)
+    assert(store.allSnapshotIds == Seq(head))
+    assert(old.forall(p => Files.exists(Paths.get(p))), "no data file deleted yet")
+    assert(manifests.forall(m => Files.exists(Paths.get(dir, "meta", m))),
+      "no manifest deleted yet")
+    // no record names a missing manifest, so both GCs read every snapshot
+    assert(ExpireSnapshots.run(store, keepLast = 1).expiredSnapshots.isEmpty)
+    val gc = RemoveOrphans.run(store, minAgeMs = 0L)
+    assert(gc.orphansDeleted == old.size)
+    assert(old.forall(p => !Files.exists(Paths.get(p))))
+    assert(store.scanCurrent(spark).count() == 30L)
+  }
+
   test("CDC detects a value moving between columns with compensating nulls") {
     val dir = Files.createTempDirectory("graft-nullcdc-").toString
     val store = new MetaStore(dir, Seq("clip_id"))

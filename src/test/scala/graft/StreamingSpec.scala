@@ -63,23 +63,29 @@ class StreamingSpec extends AnyFunSuite {
     graft.ops.Append.run(spark, store,
       graft.synth.ClipSynth.dataset(spark, 1200, 12, maxDurMs = 150).toDF())
     val s0 = store.currentSnapshotId.get
-    val res = graft.ops.Cluster.run(spark, store, graft.ops.ZOrderCurve,
+    // the markers live until the run's commit lands: list them between the
+    // commit's checks and its link
+    val cp = java.nio.file.Paths.get(dir, "meta", "checkpoints", "batch-clust")
+    var atCommit = Seq.empty[String]
+    graft.table.MetaLog.beforeLink.put(store.log.dir, _ => if (atCommit.isEmpty) {
+      val s = Files.list(cp)
+      try {
+        import scala.jdk.CollectionConverters._
+        atCommit = s.iterator().asScala.map(_.getFileName.toString).toSeq
+      } finally s.close()
+    })
+    val res = try graft.ops.Cluster.run(spark, store, graft.ops.ZOrderCurve,
       targetBytes = 1L * 1024 * 1024, runId = "batch-clust", batches = 3)
+    finally graft.table.MetaLog.beforeLink.remove(store.log.dir)
     val rep = graft.verify.ScanEquality.report(
       graft.verify.ScanEquality.compareSnapshots(spark, store, s0, res.snapshotId))
     assert(rep.allPass, s"$rep")
     // resume: re-running the same runId against the SAME base plan skips
     // every batch — markers are keyed batch-<i>-<planHash> so a resume whose
     // base snapshot moved re-runs instead of resurrecting stale outputs
-    val doneMarkers = {
-      val s = Files.list(store.checkpointDir("batch-clust"))
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.map(_.getFileName.toString)
-          .filter(_.startsWith("done-batch-")).toSeq
-      } finally s.close()
-    }
+    val doneMarkers = atCommit.filter(_.startsWith("done-batch-"))
     assert(doneMarkers.size == 3, s"3 plan-keyed batch markers, got $doneMarkers")
+    assert(!Files.exists(cp), "a committed run's checkpoints are dropped")
   }
 
   test("watermarked streaming dedup drops duplicates, keeps state bounded semantics") {
