@@ -257,7 +257,8 @@ object Maintain {
         val r = RemoveOrphans.run(store, minAgeMs)
         println(s"scanned ${r.scanned} files, deleted ${r.orphansDeleted} " +
           s"orphans (${r.bytesFreed} bytes), " +
-          s"${r.commitDebrisDeleted} crashed-publish temps")
+          s"${r.commitDebrisDeleted} crashed-publish temps, " +
+          s"${r.manifestsDeleted} unnamed manifests")
       case "transcode" =>
         val codec = rest.headOption.getOrElse(graft.audio.Pcm.Pcm16le)
         val rate = rest.lift(1).map(_.toInt).getOrElse(16000)

@@ -10,18 +10,22 @@ import scala.jdk.CollectionConverters._
 
 /** @param commitDebrisDeleted publish temps under `meta/` plus bloom
  *   staging shards ([[graft.table.FileBloom.newStaging]]) whose writer died
- *   before it published them. */
+ *   before it published them.
+ *  @param manifestsDeleted manifests and delete manifests no snapshot
+ *   names: left by an expiry that died between its retire and its deletes,
+ *   or by a commit that died before its claim. */
 final case class OrphanResult(scanned: Int, orphansDeleted: Int, bytesFreed: Long,
-                              commitDebrisDeleted: Int = 0)
+                              commitDebrisDeleted: Int = 0, manifestsDeleted: Int = 0)
 
 /**
  * Orphan-file GC: a writer that crashes AFTER writing data files but BEFORE
  * its commit leaves files on disk that no snapshot references — invisible to
  * readers (snapshot isolation) and to [[ExpireSnapshots]] (which only walks
  * committed snapshots), but costing storage forever. This action deletes
- * data files unreachable from ANY snapshot, with an age floor so an
- * in-flight (written-but-not-yet-committed) maintenance pass is never
- * clobbered — the same contract as Iceberg's remove_orphan_files.
+ * data files unreachable from ANY snapshot, and the manifests no snapshot
+ * names, with an age floor so an in-flight (written-but-not-yet-committed)
+ * maintenance pass is never clobbered — the same contract as Iceberg's
+ * remove_orphan_files.
  */
 object RemoveOrphans {
 
@@ -55,8 +59,9 @@ object RemoveOrphans {
     require(store.ownsData,
       s"${store.tableDir}: orphan GC must run on the owning table, not a " +
         "branch store (branch data lives in the parent's data directory)")
+    val snaps = store.allSnapshotIds.map(store.snapshot)
     val reachable: Set[String] =
-      store.reachablePaths(store.allSnapshotIds.map(store.snapshot)).asScala.toSet ++
+      store.reachablePaths(snaps).asScala.toSet ++
         checkpointRoots(store) ++
         // staged-but-unpublished WAP batches: no snapshot references them,
         // but they are pending work, not garbage
@@ -91,7 +96,30 @@ object RemoveOrphans {
       }
     } finally stream.close()
     OrphanResult(scanned, deleted, freed, removeCommitDebris(store, cutoff) +
-      graft.table.FileBloom.removeStaleStaging(store, cutoff))
+      graft.table.FileBloom.removeStaleStaging(store, cutoff),
+      removeUnnamedManifests(store, snaps, cutoff))
+  }
+
+  /** Deletes the manifests and delete manifests in `meta/` that none of
+   * `snaps` names and that were last modified before `cutoffMs`. A commit
+   * writes its manifests before it claims its snapshot, and a reused
+   * manifest is named by the parent the commit read, so the age floor that
+   * protects in-flight data files protects these too. */
+  private def removeUnnamedManifests(store: MetaStore, snaps: Seq[graft.table.Snapshot],
+                                     cutoffMs: Long): Int = {
+    val named = snaps.flatMap(s => s.manifests ++ s.deleteManifests).toSet
+    val s = Files.list(Paths.get(store.tableDir, "meta"))
+    val unnamed = try s.iterator().asScala.filter { p =>
+      val n = p.getFileName.toString
+      (n.startsWith("manifest-") || n.startsWith("delmanifest-")) && n.endsWith(".json") &&
+        !named.contains(n) &&
+        (try Files.getLastModifiedTime(p).toMillis < cutoffMs
+         catch { case _: java.nio.file.NoSuchFileException => false })
+    }.toList finally s.close()
+    unnamed.count { p =>
+      store.forgetManifest(p.getFileName.toString)
+      Files.deleteIfExists(p)
+    }
   }
 
   /** A publish that crashed between its temp write and its link or rename

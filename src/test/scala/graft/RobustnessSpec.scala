@@ -154,6 +154,12 @@ class RobustnessSpec extends AnyFunSuite {
     val gc = RemoveOrphans.run(store, minAgeMs = 0L)
     assert(gc.orphansDeleted == old.size)
     assert(old.forall(p => !Files.exists(Paths.get(p))))
+    val live = store.snapshot(head).manifests
+    val unnamed = manifests.filterNot(live.contains)
+    assert(unnamed.nonEmpty && gc.manifestsDeleted == unnamed.size)
+    assert(unnamed.forall(m => !Files.exists(Paths.get(dir, "meta", m))),
+      "orphan GC takes the manifests the retired records named")
+    assert(live.forall(m => Files.exists(Paths.get(dir, "meta", m))))
     assert(store.scanCurrent(spark).count() == 30L)
   }
 
