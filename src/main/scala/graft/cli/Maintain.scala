@@ -48,9 +48,9 @@ import org.apache.spark.sql.SparkSession
  *                                   provably-clean files metadata-only,
  *                                   rewrite the rest, retire delete files
  *     delete-where-pos <col> <op> <v>  predicate delete, residue as POSITIONS
- *     compact-pos-deletes [pack]    merge position-delete files into one
- *                                   (pack = deletion-vector bitset form),
- *                                   dropping dead-path mask rows
+ *     compact-pos-deletes           merge position-delete files into one
+ *                                   deletion-vector file, dropping
+ *                                   dead-path mask rows
  *     wap-stage <name> <n> [fromId] stage a batch outside the snapshot log
  *     wap-audit <name>              constraint-audit the staged batch only
  *     wap-publish <name> [force]    atomic O(batch) publish (audit-gated)
@@ -291,13 +291,10 @@ object Maintain {
         println(s"snapshot ${r.snapshotId}: dropped ${r.filesDropped} " +
           s"fully-covered file(s) (${r.rowsDropped} rows, metadata-only) + " +
           s"position delete of ${r.deleteRows} rows in ${r.deleteFiles} delete file(s)")
-      case "compact-pos-deletes" => // [pack] -> deletion-vector form
-        val pack = rest.headOption.contains("pack")
-        val (id, merged, dropped) =
-          Deletes.compactPositional(spark, store, pack = pack)
+      case "compact-pos-deletes" =>
+        val (id, merged, dropped) = Deletes.compactPositional(spark, store)
         println(s"snapshot $id: merged $merged position-delete file(s), " +
-          s"dropped $dropped dead-path mask row(s)" +
-          (if (pack) " [packed as deletion vectors]" else ""))
+          s"dropped $dropped dead-path mask row(s)")
       case "expire-deletes" =>
         val (id, dropped) = Deletes.expireInert(store)
         println(s"snapshot $id: dropped $dropped inert delete file(s)")

@@ -66,7 +66,7 @@ final case class MaintenancePolicy(
     maxDeleteRowFrac: Double = 0.02,
     /** Position-delete FILE bound ([[Deletes.compactPositional]] trigger):
      * every position-delete commit adds one small file to the one union'd
-     * anti-join input; merge them (and drop dead-path pairs) past this. */
+     * vector join input; merge them (and drop dead-path masks) past this. */
     maxPosDeleteFiles: Int = 8,
     /** Bloom side-table shard bound ([[graft.table.FileBloom.compact]]
      * trigger): every write adds one shard, dead files keep their rows —
@@ -107,12 +107,12 @@ object AutoMaintain {
     // scan until a rewrite retires it — a streaming MOR upsert adds one per
     // batch. Bounded here; materialize promotes provably-clean files
     // metadata-only and rewrites the rest, retiring all delete files.
-    // position-delete files live under "posdelete-"-tagged dirs (both
-    // writers use the tag), so this stays a metadata-only classification;
-    // the read side classifies by schema. Each position file is one more
-    // small input to the single union'd anti-join — era semantics don't
-    // apply to them (application is by exact path, not seq).
-    val (posDels, eqDels) = dels.partition(_.path.contains("/posdelete-"))
+    // Deletes.isPositional reads the path tag, so this stays metadata-only.
+    // Each position file is one more small input to the single union'd
+    // vector join — era semantics don't apply to them (application is by
+    // exact path, not seq). A vector entry's `rows` counts the rows it
+    // masks, so the row bound sees position deletes at their true weight.
+    val (posDels, eqDels) = dels.partition(Deletes.isPositional)
     val morDebt = dels.nonEmpty && {
       val eras = eqDels.map(_.seq).distinct.size
       val delRows = dels.map(_.rows).sum

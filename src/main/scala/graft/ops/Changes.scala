@@ -148,15 +148,14 @@ object Changes {
     // visibility probe on both snapshots, never a full scan.
     val fromDelPaths = store.deleteEntries(fromId).map(_.path).toSet
     val deltaDels = store.deleteEntries(toId).filterNot(e => fromDelPaths.contains(e.path))
-    val keyed = deltaDels.map(_.path).filter { p =>
+    val (posDelEntries, eqDelEntries) = deltaDels.partition(Deletes.isPositional)
+    val keyed = eqDelEntries.map(_.path).filter { p =>
       Deletes.delCols(spark, p).contains(keyCol)
     }
     // POSITION deletes added in the range carry no key column — resolve the
-    // named (file_path, pos) rows to keys by reading the TARGET files under
+    // masked (file_path, pos) rows to keys by reading the TARGET files under
     // `from`'s visibility with row identity attached. Bounded by the delete
     // churn's target-file set, never the table.
-    val posDelEntries = deltaDels
-      .filter(d => Deletes.isPositional(spark, d.path))
     val posKeyVals: Seq[Any] =
       if (posDelEntries.isEmpty) Nil
       else {

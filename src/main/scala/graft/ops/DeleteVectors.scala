@@ -1,60 +1,81 @@
 package graft.ops
 
+import java.nio.{ByteBuffer, ByteOrder}
+
 /**
- * Deletion-vector payloads: a POSITION mask for one data file packed as a
- * plain little-endian bitset (bit `pos` set = row `pos` deleted) — the
- * Iceberg v3 deletion-vector idea re-expressed minimally. A delete file of
- * `(file_path, dv: binary)` carries ONE row per masked data file instead of
- * one row per masked data row, so the read-side anti-join input and the
- * mask storage stop growing with deleted-row count.
+ * Deletion-vector payloads: the POSITION mask of one data file as one
+ * binary value — the Iceberg v3 deletion-vector idea re-expressed
+ * minimally. A delete file of `(file_path, dv: binary)` carries ONE row
+ * per masked data file instead of one row per masked data row, so the
+ * read-side join input and the mask storage stop growing with deleted-row
+ * count. Every position delete is stored in this form.
  *
- * Format: the bitset words of `[0, maxPos]`, 8 bytes per 64 rows, no
- * header. A bit beyond the array is "not deleted" by construction, so the
- * vector for a prefix of the file stays valid as the file's row count
- * grows (it can't — files are immutable — but the property keeps
- * `contains` total). Packing is refused above [[MaxPackPos]] (a sparse
- * mask near the end of a giant file would pay the dense-bitset size);
- * such files keep the `(file_path, pos)` pair form.
+ * Two payload layouts, told apart by the last byte:
+ *  - **bitset** (max position <= [[MaxPackPos]]): little-endian bits of
+ *    `[0, maxPos]`, no header (bit `pos` set = row `pos` deleted). The
+ *    last byte holds the highest set bit, so it is never zero. A bit past
+ *    the array is "not deleted", which keeps `contains` total.
+ *  - **sorted runs** (any larger position): `(start, length)` pairs of
+ *    little-endian longs in ascending `start`, then one `0x00` tag byte. A
+ *    sparse mask near the end of a giant file pays per run, not per row of
+ *    the dense prefix.
  */
 object DeleteVectors {
 
   /** Largest row index a dense bitset may carry: 2^26 rows = 8 MiB/file. */
   val MaxPackPos: Long = (1L << 26) - 1
 
+  private val RunsTag: Byte = 0
+
+  private def isRuns(dv: Array[Byte]): Boolean = dv(dv.length - 1) == RunsTag
+
+  /** The `(start, length)` runs of a sorted-runs payload. */
+  private def runs(dv: Array[Byte]): collection.IndexedSeqView[(Long, Long)] = {
+    val b = ByteBuffer.wrap(dv).order(ByteOrder.LITTLE_ENDIAN)
+    (0 until (dv.length - 1) / 16).view.map(r => (b.getLong(r * 16), b.getLong(r * 16 + 8)))
+  }
+
+  private def bit(dv: Array[Byte], pos: Long): Boolean =
+    (dv((pos >> 3).toInt) & (1 << (pos & 7).toInt)) != 0
+
   def encode(positions: Seq[Long]): Array[Byte] = {
     require(positions.nonEmpty, "empty deletion vector")
+    require(positions.forall(_ >= 0), "negative row position")
     val maxPos = positions.max
-    require(maxPos <= MaxPackPos && positions.forall(_ >= 0),
-      s"positions out of packable range [0, $MaxPackPos]")
-    val bytes = new Array[Byte](((maxPos >> 3) + 1).toInt)
-    positions.foreach { p =>
-      bytes((p >> 3).toInt) = (bytes((p >> 3).toInt) | (1 << (p & 7).toInt)).toByte
-    }
-    bytes
-  }
-
-  def contains(dv: Array[Byte], pos: Long): Boolean = {
-    if (dv == null || pos < 0) return false
-    val byteIdx = pos >> 3
-    if (byteIdx >= dv.length) return false
-    (dv(byteIdx.toInt) & (1 << (pos & 7).toInt)) != 0
-  }
-
-  /** All set positions — CDC key resolution and re-packing read this. */
-  def expand(dv: Array[Byte]): Seq[Long] = {
-    val out = Seq.newBuilder[Long]
-    var i = 0
-    while (i < dv.length) {
-      val b = dv(i) & 0xff
-      if (b != 0) {
-        var j = 0
-        while (j < 8) {
-          if ((b & (1 << j)) != 0) out += (i.toLong << 3) + j
-          j += 1
-        }
+    if (maxPos <= MaxPackPos) {
+      val bytes = new Array[Byte](((maxPos >> 3) + 1).toInt)
+      positions.foreach { p =>
+        bytes((p >> 3).toInt) = (bytes((p >> 3).toInt) | (1 << (p & 7).toInt)).toByte
       }
-      i += 1
+      bytes
+    } else {
+      val rs = positions.distinct.sorted.foldLeft(List.empty[(Long, Long)]) {
+        case ((s, l) :: rest, p) if p == s + l => (s, l + 1) :: rest
+        case (acc, p) => (p, 1L) :: acc
+      }.reverse
+      val buf = ByteBuffer.allocate(rs.size * 16 + 1).order(ByteOrder.LITTLE_ENDIAN)
+      rs.foreach { case (s, l) => buf.putLong(s).putLong(l) }
+      buf.put(RunsTag).array()
     }
-    out.result()
   }
+
+  def contains(dv: Array[Byte], pos: Long): Boolean =
+    if (dv == null || dv.isEmpty || pos < 0) false
+    else if (isRuns(dv)) {
+      val rs = runs(dv)
+      // rs(i - 1) is the last run starting at or before pos
+      val i = rs.map(_._1).search(pos + 1).insertionPoint
+      i > 0 && pos < rs(i - 1)._1 + rs(i - 1)._2
+    } else (pos >> 3) < dv.length && bit(dv, pos)
+
+  /** All set positions, ascending — CDC key resolution and re-packing read
+   * this. */
+  def expand(dv: Array[Byte]): Seq[Long] =
+    if (isRuns(dv)) runs(dv).flatMap { case (s, l) => s until s + l }.toSeq
+    else (0L until dv.length * 8L).filter(bit(dv, _))
+
+  /** How many positions `dv` masks. */
+  def cardinality(dv: Array[Byte]): Long =
+    if (isRuns(dv)) runs(dv).map(_._2).sum
+    else dv.iterator.map(b => Integer.bitCount(b & 0xff).toLong).sum
 }

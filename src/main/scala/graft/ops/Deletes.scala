@@ -27,10 +27,13 @@ final case class DeleteResult(
  * Merge-on-read row-level deletes, Iceberg-style — BOTH v2 delete shapes:
  *
  *  - **equality deletes** (key-value files, the sequence rule below), and
- *  - **position deletes** ([[Deletes.runPositional]]: `(file_path, pos)`
- *    files naming exact physical rows; applied by path+row-index anti-join
- *    against Spark's `_metadata` hidden columns, verified against DuckDB's
- *    `file_row_number` — the two engines agree on parquet row order).
+ *  - **position deletes** ([[Deletes.runPositional]]: exact physical rows,
+ *    stored in ONE form — a deletion-vector file of `(file_path, dv)` rows,
+ *    one per masked data file ([[DeleteVectors]], Iceberg v3's form);
+ *    applied by a broadcast path join plus a bit test on the row index from
+ *    Spark's `_metadata` hidden columns — the row order DuckDB's
+ *    `file_row_number` also reports). Delete kind is read from the path
+ *    tag ([[isPositional]]), never from a footer.
  *
  * A delete commit writes a small parquet of key values (no data file is
  * touched — the write cost is O(deleted keys), not O(table)) and records it
@@ -66,17 +69,6 @@ object Deletes {
   val PosPathCol = "_pos_path"
   val PosIdxCol = "_pos_idx"
 
-  /** Column set that marks a delete file as a POSITION delete (Iceberg v2's
-   * second delete shape): rows of `(file_path, pos)` naming exact physical
-   * rows. Anything else is an equality delete keyed on those columns. The
-   * two never collide: delete keys are table columns, and `file_path`/`pos`
-   * are reserved (not clip-table columns). */
-  private val PosDeleteCols = Seq("file_path", "pos")
-
-  /** Column set of a DELETION-VECTOR file ([[DeleteVectors]]): one
-   * `(file_path, dv)` row per masked data file, the packed position form. */
-  private val DvDeleteCols = Seq("dv", "file_path")
-
   /** Read one group of delete files (uniform column set) as a distinct key
    * frame. */
   private def keyFrame(spark: SparkSession, paths: Seq[String]): DataFrame =
@@ -90,38 +82,77 @@ object Deletes {
   private val delColsCache =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
 
-  /** The (sorted) column set of the delete file at `path` — footer-only
-   * probe, cached for the store's lifetime (delete files are immutable).
-   * Shared by the equality grouping, the positional classifier, CDC's key
-   * probe, and the evolve guard, so each file's footer opens ONCE. */
+  /** The (sorted) key columns of the EQUALITY delete file at `path` —
+   * footer-only probe, cached for the store's lifetime (delete files are
+   * immutable). Shared by the equality grouping, CDC's key probe, and the
+   * evolve guard, so each file's footer opens ONCE. */
   def delCols(spark: SparkSession, path: String): Seq[String] =
     delColsCache.computeIfAbsent(path,
       pp => spark.read.parquet(pp).columns.toSeq.sorted)
 
-  /** Whether the delete file at `path` is a position delete — either the
-   * pair form or the packed deletion-vector form. */
-  def isPositional(spark: SparkSession, path: String): Boolean = {
-    val c = delCols(spark, path)
-    c == PosDeleteCols || c == DvDeleteCols
+  /** Whether `d` is a POSITION delete (a deletion-vector file) rather than
+   * an equality delete. Metadata-only: every positional writer puts its file
+   * under a `posdelete`-tagged dir ([[writeVectors]]). */
+  def isPositional(d: DataFile): Boolean = d.path.contains("/posdelete-")
+
+  private val encodeUdf = udf((ps: Seq[Long]) => DeleteVectors.encode(ps))
+
+  /** Group `(file_path, pos)` rows into one `(file_path, dv)` deletion
+   * vector per data file — the one encoder every positional writer (and the
+   * legacy-pair read) goes through. */
+  def toVectors(positions: DataFrame): DataFrame =
+    positions.groupBy("file_path")
+      .agg(encodeUdf(collect_list(col("pos").cast("long"))).as("dv"))
+
+  /** Write `toVectors(positions)` as one delete file under a fresh
+   * `posdelete` dir. The entry's `rows` is the number of MASKED rows (not
+   * the file's one row per data file), so delete-row debt and summaries
+   * count what the mask hides. Nil when `positions` is empty. */
+  private def writeVectors(spark: SparkSession, store: MetaStore,
+                           positions: DataFrame): Seq[DataFile] = {
+    val outDir = store.newDataDir("posdelete")
+    toVectors(positions).coalesce(1).write.mode("overwrite").parquet(outDir)
+    val entries = store.collectStats(spark, outDir).filter(_.rows > 0)
+    if (entries.isEmpty) return Nil
+    val cardinality = udf((dv: Array[Byte]) => DeleteVectors.cardinality(dv))
+    val masked = spark.read.parquet(outDir)
+      .agg(sum(cardinality(col("dv")))).head().getLong(0)
+    entries.map(_.copy(rows = masked))
   }
 
-  /** Whether the delete file at `path` is a packed deletion vector. */
-  def isVector(spark: SparkSession, path: String): Boolean =
-    delCols(spark, path) == DvDeleteCols
+  /** Write the distinct `keys` as one equality-delete file under a fresh
+   * `delete` dir. Nil when `keys` is empty. */
+  private def writeKeys(spark: SparkSession, store: MetaStore,
+                        keys: DataFrame): Seq[DataFile] = {
+    val outDir = store.newDataDir("delete")
+    keys.distinct().coalesce(1).write.mode("overwrite").parquet(outDir)
+    store.collectStats(spark, outDir).filter(_.rows > 0)
+  }
 
-  /** All `(file_path, pos)` pairs of a mixed set of position-delete files
-   * (pair files read directly, vector files expanded) — distinct. */
+  /** Read schema of position-delete files: vectors carry `dv`; files
+   * written before vectors were the only form carry `(file_path, pos)`
+   * pairs instead. A fixed schema reads both (the absent column reads as
+   * null) without opening any footer. */
+  private val PosDeleteSchema = new org.apache.spark.sql.types.StructType()
+    .add("file_path", "string").add("pos", "long").add("dv", "binary")
+
+  /** The masks of `posDels` as ONE `(file_path, dvs)` row per masked data
+   * file: every vector naming it, plus its legacy pairs re-encoded through
+   * [[toVectors]]. */
+  private def vectors(spark: SparkSession, posDels: Seq[DataFile]): DataFrame = {
+    val raw = spark.read.schema(PosDeleteSchema).parquet(posDels.map(_.path): _*)
+    raw.filter(col("dv").isNotNull).select("file_path", "dv")
+      .unionByName(toVectors(raw.filter(col("pos").isNotNull)))
+      .groupBy("file_path").agg(collect_list("dv").as("dvs"))
+  }
+
+  /** All `(file_path, pos)` pairs the position deletes `posDels` mask —
+   * distinct. */
   def positionPairs(spark: SparkSession, posDels: Seq[DataFile]): DataFrame = {
-    val (dvs, pairs) = posDels.partition(d => isVector(spark, d.path))
-    val expandUdf = udf((dv: Array[Byte]) => DeleteVectors.expand(dv))
-    val frames =
-      (if (pairs.isEmpty) Nil
-       else Seq(spark.read.parquet(pairs.map(_.path): _*)
-         .select(col("file_path"), col("pos").cast("long")))) ++
-      (if (dvs.isEmpty) Nil
-       else Seq(spark.read.parquet(dvs.map(_.path): _*)
-         .select(col("file_path"), explode(expandUdf(col("dv"))).as("pos"))))
-    frames.reduce(_.unionByName(_)).distinct()
+    val expandUdf = udf((dvs: Seq[Array[Byte]]) =>
+      dvs.flatMap(DeleteVectors.expand).distinct)
+    vectors(spark, posDels)
+      .select(col("file_path"), explode(expandUdf(col("dvs"))).as("pos"))
   }
 
   /** Anti-join `df` against every delete entry in `dels`. Delete files are
@@ -138,44 +169,27 @@ object Deletes {
     }
   }
 
-  /** Anti-join position-delete `(file_path, pos)` pairs against a frame that
-   * carries [[PosPathCol]]/[[PosIdxCol]] row identity. Position deletes
+  /** Drop the rows of a frame carrying [[PosPathCol]]/[[PosIdxCol]] row
+   * identity that a position delete masks: ONE row per masked file is
+   * broadcast as a `(path, dvs)` map, and each data row pays an O(1) bit
+   * test (O(log runs) for a sorted-runs vector) — no per-deleted-row join
+   * input. Broadcast only while the vectors fit comfortably (delete-file
+   * bytes are in the manifest); a pathological mask set falls back to a
+   * shuffle join rather than OOMing the driver/executors. Position deletes
    * apply purely by exact path — rewrites change paths, so a stale position
    * delete is inert on rewritten files by construction (no sequence rule
    * needed; paths are never reused, every output dir is UUID-fresh). */
   private def applyPositional(spark: SparkSession, df: DataFrame,
                               posDels: Seq[DataFile]): DataFrame = {
-    val (dvs, pairs) = posDels.partition(d => isVector(spark, d.path))
-    val pairApplied =
-      if (pairs.isEmpty) df
-      else {
-        val keys = spark.read.parquet(pairs.map(_.path): _*)
-          .select(col("file_path").as(PosPathCol),
-            col("pos").cast("long").as(PosIdxCol))
-          .distinct()
-        val right =
-          if (pairs.map(_.rows).sum <= broadcastRowLimit) broadcast(keys) else keys
-        df.join(right, Seq(PosPathCol, PosIdxCol), "left_anti")
-      }
-    if (dvs.isEmpty) pairApplied
-    else {
-      // deletion vectors: ONE row per masked file — broadcast the (path, dv)
-      // map, O(1) bit test per data row, no per-deleted-row join input.
-      // Broadcast only while the vectors fit comfortably (delete-file bytes
-      // are in the manifest); a pathological mask set falls back to a
-      // shuffle join rather than OOMing the driver/executors.
-      val dvDf = spark.read.parquet(dvs.map(_.path): _*)
-        .select(col("file_path").as(PosPathCol), col("dv"))
-        .dropDuplicates(PosPathCol)
-      val right =
-        if (dvs.map(_.sizeBytes).sum <= 256L * 1024 * 1024) broadcast(dvDf)
-        else dvDf
-      val masked = udf((dv: Array[Byte], pos: Long) =>
-        DeleteVectors.contains(dv, pos))
-      pairApplied.join(right, Seq(PosPathCol), "left_outer")
-        .filter(col("dv").isNull || !masked(col("dv"), col(PosIdxCol)))
-        .drop("dv")
-    }
+    val dvDf = vectors(spark, posDels).withColumnRenamed("file_path", PosPathCol)
+    val right =
+      if (posDels.map(_.sizeBytes).sum <= 256L * 1024 * 1024) broadcast(dvDf)
+      else dvDf
+    val masked = udf((dvs: Seq[Array[Byte]], pos: Long) =>
+      dvs.exists(DeleteVectors.contains(_, pos)))
+    df.join(right, Seq(PosPathCol), "left_outer")
+      .filter(col("dvs").isNull || !masked(col("dvs"), col(PosIdxCol)))
+      .drop("dvs")
   }
 
   /**
@@ -186,10 +200,9 @@ object Deletes {
    * delete keys. The group count is O(distinct delete seqs), which stays
    * small because rewrites retire deletes ([[expireInert]]).
    *
-   * POSITION deletes (files of `(file_path, pos)`) are applied after the
-   * union in ONE anti-join on physical row identity — they key on exact
-   * paths, so no per-seq grouping is needed and rows of files they don't
-   * name are untouched.
+   * POSITION deletes (deletion vectors) are applied after the union in ONE
+   * join on physical row identity — they key on exact paths, so no per-seq
+   * grouping is needed and rows of files they don't name are untouched.
    *
    * @param withPos keep the [[PosPathCol]]/[[PosIdxCol]] row-identity
    *   columns in the output (for callers resolving rows to positions, e.g.
@@ -200,7 +213,7 @@ object Deletes {
                 files: Seq[DataFile], withPos: Boolean = false): DataFrame = {
     if (files.isEmpty) return spark.emptyDataFrame
     val dels = store.deleteEntries(snapshotId).sortBy(_.seq)
-    val (posDels, eqDels) = dels.partition(d => isPositional(spark, d.path))
+    val (posDels, eqDels) = dels.partition(isPositional)
     val needPos = withPos || posDels.nonEmpty
     if (dels.isEmpty && !needPos) return Evolve.readFiles(spark, store, files)
     val delSeqs = eqDels.map(_.seq)
@@ -226,8 +239,6 @@ object Deletes {
    */
   def run(spark: SparkSession, store: MetaStore, keys: DataFrame,
           runId: String = s"delete-${System.currentTimeMillis()}"): DeleteResult = {
-    val outDir = store.newDataDir("delete")
-    keys.distinct().coalesce(1).write.mode("overwrite").parquet(outDir)
     // stats via the standard path (present-column min/max; per-file bloom
     // rides along and is harmless). Seq stamping and the carry-forward of
     // the parent's delete set happen INSIDE commitDelta (addedDeletes):
@@ -235,7 +246,7 @@ object Deletes {
     // loses their delete, or our seq lands below the actual commit id and
     // fails to cover their rows. Deleting keys is valid against any newer
     // snapshot (the key parquet itself is reused verbatim across retries).
-    val rawEntries = store.collectStats(spark, outDir)
+    val rawEntries = writeKeys(spark, store, keys)
     val rows = rawEntries.map(_.rows).sum
     if (rows == 0)
       return DeleteResult(store.currentSnapshotId.getOrElse(-1L), 0, 0)
@@ -256,8 +267,8 @@ object Deletes {
    * Commit a POSITION delete: `positions` is a frame of exactly
    * `(file_path: string, pos: long)` naming physical rows of CURRENT data
    * files (0-based row index within the file — Spark's `_metadata.row_index`
-   * / DuckDB's `file_row_number` convention). O(|positions|) work, zero data
-   * rewrite; applied read-side by path+pos anti-join. Unlike an equality
+   * / DuckDB's `file_row_number` convention), stored as deletion vectors
+   * ([[toVectors]]). O(|positions|) work, zero data rewrite. Unlike an equality
    * delete there is no key semantics: a later re-insert of the same logical
    * key is a DIFFERENT physical row and is never masked, and every rewrite
    * (new paths) makes the delete inert on the rewritten data by
@@ -282,10 +293,7 @@ object Deletes {
     require(dead.isEmpty,
       s"position delete names ${dead.length} path(s) not live in snapshot " +
         s"$expectedSnapshot (stale resolution or typo): ${dead.take(3).mkString(", ")}")
-    val outDir = store.newDataDir("posdelete")
-    positions.select(col("file_path"), col("pos").cast("long"))
-      .distinct().coalesce(1).write.mode("overwrite").parquet(outDir)
-    val rawEntries = store.collectStats(spark, outDir).filter(_.rows > 0)
+    val rawEntries = writeVectors(spark, store, positions)
     val rows = rawEntries.map(_.rows).sum
     if (rows == 0)
       return DeleteResult(store.currentSnapshotId.getOrElse(-1L), 0, 0)
@@ -321,7 +329,8 @@ object Deletes {
    *
    * With `positional = true` the residue is committed as a POSITION delete
    * instead: matching rows resolve to `(file_path, pos)` via the
-   * position-aware read, so no key column (or key uniqueness) is needed and
+   * position-aware read and are stored as deletion vectors, so no key
+   * column (or key uniqueness) is needed and
    * a later re-insert of a matching key is never masked. The partition-drop
    * fast path is identical in both modes.
    */
@@ -343,30 +352,22 @@ object Deletes {
     // and bloom conservative keep), read delete-aware so already-deleted
     // rows don't re-resolve
     val candidates = Pruning.candidates(spark, store, rest, preds)
-    val keyDf =
-      if (candidates.isEmpty) None
+    val delEntries =
+      if (candidates.isEmpty) Nil
       else if (positional)
-        Some(readFiles(spark, store, snapId, candidates, withPos = true)
-          .filter(Pred.and(preds))
-          .select(col(PosPathCol).as("file_path"), col(PosIdxCol).as("pos"))
-          .distinct())
-      else Some(readFiles(spark, store, snapId, candidates)
-        .filter(Pred.and(preds)).select(keyCols.map(col): _*).distinct())
+        writeVectors(spark, store,
+          readFiles(spark, store, snapId, candidates, withPos = true)
+            .filter(Pred.and(preds))
+            .select(col(PosPathCol).as("file_path"), col(PosIdxCol).as("pos")))
+      else writeKeys(spark, store, readFiles(spark, store, snapId, candidates)
+        .filter(Pred.and(preds)).select(keyCols.map(col): _*))
 
     // ONE commit carrying both tiers: manifest minus covered files, plus
-    // (when residue exists) a fresh equality-delete file. Seq stamping +
-    // delete carry-forward happen inside commitDelta (addedDeletes), and
+    // (when residue exists) a fresh delete file. Seq stamping + delete
+    // carry-forward happen inside commitDelta (addedDeletes), and
     // expectedParent pins the snapshot the covered/residue resolution was
     // proven against — an interleaved commit fails this commit (retryable)
     // instead of being clobbered, and the retry re-resolves the predicate.
-    val delEntries = keyDf.map { k =>
-      // positional residue under a "posdelete"-tagged dir (same tag as
-      // runPositional) so metadata-only planners can classify delete files
-      // by path; the read side still classifies by schema (isPositional)
-      val outDir = store.newDataDir(if (positional) "posdelete" else "delete")
-      k.coalesce(1).write.mode("overwrite").parquet(outDir)
-      store.collectStats(spark, outDir).filter(_.rows > 0)
-    }.getOrElse(Nil)
     if (covered.isEmpty && delEntries.isEmpty)
       return DeleteResult(snapId, 0, 0)
     val rowsDropped = covered.map(_.rows).sum
@@ -385,13 +386,15 @@ object Deletes {
   }
 
   /**
-   * Merge every live POSITION-delete file into ONE, dropping pairs that
-   * name paths no longer live (rewrites / partition drops turned them into
-   * dead weight) — Iceberg's rewrite-position-delete-files maintenance.
-   * O(mask rows) work, zero data-file IO: frequent small streaming deletes
-   * otherwise accumulate one anti-join input per commit. Equality deletes
-   * are untouched (their per-seq application forbids naive merging: a
-   * merged file at max seq would over-apply to files between the seqs).
+   * Merge every live POSITION-delete file into ONE deletion-vector file,
+   * dropping masks of paths no longer live (rewrites / partition drops
+   * turned them into dead weight) — Iceberg's rewrite-position-delete-files
+   * maintenance. O(mask rows) work, zero data-file IO: frequent small
+   * streaming deletes otherwise accumulate one join input per commit. A
+   * legacy `(file_path, pos)` pair file is rewritten as a vector even when
+   * it is the only one. Equality deletes are untouched (their per-seq
+   * application forbids naive merging: a merged file at max seq would
+   * over-apply to files between the seqs).
    *
    * The merged entry keeps `max(source seqs)` so [[expireInert]]'s
    * conservative seq rule behaves exactly as it did on the inputs — a
@@ -399,21 +402,15 @@ object Deletes {
    * masking live rows.
    *
    * Returns (snapshot id, position files before, mask rows dropped as
-   * dead-path); no commit when there is nothing to merge or prune.
+   * dead-path); no commit when there is nothing to merge, prune or convert.
    */
-  /** @param pack re-emit the merged masks as DELETION VECTORS
-   *   ([[DeleteVectors]]: one `(file_path, dv)` bitset row per masked data
-   *   file — Iceberg v3's packed form) instead of `(file_path, pos)` pairs.
-   *   Files whose max masked position exceeds [[DeleteVectors.MaxPackPos]]
-   *   keep the pair form (a dense bitset would dwarf a sparse mask). */
   def compactPositional(spark: SparkSession, store: MetaStore,
-                        pack: Boolean = false,
                         runId: String = s"posdel-compact-${System.currentTimeMillis()}"): (Long, Int, Long) =
   MetaStore.withCommitRetry() {
     import spark.implicits._
     val snapId = store.currentSnapshotId.getOrElse(sys.error("delete: empty table"))
     val dels = store.deleteEntries(snapId)
-    val (posDels, eqDels) = dels.partition(d => isPositional(spark, d.path))
+    val (posDels, eqDels) = dels.partition(isPositional)
     if (posDels.isEmpty) return (snapId, 0, 0L)
     // live-path semi-join (not isInCollection: the live set is file-count
     // sized, 10^5-10^6 at scale — a join input, not an In-list literal)
@@ -423,41 +420,20 @@ object Deletes {
     val total = allPairs.count()
     val kept = allPairs.join(liveDf, Seq("file_path"), "left_semi")
     val keptRows = kept.count()
-    val alreadyForm = posDels.forall(d => isVector(spark, d.path) == pack)
-    if (posDels.size < 2 && keptRows == total && alreadyForm) {
+    if (posDels.size < 2 && keptRows == total &&
+        spark.read.schema(PosDeleteSchema).parquet(posDels.head.path)
+          .filter(col("pos").isNotNull).isEmpty) {
       allPairs.unpersist()
       return (snapId, 0, 0L)
     }
-    val maxSeq = posDels.map(_.seq).max
-    val newDels: Seq[DataFile] =
+    val newDels =
       if (keptRows == 0) Nil
-      else if (!pack) {
-        val outDir = store.newDataDir("posdelete")
-        kept.coalesce(1).write.mode("overwrite").parquet(outDir)
-        store.collectStats(spark, outDir).filter(_.rows > 0)
-          .map(_.copy(seq = maxSeq))
-      } else {
-        val enc = udf((ps: Seq[Long]) => DeleteVectors.encode(ps))
-        val grouped = kept.groupBy("file_path")
-          .agg(collect_list("pos").as("ps"))
-          .withColumn("maxp", array_max(col("ps")))
-        val dvOut = store.newDataDir("posdelete")
-        grouped.filter(col("maxp") <= DeleteVectors.MaxPackPos)
-          .select(col("file_path"), enc(col("ps")).as("dv"))
-          .coalesce(1).write.mode("overwrite").parquet(dvOut)
-        val pairOut = store.newDataDir("posdelete")
-        kept.join(grouped.filter(col("maxp") > DeleteVectors.MaxPackPos)
-            .select("file_path"), Seq("file_path"), "left_semi")
-          .coalesce(1).write.mode("overwrite").parquet(pairOut)
-        (store.collectStats(spark, dvOut) ++ store.collectStats(spark, pairOut))
-          .filter(_.rows > 0).map(_.copy(seq = maxSeq))
-      }
+      else writeVectors(spark, store, kept).map(_.copy(seq = posDels.map(_.seq).max))
     allPairs.unpersist()
     val id = store.commitDelta("compact-deletes", Nil, summary = Map(
       "runId" -> runId,
       "posFilesMerged" -> posDels.size.toString,
       "maskRowsDropped" -> (total - keptRows).toString,
-      "packed" -> pack.toString,
       "deleteFiles" -> (eqDels.size + newDels.size).toString),
       deletes = Some(eqDels ++ newDels),
       expectedParent = Some(snapId))
@@ -532,14 +508,14 @@ object Deletes {
     val entries = store.entries(snapId)
     val dels = store.deleteEntries(snapId)
     if (dels.isEmpty) return MaterializeResult(snapId, 0, 0, 0)
-    // position deletes cover exactly the live files they NAME (pairs naming
+    // position deletes cover exactly the live files they NAME (masks naming
     // rewritten-away paths are dead weight, not coverage); equality deletes
     // cover by the sequence rule
-    val (posDels, eqDels) = dels.partition(d => isPositional(spark, d.path))
+    val (posDels, eqDels) = dels.partition(isPositional)
     val posTargets: Set[String] =
       if (posDels.isEmpty) Set.empty
-      else positionPairs(spark, posDels) // pair + vector forms uniformly
-        .select("file_path").distinct().collect().map(_.getString(0)).toSet
+      else vectors(spark, posDels)
+        .select("file_path").collect().map(_.getString(0)).toSet
     val coveredEq = entries.filter(f => eqDels.exists(_.seq > f.seq))
     val coveredPos = entries.filter(f => posTargets.contains(f.path))
     val covered = coveredEq ++

@@ -220,7 +220,8 @@ object Evolve {
     // every read — renaming/dropping such a column would make the whole
     // table unreadable (the join target no longer exists post-evolution)
     val keyed = store.currentSnapshotId.map(store.deleteEntries).getOrElse(Nil)
-      .filter(d => Deletes.delCols(spark, d.path).contains(column))
+      .filter(d => !Deletes.isPositional(d) &&
+        Deletes.delCols(spark, d.path).contains(column))
     require(keyed.isEmpty,
       s"cannot $op $column: ${keyed.size} live equality-delete file(s) key on " +
         "it (retire the debt first: Deletes.materialize / expireInert)")

@@ -1687,10 +1687,10 @@ object Audio {
         .select("clip_id", "codec", "dur_ms", "sr_hz", "transcript")
     }),
 
-    // -- POSITION deletes (ops/Deletes.scala:runPositional): Iceberg v2's
-    //    second delete shape — files of (file_path, pos) naming exact
-    //    physical rows, applied by path+row-index anti-join on the parquet
-    //    source's _metadata hidden columns. The story: two appends -> a
+    // -- POSITION deletes (ops/Deletes.scala:runPositional): Iceberg's
+    //    second delete shape — exact physical rows, stored as deletion
+    //    vectors and applied by a path join plus a bit test on the parquet
+    //    source's _metadata row index. The story: two appends -> a
     //    predicate delete committed as POSITIONS (deleteWhere resolves
     //    matching rows to (file_path, pos) through the position-aware read;
     //    no key column needed) -> a re-insert of some deleted keys (new
@@ -1698,94 +1698,79 @@ object Audio {
     //    unlike an equality delete's key rule) -> a compaction that
     //    materializes the masks into its rewritten bins while carried-over
     //    files stay covered read-side. Returns the final visible rows. --
-    //    Oracle: DuckDB replays position semantics from the RAW pre-compact
-    //    files via read_parquet(filename, file_row_number) — the two engines
-    //    agree on parquet row order — anti-joined against the delete pairs:
-    //    an independent recompute of both the position-delete application
-    //    and the compaction's scan preservation. --
+    //    Oracle: DuckDB replays the PREDICATE from the raw files
+    //    ([[positionDeleteStory]]) — an independent recompute of the
+    //    engine's row resolution, the mask encoding, its application and the
+    //    compaction's scan preservation. --
     "q110_position_deletes" -> ((s, d) => {
-      import s.implicits._
-      val dir = OracleFixtures.freshDir("q110_store", d)
-      val store = MetaStore.forClips(dir)
-      val n = clipCount(d)
-      def synthRange(from: Long, until: Long, parts: Int) =
-        s.range(from, until, 1L, parts).map(i => ClipSynth.clip(i, 150)).toDF()
-      Append.run(s, store, synthRange(0, n / 2, 4))
-      Append.run(s, store, synthRange(n / 2, n, 4))
-      Deletes.deleteWhere(s, store, Seq(Pred.EqualTo("codec", Pcm.Pcm8)),
-        positional = true, runId = "q110-delete")
-      val delFiles = store.deleteEntries(store.currentSnapshotId.get)
-      // re-insert 8 deleted keys with new content: different physical rows,
-      // never masked by the committed positions
-      val reIdx = (0L until n).filter(i => ClipSynth.codec(i) == Pcm.Pcm8).take(8)
-      Append.run(s, store,
-        reIdx.toDS().repartition(1).map(i => ClipSynth.clip(i, 150)).toDF()
-          .withColumn("transcript", concat(col("transcript"), lit(" v2"))))
-      val rawFiles = store.entries(store.currentSnapshotId.get)
-      OracleFixtures.register("q110_position_deletes",
-        s"""WITH rows_all AS (
-           |  SELECT clip_id, codec, dur_ms, sr_hz, transcript,
-           |    filename AS fpath, file_row_number AS fpos
-           |  FROM read_parquet(${OracleFixtures.pathList(rawFiles.map(_.path))},
-           |    filename=true, file_row_number=true)),
-           |delk AS (SELECT file_path, pos
-           |  FROM read_parquet(${OracleFixtures.pathList(delFiles.map(_.path))}))
-           |SELECT a.clip_id, a.codec, a.dur_ms, a.sr_hz, a.transcript
-           |FROM rows_all a LEFT JOIN delk
-           |  ON a.fpath = delk.file_path AND a.fpos = delk.pos
-           |WHERE delk.file_path IS NULL""".stripMargin)
+      val store = positionDeleteStory(s, d, "q110_position_deletes") { (store, _) =>
+        Deletes.deleteWhere(s, store, Seq(Pred.EqualTo("codec", Pcm.Pcm8)),
+          positional = true, runId = "q110-delete")
+      }
       Compact.run(s, store, targetBytes = 512L * 1024,
         runId = "q110-compact", singleJob = true)
       store.scanCurrent(s)
         .select("clip_id", "codec", "dur_ms", "sr_hz", "transcript")
     }),
 
-    // -- DELETION VECTORS (ops/DeleteVectors.scala): position masks packed
-    //    as one per-file bitset row (Iceberg v3's form) — the read applies
-    //    them via a broadcast (path, dv) map and an O(1) bit test per row
-    //    instead of a per-deleted-row join input. The story: two appends ->
-    //    a predicate position delete (pair form) -> compactPositional(pack)
-    //    re-emits the masks as vectors -> the scan reads THROUGH the packed
-    //    representation. --
-    //    Oracle: DuckDB replays the masks from the ORIGINAL pair-form delete
-    //    parquet (still referenced by the pre-pack snapshot) against the raw
-    //    files via file_row_number — a cross-REPRESENTATION equivalence
-    //    proof: two engines AND two mask encodings, one answer. --
+    // -- DELETION VECTORS (ops/DeleteVectors.scala): each position delete
+    //    commit writes one (file_path, dv) row per masked data file, and
+    //    compactPositional folds the per-commit vector files into ONE. The
+    //    story: q110's, with two predicate position deletes (pcm8 rows of
+    //    the first half of the ids, then every pcm8 row) -> compactPositional
+    //    merges the two vector files -> the scan reads THROUGH the merged
+    //    vectors. --
+    //    Oracle: the same predicate replay from raw files as q110; the
+    //    merged file must mask exactly the union of both deletes and none of
+    //    the re-inserted rows. --
     "q111_deletion_vectors" -> ((s, d) => {
-      import s.implicits._
-      val dir = OracleFixtures.freshDir("q111_store", d)
-      val store = MetaStore.forClips(dir)
-      val n = clipCount(d)
-      def synthRange(from: Long, until: Long, parts: Int) =
-        s.range(from, until, 1L, parts).map(i => ClipSynth.clip(i, 150)).toDF()
-      Append.run(s, store, synthRange(0, n / 2, 4))
-      Append.run(s, store, synthRange(n / 2, n, 4))
-      Deletes.deleteWhere(s, store, Seq(Pred.EqualTo("codec", Pcm.Pcm8)),
-        positional = true, runId = "q111-delete")
-      val pairFiles = store.deleteEntries(store.currentSnapshotId.get)
-      val rawFiles = store.entries(store.currentSnapshotId.get)
-      OracleFixtures.register("q111_deletion_vectors",
-        s"""WITH rows_all AS (
-           |  SELECT clip_id, codec, dur_ms, sr_hz, transcript,
-           |    filename AS fpath, file_row_number AS fpos
-           |  FROM read_parquet(${OracleFixtures.pathList(rawFiles.map(_.path))},
-           |    filename=true, file_row_number=true)),
-           |delk AS (SELECT file_path, pos
-           |  FROM read_parquet(${OracleFixtures.pathList(pairFiles.map(_.path))}))
-           |SELECT a.clip_id, a.codec, a.dur_ms, a.sr_hz, a.transcript
-           |FROM rows_all a LEFT JOIN delk
-           |  ON a.fpath = delk.file_path AND a.fpos = delk.pos
-           |WHERE delk.file_path IS NULL""".stripMargin)
-      val (_, merged, _) = Deletes.compactPositional(s, store, pack = true,
-        runId = "q111-pack")
+      val store = positionDeleteStory(s, d, "q111_deletion_vectors") { (store, n) =>
+        Deletes.deleteWhere(s, store, Seq(Pred.EqualTo("codec", Pcm.Pcm8),
+          Pred.Lt("clip_id", ClipSynth.clipId(n / 2))),
+          positional = true, runId = "q111-delete-a")
+        Deletes.deleteWhere(s, store, Seq(Pred.EqualTo("codec", Pcm.Pcm8)),
+          positional = true, runId = "q111-delete-b")
+      }
+      val (_, merged, _) = Deletes.compactPositional(s, store,
+        runId = "q111-compact-deletes")
       val dels = store.deleteEntries(store.currentSnapshotId.get)
-      require(merged == pairFiles.size && dels.nonEmpty &&
-        dels.forall(e => Deletes.isVector(s, e.path)),
-        "q111 must read through the PACKED representation")
+      require(merged == 2 && dels.size == 1 && dels.forall(Deletes.isPositional),
+        s"q111 must read through ONE merged deletion-vector file (merged $merged, now $dels)")
       store.scanCurrent(s)
         .select("clip_id", "codec", "dur_ms", "sr_hz", "transcript")
     })
   )
+
+  /** The q110/q111 story up to its maintenance step: two appends of
+   * `clipCount` clips, `delete(store, n)` (position deletes whose union is
+   * `codec = pcm8`), then a re-insert of 8 deleted keys with new content —
+   * different physical rows, never masked by the committed positions.
+   * Registers `name`'s oracle, a DuckDB replay of the PREDICATE from raw
+   * files only: the rows of the pre-delete files with another codec, plus
+   * EVERY row of the files appended after the delete. */
+  private def positionDeleteStory(s: SparkSession, d: String, name: String)(
+      delete: (MetaStore, Long) => Unit): MetaStore = {
+    import s.implicits._
+    val store = MetaStore.forClips(OracleFixtures.freshDir(s"${name.take(4)}_store", d))
+    val n = clipCount(d)
+    Append.run(s, store, s.range(0, n / 2, 1L, 4).map(i => ClipSynth.clip(i, 150)).toDF())
+    Append.run(s, store, s.range(n / 2, n, 1L, 4).map(i => ClipSynth.clip(i, 150)).toDF())
+    val preDelete = store.entries(store.currentSnapshotId.get).map(_.path)
+    delete(store, n)
+    val reIdx = (0L until n).filter(i => ClipSynth.codec(i) == Pcm.Pcm8).take(8)
+    Append.run(s, store,
+      reIdx.toDS().repartition(1).map(i => ClipSynth.clip(i, 150)).toDF()
+        .withColumn("transcript", concat(col("transcript"), lit(" v2"))))
+    val appended = store.entries(store.currentSnapshotId.get).map(_.path)
+      .filterNot(preDelete.toSet)
+    val cols = "clip_id, codec, dur_ms, sr_hz, transcript"
+    OracleFixtures.register(name,
+      s"""SELECT $cols FROM read_parquet(${OracleFixtures.pathList(preDelete)})
+         |WHERE codec <> '${Pcm.Pcm8}'
+         |UNION ALL
+         |SELECT $cols FROM read_parquet(${OracleFixtures.pathList(appended)})""".stripMargin)
+    store
+  }
 
   /** Unrolled Morton interleave for the DuckDB oracle: px bit j -> 2j,
    * sy bit j -> 2j+1, j = 0..7. */

@@ -101,6 +101,23 @@ class AutoMaintainSpec extends AnyFunSuite {
     assert(AutoMaintain.plan(store, policy).isEmpty, "fixed point")
   }
 
+  test("a deletion vector's masked rows count toward the delete-row bound") {
+    val store = newStore()
+    Append.run(spark, store, ClipSynth.dataset(spark, 300, 4, maxDurMs = 150).toDF())
+    val policy = MaintenancePolicy(maxSmallFiles = 1000, maxOverlapDepth = 1e9,
+      expireKeepLast = 100, maxDeleteRowFrac = 0.02)
+    // 20 of 300 rows (6.7 %) masked by ONE vector row
+    import spark.implicits._
+    val f = store.entries(store.currentSnapshotId.get).maxBy(_.rows)
+    Deletes.runPositional(spark, store,
+      (0L until 20L).map(p => (f.path, p)).toDF("file_path", "pos"),
+      expectedSnapshot = store.currentSnapshotId.get)
+    val dels = store.deleteEntries(store.currentSnapshotId.get)
+    assert(dels.size == 1 && dels.head.rows == 20, s"dels=$dels")
+    val plan = AutoMaintain.plan(store, policy)
+    assert(plan.map(_.op) == Seq("materialize-deletes"), s"plan=$plan")
+  }
+
   test("per-tuple small-file accounting: lone files per partition are not debt") {
     val store = newStore()
     store.setPartitionSpec(graft.table.PartitionSpec(Seq(

@@ -307,9 +307,9 @@ class DeleteSpec extends AnyFunSuite {
       Seq(Pred.EqualTo("codec", "ulaw")), positional = true)
     assert(res.deleteRows == expectGone.size.toLong)
     val dels = store.deleteEntries(store.currentSnapshotId.get)
-    assert(dels.nonEmpty &&
+    assert(dels.size == 1 && Deletes.isPositional(dels.head) &&
       spark.read.parquet(dels.head.path).columns.sorted.sameElements(
-        Array("file_path", "pos")))
+        Array("dv", "file_path")), "the residue is stored as deletion vectors")
     assert(visibleIds(store).intersect(expectGone).isEmpty)
 
     // pruned scan stays exact under live position deletes
@@ -409,60 +409,136 @@ class DeleteSpec extends AnyFunSuite {
     val ps = Seq(0L, 1L, 7L, 8L, 63L, 64L, 65L, 511L, 513L)
     val dv = encode(ps)
     assert(expand(dv) == ps.sorted)
+    assert(cardinality(dv) == ps.size)
     ps.foreach(p => assert(contains(dv, p), s"bit $p"))
     Seq(2L, 9L, 62L, 66L, 512L, 514L, 100000L).foreach(p =>
       assert(!contains(dv, p), s"bit $p must be clear"))
     assert(!contains(dv, -1L))
     assert(!contains(null, 3L), "null vector masks nothing")
-    intercept[IllegalArgumentException] { encode(Seq(MaxPackPos + 1)) }
+
+    // a payload from the bitset-only encoder (rows 0, 1, 7, 8) decodes as is
+    val written = Array[Byte](0x83.toByte, 0x01)
+    assert(encode(Seq(8L, 0L, 7L, 1L)).sameElements(written))
+    assert(expand(written) == Seq(0L, 1L, 7L, 8L) && cardinality(written) == 4)
+    assert(contains(written, 7L) && !contains(written, 2L) && !contains(written, 9L))
+
+    // past MaxPackPos the mask is stored as sorted runs, not a dense bitset
+    val far = Seq(3L, 4L, 5L, MaxPackPos + 1, 1L << 40, (1L << 40) + 1)
+    val runs = encode(far.reverse :+ 4L)
+    assert(runs.length == 3 * 16 + 1, s"three runs: ${runs.length} bytes")
+    assert(expand(runs) == far && cardinality(runs) == far.size)
+    far.foreach(p => assert(contains(runs, p), s"run position $p"))
+    Seq(-1L, 0L, 2L, 6L, MaxPackPos, MaxPackPos + 2, (1L << 40) - 1, (1L << 40) + 2)
+      .foreach(p => assert(!contains(runs, p), s"run position $p must be clear"))
   }
 
-  test("compactPositional(pack): masks re-emit as deletion vectors, visibility unchanged") {
+  test("compactPositional folds vector files into one; visibility unchanged") {
     val store = freshStore("dv")
     seed(store)
     val files = store.entries(store.currentSnapshotId.get)
-    // two pair-form commits over two different files
+    // two delete commits over two different files
     files.take(2).foreach { f =>
       Deletes.runPositional(spark, store,
         Seq((f.path, 0L), (f.path, 2L)).toDF("file_path", "pos"),
         expectedSnapshot = store.currentSnapshotId.get)
     }
     val expect = visibleIds(store)
-    val (id1, merged, dropped) = Deletes.compactPositional(spark, store, pack = true)
+    val (id1, merged, dropped) = Deletes.compactPositional(spark, store)
     assert(merged == 2 && dropped == 0)
     val dels = store.deleteEntries(id1)
-    assert(dels.size == 1 && Deletes.isVector(spark, dels.head.path),
-      s"one packed vector file expected: $dels")
-    assert(dels.head.rows == 2, "one dv ROW per masked data file")
-    assert(visibleIds(store) == expect, "packing must not change visibility")
-    // the packed pairs expand to exactly the original masks
+    assert(dels.size == 1 && Deletes.isPositional(dels.head),
+      s"one merged vector file expected: $dels")
+    assert(spark.read.parquet(dels.head.path).count() == 2,
+      "one dv ROW per masked data file")
+    assert(dels.head.rows == 4, "the entry counts the rows it masks")
+    assert(visibleIds(store) == expect, "merging must not change visibility")
+    // the merged vectors expand to exactly the original masks
     val pairs = Deletes.positionPairs(spark, dels)
       .as[(String, Long)].collect().toSet
     assert(pairs == files.take(2).flatMap(f =>
       Seq((f.path, 0L), (f.path, 2L))).toSet)
 
-    // a NEW pair-form delete coexists with the live vector: both apply
-    val f3 = files(2)
-    val victim = spark.read.parquet(f3.path)
-      .limit(1).select("clip_id").as[String].collect().head
+    // a second vector naming an already-masked file: both apply
+    val f0 = files.head
+    val victim = spark.read.parquet(f0.path)
+      .select("clip_id").as[String].collect()(1)
     Deletes.runPositional(spark, store,
-      Seq((f3.path, 0L)).toDF("file_path", "pos"),
+      Seq((f0.path, 1L)).toDF("file_path", "pos"),
       expectedSnapshot = store.currentSnapshotId.get)
-    assert(visibleIds(store) == expect - victim, "mixed dv + pair forms apply")
+    assert(visibleIds(store) == expect - victim, "two vectors on one file apply")
 
-    // packing again folds BOTH forms into one vector file
-    val (id2, m2, _) = Deletes.compactPositional(spark, store, pack = true)
+    // merging again folds both into one vector per data file
+    val (id2, m2, _) = Deletes.compactPositional(spark, store)
     val dels2 = store.deleteEntries(id2)
-    assert(m2 == 2 && dels2.size == 1 && Deletes.isVector(spark, dels2.head.path))
-    assert(dels2.head.rows == 3)
+    assert(m2 == 2 && dels2.size == 1 && dels2.head.rows == 5)
+    assert(spark.read.parquet(dels2.head.path).count() == 2)
     assert(visibleIds(store) == expect - victim)
 
-    // rewrites materialize vectors like pairs; dead vectors then retire
+    // rewrites materialize vectors; dead vectors then retire
     Compact.run(spark, store, targetBytes = 4L * 1024 * 1024)
     assert(visibleIds(store) == expect - victim)
-    val (id3, _, dropped3) = Deletes.compactPositional(spark, store, pack = true)
+    val (id3, _, dropped3) = Deletes.compactPositional(spark, store)
     assert(dropped3 == 5 && store.deleteEntries(id3).isEmpty,
       "dead-path masks inside vectors are pruned")
+  }
+
+  test("legacy (file_path, pos) pair files apply, diff, merge and materialize like vectors") {
+    val store = freshStore("legacy")
+    seed(store)
+    val base = store.currentSnapshotId.get
+    val files = store.entries(base)
+    val pairMasks = Seq((files(0).path, 0L), (files(0).path, 2L)).toDF("file_path", "pos")
+    val vecMasks = Seq((files(1).path, 1L)).toDF("file_path", "pos")
+    def rows(): Seq[String] = store.scanCurrent(spark)
+      .select("clip_id", "codec", "dur_ms", "transcript")
+      .collect().map(_.mkString("|")).sorted.toSeq
+    def cdc(to: Long): Set[(String, String)] =
+      Changes.rowChanges(spark, store, base, to).as[(String, String)].collect().toSet
+
+    // reference: both masks committed as vectors
+    Deletes.runPositional(spark, store, pairMasks, expectedSnapshot = base)
+    Deletes.runPositional(spark, store, vecMasks,
+      expectedSnapshot = store.currentSnapshotId.get)
+    val want = rows()
+    val wantCdc = cdc(store.currentSnapshotId.get)
+    assert(want.size == 60 - 3 && wantCdc.size == 3)
+
+    // the same masks with the first one as a pair file, as tables written
+    // before vectors were the only form hold them
+    Refs.rollback(store, base)
+    val dir = store.newDataDir("posdelete")
+    pairMasks.coalesce(1).write.mode("overwrite").parquet(dir)
+    val pairOnly =
+      store.commitDelta("delete", Nil, addedDeletes = store.collectStats(spark, dir))
+    Deletes.runPositional(spark, store, vecMasks,
+      expectedSnapshot = store.currentSnapshotId.get)
+    val mixed = store.currentSnapshotId.get
+    assert(rows() == want, "pair and vector forms apply together")
+    assert(cdc(mixed) == wantCdc)
+
+    // compactPositional rewrites them as ONE vector file
+    val (id, merged, dropped) = Deletes.compactPositional(spark, store)
+    val dels = store.deleteEntries(id)
+    assert(merged == 2 && dropped == 0 && dels.size == 1 && dels.head.rows == 3)
+    assert(spark.read.parquet(dels.head.path).columns.sorted
+      .sameElements(Array("dv", "file_path")))
+    assert(rows() == want)
+
+    // materialize reads the pair file like a vector
+    Refs.rollback(store, mixed)
+    val m = Deletes.materialize(spark, store)
+    assert(m.deletesRetired == 2 && m.filesRewritten == 2)
+    assert(store.deleteEntries(m.snapshotId).isEmpty && rows() == want)
+
+    // a lone pair file is converted too, though nothing merges or prunes;
+    // the converted table is then a fixed point
+    Refs.rollback(store, pairOnly)
+    val (id1, m1, _) = Deletes.compactPositional(spark, store)
+    val dels1 = store.deleteEntries(id1)
+    assert(m1 == 1 && dels1.size == 1 && dels1.head.rows == 2)
+    assert(spark.read.parquet(dels1.head.path).columns.sorted
+      .sameElements(Array("dv", "file_path")))
+    assert(Deletes.compactPositional(spark, store) == ((id1, 0, 0L)))
   }
 
   test("CDC resolves deletion-vector masks back to keys") {
@@ -475,7 +551,7 @@ class DeleteSpec extends AnyFunSuite {
     Deletes.runPositional(spark, store,
       Seq((target.path, 0L), (target.path, 1L)).toDF("file_path", "pos"),
       expectedSnapshot = from)
-    Deletes.compactPositional(spark, store, pack = true)
+    Deletes.compactPositional(spark, store)
     val to = store.currentSnapshotId.get
     val rows = Changes.rowChanges(spark, store, from, to)
       .as[(String, String)].collect().toMap
