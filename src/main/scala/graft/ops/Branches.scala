@@ -144,9 +144,10 @@ object Branches {
   /**
    * Create branch `name` at `fromSnapshot` (default: current). Zero-copy:
    * the branch's seed snapshot points at the parent's files under the SAME
-   * snapshot id ([[MetaStore.seedFork]]). The parent's partition spec and
-   * evolution log are copied so branch scans and writes resolve hidden
-   * partitions and per-era defaults exactly like the parent.
+   * snapshot id ([[MetaStore.seedFork]]), which also carries the parent's
+   * evolution list and each file's era. The parent's partition spec is
+   * copied, so branch scans and writes resolve hidden partitions and
+   * per-era defaults exactly like the parent.
    *
    * Crash windows: the record is claimed LAST, so a branch dir without a
    * record (crash mid-create, or mid-[[drop]] after the record went) is
@@ -169,25 +170,12 @@ object Branches {
     val fork = if (fromSnapshot >= 0) fromSnapshot
       else main.currentSnapshotId.getOrElse(sys.error("branch: empty table"))
     require(Files.exists(main.log.path(fork)), s"branch: no snapshot $fork")
-    // schema-era + partition metadata travel with the fork (read-side deps)
-    val srcMeta = Paths.get(main.tableDir, "meta")
-    val dstMeta = Paths.get(b.tableDir, "meta")
-    Seq("partition-spec.json", "evolutions.json").foreach { f =>
-      val s = srcMeta.resolve(f)
-      if (Files.exists(s))
-        Files.copy(s, dstMeta.resolve(f), StandardCopyOption.REPLACE_EXISTING)
-    }
-    val evoDir = srcMeta.resolve("evolutions")
-    if (Files.isDirectory(evoDir)) {
-      Files.createDirectories(dstMeta.resolve("evolutions"))
-      val stream = Files.list(evoDir)
-      try stream.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".json"))
-        .foreach(p => Files.copy(p,
-          dstMeta.resolve("evolutions").resolve(p.getFileName.toString),
-          StandardCopyOption.REPLACE_EXISTING))
-      finally stream.close()
-    }
+    // the partition spec travels with the fork (a read-side dependency);
+    // the evolution list travels in the fork snapshot
+    val spec = Paths.get(main.tableDir, "meta", "partition-spec.json")
+    if (Files.exists(spec))
+      Files.copy(spec, Paths.get(b.tableDir, "meta", "partition-spec.json"),
+        StandardCopyOption.REPLACE_EXISTING)
     b.seedFork(main, fork)
     claimRecord(main, BranchRec(name, fork.toString,
       System.currentTimeMillis(), Evolve.evolutions(main).size,

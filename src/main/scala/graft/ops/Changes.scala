@@ -87,7 +87,7 @@ object Changes {
         "use rowChanges for ranges crossing rewrites")
     val d = fileDiff(store, fromId, toId)
     if (d.added.isEmpty) store.scan(spark, toId).limit(0)
-    else Evolve.readFiles(spark, store, d.added)
+    else Evolve.readFiles(spark, store, d.added, Evolve.evolutions(store))
   }
 
   /**

@@ -56,7 +56,7 @@ object Compact {
       Evolve.evolutions(store).isEmpty
     val tagged =
       if (plainLayout)
-        Evolve.readFiles(spark, store, toRewrite.flatten)
+        Evolve.readFiles(spark, store, toRewrite.flatten, Nil)
           .withColumn("_bin", norm(input_file_name()))
       else
         toRewrite.zipWithIndex.map { case (bin, i) =>

@@ -215,13 +215,14 @@ object Deletes {
     val dels = store.deleteEntries(snapshotId).sortBy(_.seq)
     val (posDels, eqDels) = dels.partition(isPositional)
     val needPos = withPos || posDels.nonEmpty
-    if (dels.isEmpty && !needPos) return Evolve.readFiles(spark, store, files)
+    val evos = Evolve.evolutions(store)
+    if (dels.isEmpty && !needPos) return Evolve.readFiles(spark, store, files, evos)
     val delSeqs = eqDels.map(_.seq)
     // boundary index = how many equality deletes DON'T apply (seq <= file
     // seq); applicable set for the group = eqDels.drop(boundary)
     val groups = files.groupBy(f => delSeqs.count(_ <= f.seq))
     val eqApplied = groups.toSeq.sortBy(_._1).map { case (boundary, fs) =>
-      applyTo(spark, Evolve.readFiles(spark, store, fs, needPos),
+      applyTo(spark, Evolve.readFiles(spark, store, fs, evos, needPos),
         eqDels.drop(boundary))
     }.reduce(_.unionByName(_))
     val visible =

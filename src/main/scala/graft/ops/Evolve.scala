@@ -3,53 +3,39 @@ package graft.ops
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import graft.table.{Json, MetaFs, MetaStore}
+import graft.table.{DataFile, Evolution, Json, MetaFs, MetaStore, Snapshot}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** One schema evolution. The files captured in `paths` were written BEFORE
- * it, under `schemaBeforeJson` (the era's physical layout); files written
- * after carry `schemaAfterJson` physically.
- *
- *  - `kind = "add"`: pre-files take `defaultSql` for `column` on read
- *    (including a dropped-then-re-added name whose stale bytes must NOT
- *    resurface — the column logically did not exist in those files);
- *    post-files keep their written values, genuine NULLs included.
- *  - `kind = "rename"`: pre-files store the data under `renamedFrom` and are
- *    read via a rename projection; values are untouched.
- *  - `kind = "drop"`: pre-files still carry the bytes; the column is
- *    projected away on read (column pruning makes that free).
- *
- * `schemaBeforeJson` is empty on records written before rename/drop support;
- * for those (always `add`) the before-schema is the after-schema minus the
- * added column. */
-final case class Evolution(
-    column: String,
-    typeDdl: String,
-    defaultSql: String,
-    schemaAfterJson: String,
-    paths: Seq[String],
-    kind: String = "add",
-    renamedFrom: String = "",
-    schemaBeforeJson: String = "")
-
-final case class EvolutionLog(evolutions: Seq[Evolution])
+/** The legacy single-file log, `meta/evolutions.json`. */
+private final case class EvolutionLog(evolutions: Seq[Evolution])
 
 /**
- * Additive schema evolution with Iceberg-style initial defaults, without
- * rewriting a single data file: an `addColumn` commit records (column, type,
- * default, the CURRENT file list) in `meta/evolutions.json`. Readers group a
- * snapshot's files by which evolutions they predate and fill the default
- * only for those groups — a file that physically lacks the column reads as
- * all-NULL there, so `coalesce(col, default)` fills exactly the pre-evolution
- * rows; post-evolution files keep their values, explicit NULLs included.
+ * Schema evolution without rewriting a single data file (Iceberg's
+ * schema list with initial defaults): add, rename, drop and widen. The
+ * table's evolutions are a list in every snapshot record
+ * ([[Snapshot.evolutions]]); an evolve commit is a metadata-only snapshot
+ * whose record appends one [[Evolution]] to its parent's list, so the
+ * evolution publishes in the same [[graft.table.MetaLog]] claim as the
+ * snapshot — whole or not at all. Each data file carries its era
+ * ([[DataFile.schemaId]]), stamped at commit. Readers group a snapshot's
+ * files by era, read each group under its era's physical schema and replay
+ * the later evolutions on it; a file that physically lacks an added column
+ * takes that column's default, while newer files keep their values,
+ * explicit NULLs included.
  *
- * Self-healing: Compact/Cluster read through [[MetaStore.scan]], so their
- * rewrites MATERIALIZE the default into the new files, which then drop out
- * of every evolution's path set — the log's effective size shrinks as
- * maintenance runs. (At 10^5-10^6 files the sidecar should shard like the
- * manifests do; same bound, same fix, noted in MetaStore.manifestShardSize.)
+ * Reads use the head's list for every snapshot, a tag's included
+ * (latest schema wins). Compact/Cluster read through [[MetaStore.scan]], so
+ * their rewrites materialize the current schema into files of the current
+ * era.
+ *
+ * Tables evolved before the list existed keep their evolutions in
+ * `meta/evolutions.json` or `meta/evolutions/evo-<id>.json` records, which
+ * name the files each one predates. [[legacyEvolutions]] is the only reader
+ * of them: it supplies the list until the first evolve commit copies it
+ * into the snapshot record, and the eras of the entries written before eras
+ * existed ([[eraOf]]).
  *
  * The reference's `.meta` sidecar re-declares column types per volume
  * (cursor/src/main/java/cursors/io/ISAMCursor.kt:175-211) but has no
@@ -57,53 +43,48 @@ final case class EvolutionLog(evolutions: Seq[Evolution])
  */
 object Evolve {
 
-  private def logPath(store: MetaStore) =
-    Paths.get(store.tableDir, "meta", "evolutions.json")
+  /** (which records exist, their parse) per table dir: every scan of a
+   * legacy table consults its records, and none is written any more. */
+  private val legacyCache =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, Seq[Evolution])]()
 
-  private def evoDir(store: MetaStore) =
-    Paths.get(store.tableDir, "meta", "evolutions")
-
-  /** mtime-guarded parse cache for the LEGACY single-file log: every
-   * MetaStore.scan consults the log, and a maintenance pass issues MANY
-   * scans — re-parsing an O(files) JSON sidecar per scan is avoidable
-   * rework. Key = table dir; entry is invalidated whenever the file's
-   * (mtime, size) changes. */
-  private val logCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, Seq[Evolution])]()
-
-  /** Per-file parse cache for the write-once per-snapshot entries (an
-   * evo-<id>.json never changes after its atomic publish). */
-  private val entryCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Evolution]()
-
+  /** The legacy records, in commit order: the single-file log, then the
+   * per-snapshot `evo-<id>.json` entries by snapshot id. Empty on a table
+   * that evolved only through snapshot records. */
   private def legacyEvolutions(store: MetaStore): Seq[Evolution] = {
-    val p = logPath(store)
-    if (!Files.exists(p)) return Seq.empty
-    val mtime = Files.getLastModifiedTime(p).toMillis
-    val size = Files.size(p)
-    val cached = logCache.get(store.tableDir)
-    if (cached != null && cached._1 == mtime && cached._2 == size) return cached._3
-    val parsed = Json.mapper.readValue[EvolutionLog](
-      new String(Files.readAllBytes(p), StandardCharsets.UTF_8)).evolutions
-    logCache.put(store.tableDir, (mtime, size, parsed))
-    parsed
+    val meta = Paths.get(store.tableDir, "meta")
+    val ids = MetaFs.versions(meta.resolve("evolutions"), "evo-")
+    val single = Files.exists(meta.resolve("evolutions.json"))
+    if (!single && ids.isEmpty) return Nil
+    val key = s"$single:${ids.mkString(",")}"
+    def read(name: String) =
+      new String(Files.readAllBytes(meta.resolve(name)), StandardCharsets.UTF_8)
+    legacyCache.compute(store.tableDir, (_, c) =>
+      if (c != null && c._1 == key) c
+      else key -> ((if (single)
+        Json.mapper.readValue[EvolutionLog](read("evolutions.json")).evolutions else Nil) ++
+        ids.map(id => Json.mapper.readValue[Evolution](read(s"evolutions/evo-$id.json")))))._2
   }
 
-  /**
-   * The table's evolution log, in commit order: any legacy single-file
-   * entries (pre-dating per-snapshot records, never written anymore)
-   * followed by the write-once `meta/evolutions/evo-<snapId>.json` entries
-   * sorted by snapshot id. Per-snapshot files make the log append-only with
-   * NO read-modify-write: two racing evolvers each publish under their own
-   * committed snapshot id (unique by the commit CAS), so neither can clobber
-   * the other — the lost-update window of rewriting one shared JSON is gone.
-   */
-  def evolutions(store: MetaStore): Seq[Evolution] = {
-    val d = evoDir(store)
-    legacyEvolutions(store) ++ MetaFs.versions(d, "evo-").map { id =>
-      entryCache.computeIfAbsent(d.resolve(s"evo-$id.json").toString, pp =>
-        Json.mapper.readValue[Evolution](new String(
-          Files.readAllBytes(Paths.get(pp)), StandardCharsets.UTF_8)))
+  /** The evolution list `snap` carries, or the legacy records' when it
+   * carries none. */
+  private def evolutionsAt(store: MetaStore, snap: Option[Snapshot]): Seq[Evolution] =
+    snap.map(_.evolutions).filter(_.nonEmpty)
+      .getOrElse(legacyEvolutions(store).map(_.copy(paths = Nil)))
+
+  /** The table's evolutions in commit order: the head's list. */
+  def evolutions(store: MetaStore): Seq[Evolution] =
+    evolutionsAt(store, store.currentSnapshot)
+
+  /** Each file's era: its `schemaId`, or for a `0` entry of a legacy table
+   * the index of the first legacy record whose `paths` name it (the
+   * captures are monotone: a file live at record k is named by every later
+   * one), else the legacy record count. */
+  def eraOf(store: MetaStore): DataFile => Int = {
+    lazy val legacy = legacyEvolutions(store).map(_.paths.toSet)
+    f => if (f.schemaId > 0 || legacy.isEmpty) f.schemaId else {
+      val k = legacy.indexWhere(_.contains(f.path))
+      if (k < 0) legacy.size else k
     }
   }
 
@@ -121,7 +102,7 @@ object Evolve {
         org.apache.spark.sql.types.StructField(
           column, org.apache.spark.sql.types.DataType.fromDDL(typeDdl),
           nullable = true))
-      (Evolution(column, typeDdl, defaultSql, after.json, Nil,
+      (Evolution(column, typeDdl, defaultSql, after.json,
         kind = "add", schemaBeforeJson = before.json),
         Map("column" -> column, "type" -> typeDdl, "default" -> defaultSql))
     }
@@ -145,7 +126,7 @@ object Evolve {
       requireUnbound(spark, store, from, "rename")
       val after = StructType(before.fields.map(f =>
         if (f.name == from) f.copy(name = to) else f))
-      (Evolution(to, "", "", after.json, Nil,
+      (Evolution(to, "", "", after.json,
         kind = "rename", renamedFrom = from, schemaBeforeJson = before.json),
         Map("renamedFrom" -> from, "column" -> to))
     }
@@ -164,7 +145,7 @@ object Evolve {
       require(before.fields.length > 1, "cannot drop the last column")
       requireUnbound(spark, store, column, "drop")
       val after = StructType(before.fields.filterNot(_.name == column))
-      (Evolution(column, "", "", after.json, Nil,
+      (Evolution(column, "", "", after.json,
         kind = "drop", schemaBeforeJson = before.json),
         Map("column" -> column, "dropped" -> "true"))
     }
@@ -205,7 +186,7 @@ object Evolve {
       requireUnbound(spark, store, column, "widen")
       val after = StructType(before.fields.map(f =>
         if (f.name == column) f.copy(dataType = to) else f))
-      (Evolution(column, toTypeDdl, "", after.json, Nil,
+      (Evolution(column, toTypeDdl, "", after.json,
         kind = "widen", schemaBeforeJson = before.json),
         Map("column" -> column, "widenedTo" -> toTypeDdl))
     }
@@ -227,74 +208,39 @@ object Evolve {
         "it (retire the debt first: Deletes.materialize / expireInert)")
   }
 
-  /** Shared evolution commit: capture the live-file set, commit a no-op
-   * snapshot under CAS, then publish the extended log atomically. */
+  /** Shared evolution commit: the head's list plus the new entry, published
+   * by one metadata-only snapshot. `mk` validates against the head's
+   * schema, so the commit is pinned to that head: a racing evolver's win
+   * fails the CAS and the retry re-reads. */
   private def record(spark: SparkSession, store: MetaStore, what: String)(
       mk: StructType => (Evolution, Map[String, String])): Long =
-    graft.table.MetaStore.withCommitRetry() {
-    val snapId = store.currentSnapshotId.getOrElse(sys.error("evolve: empty table"))
-    val before = store.scan(spark, snapId).schema
-    val (evo0, summary) = mk(before)
-    // pre-evolution paths = files reachable from ANY live snapshot, not just
-    // CURRENT: a pinned tag or rollback target may reference files already
-    // rewritten away from the head — those files also predate this evolution,
-    // and omitting them would give Refs.scanTag the wrong era treatment
-    // (latest-schema-wins contract)
-    val prePaths = store.allSnapshotIds.flatMap(store.entries)
-      .map(_.path).distinct.toVector
-    val evo = evo0.copy(paths = prePaths)
-    // a concurrent evolver that committed but has not yet published its
-    // entry would make `before` (and mk's validation) stale — fail loudly
-    // (retryable: the publisher writes its entry microseconds after its
-    // commit, so the retry sees it). Only checkable for per-snapshot-era
-    // entries (legacy-log tables can't map entries to snapshot ids); expired
-    // snapshots don't matter — their entries outlive them by design.
-    if (!Files.exists(logPath(store))) {
-      val missing = store.allSnapshotIds.filter(i =>
-        store.snapshot(i).operation == "evolve" &&
-          !Files.exists(evoDir(store).resolve(s"evo-$i.json")))
-      if (missing.nonEmpty)
-        throw new graft.table.ConcurrentCommitException(
-          s"evolve snapshot(s) ${missing.mkString(",")} have no published " +
-            "log entry yet — concurrent evolver mid-publish")
+    MetaStore.withCommitRetry() {
+      val head = store.currentSnapshot.getOrElse(sys.error("evolve: empty table"))
+      val (evo, summary) = mk(store.scan(spark, head.id).schema)
+      store.commitDelta("evolve", Nil,
+        summary = summary + ("evolution" -> what),
+        expectedParent = Some(head.id),
+        evolutions = Some(evolutionsAt(store, Some(head)) :+ evo))
     }
-    // commit FIRST, then publish the entry atomically as a WRITE-ONCE
-    // per-snapshot file (evo-<id>.json, id unique by the commit CAS): a
-    // crash between the two leaves a harmless no-op "evolve" snapshot,
-    // never a log that retro-actively rewrites pinned reads, never a torn
-    // file, and never a lost update between two racing evolvers (nobody
-    // rewrites a shared log file).
-    // expectedParent: a file appended between the prePaths capture and this
-    // commit would be misclassified as post-evolution — the CAS fails
-    // instead and the retry recaptures.
-    val id = store.commitDelta("evolve", Nil,
-      summary = summary + ("evolution" -> what),
-      expectedParent = Some(snapId))
-    Files.createDirectories(evoDir(store))
-    if (!MetaFs.claim(evoDir(store).resolve(s"evo-$id.json"),
-        Json.mapper.writeValueAsString(evo).getBytes(StandardCharsets.UTF_8)))
-      throw new IllegalStateException(
-        s"evo-$id.json already exists: snapshot $id's log entry is write-once")
-    id
-  }
 
   /**
-   * Evolution-aware read of an arbitrary file subset: group files by the SET
-   * of evolutions they predate (at most one group per era in practice), read
-   * each group under the declared schema (absent columns -> NULL), fill that
-   * group's defaults, and union. Rows are identical to a full
-   * rewrite-on-evolve, at zero write cost. Used by every scan (through
+   * Evolution-aware read of an arbitrary file subset: group files by era
+   * ([[eraOf]]), read each group under its era's schema (absent columns ->
+   * NULL), replay the later evolutions on it, and union. Rows are identical
+   * to a full rewrite-on-evolve, at zero write cost. Used by every scan (through
    * [[Deletes.readFiles]]) AND by direct-file maintenance readers (per-bin
    * compaction), so every rewrite materializes the defaults regardless of
    * which path it reads through.
-   */
-  /** @param withPos attach [[Deletes.PosPathCol]]/[[Deletes.PosIdxCol]]
+   *
+   * @param evos the table's list ([[evolutions]]), read once by the caller
+   *   for all the groups of one scan
+   * @param withPos attach [[Deletes.PosPathCol]]/[[Deletes.PosIdxCol]]
    *   (normalized source path + 0-based row index, from the parquet source's
    *   `_metadata` hidden columns) at the RAW read — before any era
    *   projection — so position deletes can be applied and resolved on
    *   physical row identity. */
   def readFiles(spark: SparkSession, store: MetaStore,
-                files: Seq[graft.table.DataFile],
+                files: Seq[DataFile], evos: Seq[Evolution],
                 withPos: Boolean = false): DataFrame = {
     // static decode (no instance capture): _metadata.file_path is a
     // URI-ENCODED uri; position identity must match the manifests' decoded
@@ -305,28 +251,21 @@ object Evolve {
       else df
         .withColumn(Deletes.PosPathCol, decodeUdf(col("_metadata.file_path")))
         .withColumn(Deletes.PosIdxCol, col("_metadata.row_index"))
-    val evos = evolutions(store)
     if (evos.isEmpty) return pos(spark.read.parquet(files.map(_.path): _*))
     val declared = org.apache.spark.sql.types.DataType.fromJson(
       evos.last.schemaAfterJson).asInstanceOf[StructType]
-    val evoSets = evos.map(_.paths.toSet)
-    // era(f) = index of the first evolution f predates (capture sets are
-    // monotone: a file live at evolution k is captured by every later one),
-    // evos.length = written after all of them. Each group is read under ITS
-    // era's physical schema, then the subsequent evolutions replay in order:
-    // add fills the default OUTRIGHT (the column logically did not exist in
-    // pre-add files — a dropped-then-re-added name may be physically present
-    // with stale bytes that must not resurface; genuinely-absent columns
-    // read the same either way), rename/drop are projections.
-    def era(f: graft.table.DataFile): Int = {
-      val k = evoSets.indexWhere(_.contains(f.path))
-      if (k < 0) evos.length else k
-    }
+    // each era's group is read under ITS physical schema, then the later
+    // evolutions replay in order: add fills the default OUTRIGHT (the
+    // column logically did not exist in older files — a dropped-then-
+    // re-added name may be physically present with stale bytes that must
+    // not resurface; genuinely-absent columns read the same either way),
+    // rename/drop are projections
+    val era = eraOf(store)
     val outCols = declared.fieldNames.toSeq ++
       (if (withPos) Seq(Deletes.PosPathCol, Deletes.PosIdxCol) else Nil)
     files.groupBy(era).toSeq.sortBy(_._1).map { case (k, fs) =>
       val readSchema =
-        if (k == evos.length) declared else schemaBefore(evos(k))
+        if (k >= evos.length) declared else schemaBefore(evos(k))
       val base = pos(spark.read.schema(readSchema).parquet(fs.map(_.path): _*))
       evos.drop(k).foldLeft(base) { (df, e) =>
         e.kind match {

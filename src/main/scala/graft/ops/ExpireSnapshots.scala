@@ -100,7 +100,7 @@ object ExpireSnapshots {
       val branchPinned = Branches.dataRoots(store)
       candidates.asScala.foreach { p =>
         if (!branchPinned.contains(store.normalizePath(p)) &&
-            Files.deleteIfExists(Paths.get(p))) dataDeleted += 1
+            RemoveOrphans.deleteDataFile(Paths.get(p))) dataDeleted += 1
       }
     }
     doomed.foreach { m =>

@@ -42,8 +42,9 @@ object Publish {
     val entries = store.entries(snapshotId)
     val dest = Paths.get(destDir)
     Files.createDirectories(dest)
-    val evoPaths = Evolve.evolutions(store).map(_.paths.toSet)
-    val mixedEra = entries.exists(e => evoPaths.exists(_.contains(e.path)))
+    val eras = Evolve.evolutions(store).size
+    val era = Evolve.eraOf(store)
+    val mixedEra = eras > 0 && entries.exists(era(_) < eras)
     // merge-on-read deletes: a raw file copy would ship the deleted rows —
     // any data file still covered by a delete (file seq below a delete seq)
     // forces the materializing path, same as mixed-era exports

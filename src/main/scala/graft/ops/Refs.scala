@@ -50,12 +50,8 @@ object Refs {
    * that predates `meta/refs/` fails loudly instead of reading stale tags. */
   private val Tombstone = "TOMBSTONE: refs migrated to meta/refs/\n"
 
-  private def parseRefs(bytes: Array[Byte]): RefsFile = {
-    val f = Json.mapper.readValue[RefsFile](
-      new String(bytes, StandardCharsets.UTF_8))
-    // files written before retention existed deserialize it as null
-    if (f.retention == null) f.copy(retention = Map.empty) else f
-  }
+  private def parseRefs(bytes: Array[Byte]): RefsFile =
+    Json.mapper.readValue[RefsFile](new String(bytes, StandardCharsets.UTF_8))
 
   private def log(store: MetaStore) = new MetaLog(refsDir(store), "v")
 
@@ -80,7 +76,8 @@ object Refs {
 
   private def readFile(store: MetaStore): RefsFile = readHead(store)._3
 
-  /** Versions kept at and below the head; each win retires the rest. */
+  /** Versions kept at and below the head by a retire; a win of every
+   * `Keep`-th version retires the rest, so at most `2 * Keep - 1` remain. */
   private val Keep = 16
 
   /** Run a refs read-modify-write: `body` maps the current state to
@@ -105,10 +102,12 @@ object Refs {
           if (lg.append(v, nonce, Json.mapper.writeValueAsBytes(nf))) {
             if (v == 0L && Files.exists(refsPath(store)))
               MetaFs.replace(refsPath(store), Tombstone.getBytes(StandardCharsets.UTF_8))
-            // every older version still present, so a crash before a retire
-            // is repaired by the next win
-            lg.retire(Iterator.iterate(v + 1 - Keep)(_ - 1)
-              .takeWhile(k => k > 0 && Files.exists(lg.path(k))).toSeq)
+            // a retire lists the directory, so it runs once per Keep wins;
+            // it takes every older version still present, so a crash before
+            // one is repaired by the next Keep-th win
+            if ((v + 1) % Keep == 0)
+              lg.retire(Iterator.iterate(v + 1 - Keep)(_ - 1)
+                .takeWhile(k => k > 0 && Files.exists(lg.path(k))).toSeq)
             out = Some(result)
           } else {
             attempts += 1

@@ -22,9 +22,11 @@ final case class OrphanResult(scanned: Int, orphansDeleted: Int, bytesFreed: Lon
  * its commit leaves files on disk that no snapshot references — invisible to
  * readers (snapshot isolation) and to [[ExpireSnapshots]] (which only walks
  * committed snapshots), but costing storage forever. This action deletes
- * data files unreachable from ANY snapshot, and the manifests no snapshot
- * names, with an age floor so an in-flight (written-but-not-yet-committed)
- * maintenance pass is never clobbered — the same contract as Iceberg's
+ * data files unreachable from ANY snapshot, the manifests no snapshot
+ * names, `_SUCCESS` markers, checksums whose file is gone and the
+ * directories left empty, with an
+ * age floor so an in-flight (written-but-not-yet-committed) maintenance
+ * pass is never clobbered — the same contract as Iceberg's
  * remove_orphan_files.
  */
 object RemoveOrphans {
@@ -51,6 +53,15 @@ object RemoveOrphans {
         catch { case _: Exception => Seq.empty[String] }
       }.toSet
     finally stream.close()
+  }
+
+  /** Delete data file `p` and the `.<name>.crc` checksum Hadoop's local
+   * filesystem writes beside it; true when `p` was there. A checksum left
+   * without its file goes in orphan GC's sweep. */
+  private[ops] def deleteDataFile(p: Path): Boolean = {
+    val gone = Files.deleteIfExists(p)
+    if (gone) Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
+    gone
   }
 
   /** @param minAgeMs only files older than this are deletable (default 1 h);
@@ -80,21 +91,41 @@ object RemoveOrphans {
     var scanned = 0
     var deleted = 0
     var freed = 0L
-    val stream = Files.walk(dataDir)
-    try {
-      stream.iterator().asScala.foreach { p: Path =>
-        if (Files.isRegularFile(p) && p.toString.endsWith(".parquet")) {
+    // each directory's age is read before its entries go (which bumps it)
+    val oldDirs = scala.collection.mutable.Stack[Boolean]()
+    Files.walkFileTree(dataDir, new SimpleFileVisitor[Path] {
+      override def preVisitDirectory(d: Path, a: BasicFileAttributes): FileVisitResult = {
+        oldDirs.push(a.lastModifiedTime.toMillis < cutoff)
+        FileVisitResult.CONTINUE
+      }
+      override def visitFile(p: Path, a: BasicFileAttributes): FileVisitResult = {
+        val n = p.getFileName.toString
+        val old = a.lastModifiedTime.toMillis < cutoff
+        if (n.endsWith(".parquet")) {
           scanned += 1
-          val norm = store.normalizePath(p.toString)
-          if (!reachable.contains(norm) &&
-              Files.getLastModifiedTime(p).toMillis < cutoff) {
-            freed += Files.size(p)
-            Files.delete(p)
+          if (old && !reachable.contains(store.normalizePath(p.toString)) &&
+              deleteDataFile(p)) {
+            freed += a.size
             deleted += 1
           }
-        }
+        } else if (old && n == "_SUCCESS") deleteDataFile(p)
+        // a live file keeps its checksum: reads through Hadoop verify it
+        else if (old && n.startsWith(".") && n.endsWith(".crc") &&
+            !Files.exists(p.resolveSibling(n.substring(1, n.length - 4))))
+          Files.deleteIfExists(p)
+        FileVisitResult.CONTINUE
       }
-    } finally stream.close()
+      // a write directory left with no entry goes too
+      override def postVisitDirectory(d: Path, e: IOException): FileVisitResult = {
+        if (oldDirs.pop() && d != dataDir)
+          try Files.deleteIfExists(d)
+          catch { case _: java.nio.file.DirectoryNotEmptyException => false }
+        FileVisitResult.CONTINUE
+      }
+      // a checksum deleted with its file may still be queued for a visit
+      override def visitFileFailed(p: Path, e: IOException): FileVisitResult =
+        FileVisitResult.CONTINUE
+    })
     OrphanResult(scanned, deleted, freed, removeCommitDebris(store, cutoff) +
       graft.table.FileBloom.removeStaleStaging(store, cutoff),
       removeUnnamedManifests(store, snaps, cutoff))

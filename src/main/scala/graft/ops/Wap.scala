@@ -158,20 +158,23 @@ object Wap {
     }
     require(force || rec.auditedMs > 0L,
       s"staged batch '$name' has not passed an audit (use audit(), or force)")
-    val evoNow = Evolve.evolutions(store).size
-    require(rec.evolutionCount == evoNow,
-      s"staged batch '$name' was written under schema era ${rec.evolutionCount} " +
-        s"but the table is now at era $evoNow; discard and re-stage")
     // probe-and-commit under the CAS: the up-front probe alone leaves a
     // window where TWO concurrent publishes of the same batch both see
     // "not yet published" and both commit (double-counted rows). Pinning
     // expectedParent to the snapshot current at probe time turns the loser
-    // into a retry, whose RE-probe then sees the winner's commit.
+    // into a retry, whose RE-probe then sees the winner's commit. The era
+    // gate runs after that pin too: the commit stamps the batch with the
+    // parent's era, so an evolution landing after the gate fails the CAS.
     val id = MetaStore.withCommitRetry() {
       publishedAs(store, rec) match {
         case Some(s) => s.id
         case None =>
           val parent = store.currentSnapshotId.getOrElse(-1L)
+          val evoNow = Evolve.evolutions(store).size
+          require(rec.evolutionCount == evoNow,
+            s"staged batch '$name' was written under schema era " +
+              s"${rec.evolutionCount} but the table is now at era $evoNow; " +
+              "discard and re-stage")
           store.commitDelta("wap-publish", rec.entries,
             summary = rec.summary ++ Map(
               "wapName" -> name,

@@ -80,7 +80,7 @@ object ChangeFeed {
       if (added.isEmpty) {
         if (appendSnaps.isEmpty) spark.emptyDataFrame
         else store.scan(spark, cur).limit(0)
-      } else Evolve.readFiles(spark, store, added)
+      } else Evolve.readFiles(spark, store, added, Evolve.evolutions(store))
     Poll(df, sinceSnapshot, cur, appendSnaps.map(_.id))
   }
 }

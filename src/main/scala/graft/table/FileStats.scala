@@ -185,7 +185,7 @@ object FileStats {
             statsColumns.filter(schema.fieldNames.contains), key, timeZone)
           bloom.foreach(b => blooms += path -> b)
           Some(DataFile(path, rows, new java.io.File(path).length(), stats,
-            partition = Partitioning.tupleOf(path)))
+            partition = Partitioning.tupleOf(path), schemaId = -1))
         }
       } finally r.close()
     }

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path}
 
 import scala.collection.mutable
 
+import com.fasterxml.jackson.annotation.JsonInclude
 import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import com.fasterxml.jackson.module.scala.{ClassTagExtensions, DefaultScalaModule}
 
@@ -32,14 +33,20 @@ final case class ColStat(min: String, max: String, numeric: Boolean, nullCount: 
  *   parsed from the file's Hive-style `_p_` path segments at stats time —
  *   the scan planner's EXACT elimination tier ([[PartitionSpec.mayMatch]]).
  *   Empty = the file was written without tuple reconstruction (pre-spec
- *   history, tuple-agnostic rewrites); such files are always kept. */
+ *   history, tuple-agnostic rewrites); such files are always kept.
+ * @param schemaId the file's era: how many of [[Snapshot.evolutions]] it
+ *   was written after. Commit stamps an entry arriving with `-1` (from
+ *   [[MetaStore.collectStats]]) with the parent's list length; any other
+ *   entry keeps its era, even when its `seq` is reset. `0` is not written,
+ *   and on a legacy-evolved table may predate eras ([[graft.ops.Evolve.eraOf]]). */
 final case class DataFile(
     path: String,
     rows: Long,
     sizeBytes: Long,
     stats: Map[String, ColStat],
     seq: Long = 0L,
-    partition: Map[String, String] = Map.empty) {
+    partition: Map[String, String] = Map.empty,
+    @JsonInclude(JsonInclude.Include.NON_DEFAULT) schemaId: Int = 0) {
   /** Integer view of a numeric stat; None when absent OR not integral —
    * every caller's contract is keep/recompute-on-unknown, so a double
    * stats column must degrade conservatively, never throw. Doubles round
@@ -75,7 +82,10 @@ final case class SortOrder(
  *   (Iceberg's manifest-list field summaries): scan planning tests them
  *   before it opens a manifest ([[PlanScan.prune]]). A manifest without one
  *   (listed by a snapshot written before summaries existed, or reused from
- *   one) is always read. */
+ *   one) is always read.
+ * @param evolutions the table's schema evolutions in commit order, copied
+ *   from the parent by every commit and appended to by an evolve commit
+ *   ([[graft.ops.Evolve]]). Not written when empty. */
 final case class Snapshot(
     id: Long,
     parentId: Long, // -1 = none
@@ -84,7 +94,26 @@ final case class Snapshot(
     manifests: Seq[String], // manifest file names relative to meta/
     summary: Map[String, String],
     deleteManifests: Seq[String] = Nil,
-    manifestSummaries: Map[String, ManifestSummary] = Map.empty)
+    manifestSummaries: Map[String, ManifestSummary] = Map.empty,
+    @JsonInclude(JsonInclude.Include.NON_EMPTY) evolutions: Seq[Evolution] = Nil)
+
+/** One schema evolution: files of older eras were written under
+ * `schemaBeforeJson`, newer ones under `schemaAfterJson`. On read, older
+ * files take `defaultSql` for an added `column` (even where a dropped name's
+ * stale bytes are physically there), are renamed from `renamedFrom`, have a
+ * dropped column projected away, or are cast to a widened `typeDdl`.
+ * `paths`, the files it predates, is set only on the legacy
+ * `meta/evolutions*` records; those from before rename/drop support are all
+ * `add` and lack `schemaBeforeJson` (the after-schema minus `column`). */
+final case class Evolution(
+    column: String,
+    typeDdl: String,
+    defaultSql: String,
+    schemaAfterJson: String,
+    kind: String = "add",
+    renamedFrom: String = "",
+    schemaBeforeJson: String = "",
+    @JsonInclude(JsonInclude.Include.NON_EMPTY) paths: Seq[String] = Nil)
 
 /** The distinct values one partition field takes across a manifest's
  * entries; `missing` = some entry carries no value for the field. */
@@ -200,26 +229,14 @@ object Json {
     m
   }
   def write(v: Any): String = mapper.writeValueAsString(v)
-  def readSnapshot(s: String): Snapshot = {
-    val snap = mapper.readValue[Snapshot](s)
-    // pre-deletes / pre-summaries snap-*.json lacks the field; Jackson
-    // leaves it null (primitive Long `seq` defaults to 0 on its own)
-    if (snap.deleteManifests != null && snap.manifestSummaries != null) snap
-    else snap.copy(
-      deleteManifests = Option(snap.deleteManifests).getOrElse(Nil),
-      manifestSummaries = Option(snap.manifestSummaries).getOrElse(Map.empty))
-  }
+  /** A field a record lacks (one written before the field existed) reads
+   * as its case-class default: the Scala module applies defaults. */
+  def readSnapshot(s: String): Snapshot = mapper.readValue[Snapshot](s)
   /** The one manifest codec: every data and delete manifest is read and
    * written through this pair. Static, so PlanScan's executors call it. */
-  def readManifest(path: Path): Seq[DataFile] = {
-    val es = mapper.readValue[ManifestFile](
+  def readManifest(path: Path): Seq[DataFile] =
+    mapper.readValue[ManifestFile](
       new String(Files.readAllBytes(path), StandardCharsets.UTF_8)).entries
-    // pre-partitioning manifest-*.json lacks the field; Jackson leaves the
-    // Map null (same back-compat rule as Snapshot.deleteManifests)
-    if (es.exists(_.partition == null))
-      es.map(e => if (e.partition == null) e.copy(partition = Map.empty) else e)
-    else es
-  }
   def writeManifest(path: Path, entries: Seq[DataFile]): Unit = {
     Files.write(path, write(ManifestFile(entries)).getBytes(StandardCharsets.UTF_8))
     ()

@@ -11,8 +11,8 @@ import java.util.UUID
  *  - [[claim]]: create-once. The temp is HARD-LINKED to the target; link(2)
  *    fails atomically with EEXIST when the name exists, so of N racing
  *    claimers exactly one wins and the first content is never replaced.
- *    [[MetaLog]] records (snapshots, refs versions), branch records,
- *    evolution entries and lineage files use it.
+ *    [[MetaLog]] records (snapshots, refs versions), branch records and
+ *    lineage files use it.
  *  - [[replace]]: last writer wins. The temp is renamed over the target
  *    (rename(2) replaces atomically). The [[MetaLog]] hint and floor, the
  *    partition spec, the sort order, checkpoint markers and payloads, and

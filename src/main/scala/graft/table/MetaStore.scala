@@ -92,7 +92,7 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
    * the table (e.g. a whole-table partition-drop delete). A table that
    * never held data falls back to a schemaless empty frame. */
   private[graft] def emptyLike(spark: SparkSession): DataFrame = {
-    // an evolution log declares the schema outright (a raw historical file
+    // an evolution list declares the schema outright (a raw historical file
     // would carry its ERA's physical layout — pre-rename names, dropped
     // columns); without one any reachable file's footer is authoritative
     val evos = graft.ops.Evolve.evolutions(this)
@@ -327,7 +327,8 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
    * alone, never the payload. Each task writes its (path, bloom) rows as
    * one parquet file into a staging shard, which the driver moves into
    * `meta/blooms/` in one atomic rename after the job. Entries are sorted
-   * by path; zero-row files are left out.
+   * by path; zero-row files are left out. Each carries `seq` 0 and
+   * `schemaId` -1, for the commit to stamp.
    */
   def collectStats(spark: SparkSession, dir: String): Seq[DataFile] = {
     val files = FileStats.dataFiles(Paths.get(dir))
@@ -396,15 +397,15 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
       parentSnap.fold(Map.empty[String, Long])(
         entriesOf(_).map(e => e.path -> e.seq).toMap)
     val stamped = entries.map { e =>
-      if (e.seq > 0L) e
-      else e.copy(seq = parentSeq.getOrElse(e.path, id))
+      stampEra(if (e.seq > 0L) e else e.copy(seq = parentSeq.getOrElse(e.path, id)),
+        parentSnap)
     }
     val shards = if (stamped.isEmpty) Seq(stamped) else
       stamped.grouped(manifestShardSize).toSeq
     val manifests = shards.map(writeManifest(id, _))
     publish(operation, parent, parentNonce, id, manifests.map(_._1), manifests.toMap,
       manifests.map(_._1), deleteManifestNames(parentSnap, id, deletes),
-      deletes.isDefined,
+      deletes.isDefined, evolutionsOf(parentSnap),
       summary ++ Map("files" -> stamped.size.toString,
                      "rows" -> stamped.map(_.rows).sum.toString,
                      "bytes" -> stamped.map(_.sizeBytes).sum.toString))
@@ -443,13 +444,17 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
    *   [[ConcurrentCommitException]] (retryable) if the current snapshot is
    *   no longer this — for commits whose removedPaths / delete set were
    *   planned from a read of that snapshot.
+   * @param evolutions the new snapshot's evolution list, replacing the
+   *   parent's (an evolve commit: [[graft.ops.Evolve]]); pass
+   *   `expectedParent` alongside, for the same reason as with `deletes`.
    */
   def commitDelta(operation: String, added: Seq[DataFile],
                   removedPaths: Set[String] = Set.empty,
                   summary: Map[String, String] = Map.empty,
                   deletes: Option[Seq[DataFile]] = None,
                   addedDeletes: Seq[DataFile] = Nil,
-                  expectedParent: Option[Long] = None): Long = synchronized {
+                  expectedParent: Option[Long] = None,
+                  evolutions: Option[Seq[Evolution]] = None): Long = synchronized {
     require(deletes.isEmpty || addedDeletes.isEmpty,
       "commitDelta: pass deletes (replace) or addedDeletes (append), not both")
     // the parent descriptor is read ONCE per commit and passed down
@@ -461,7 +466,8 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
           addedDeletes.map(d => if (d.seq > 0L) d else d.copy(seq = id)))
       case _ => deletes
     }
-    val stampedAdded = added.map(e => if (e.seq > 0L) e else e.copy(seq = id))
+    val stampedAdded =
+      added.map(e => stampEra(if (e.seq > 0L) e else e.copy(seq = id), parentSnap))
     val parentManifests = parentSnap.fold(Seq.empty[String])(_.manifests)
     var removedRows = 0L; var removedBytes = 0L; var removedFiles = 0L
     // ONE JSON parse per parent manifest: classify and rewrite in the same
@@ -532,7 +538,7 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
     publish(operation, parent, parentNonce, id, reusedNames ++ own.map(_._1),
       reusedSummaries ++ own, own.map(_._1),
       deleteManifestNames(parentSnap, id, effDeletes),
-      effDeletes.isDefined,
+      effDeletes.isDefined, evolutions.getOrElse(evolutionsOf(parentSnap)),
       summary ++ Map(
         "files" -> (parentCount("files") - removedFiles + stampedAdded.size).toString,
         "rows" -> (parentCount("rows") - removedRows + stampedAdded.map(_.rows).sum).toString,
@@ -566,18 +572,22 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
    * `snapshotId + 1`, `+2`, …) stay strictly above them — the invariant
    * equality-delete coverage (`seq < delete.seq`) relies on — and a
    * fast-forward replay onto the parent lines up id-for-id, keeping one
-   * coherent sequence space across both logs. */
+   * coherent sequence space across both logs. The fork carries `from`'s
+   * current evolution list, and each entry its era as `from` reads it
+   * ([[graft.ops.Evolve.eraOf]]), so the branch reads no legacy record. */
   def seedFork(from: MetaStore, snapshotId: Long): Long = synchronized {
     require(currentSnapshotId.isEmpty, s"$tableDir: seedFork on a non-empty store")
     val source = from.snapshot(snapshotId)
-    val es = from.entriesOf(source)
+    val evos = graft.ops.Evolve.evolutions(from)
+    val era = graft.ops.Evolve.eraOf(from)
+    val es = from.entriesOf(source).map(e => e.copy(schemaId = era(e)))
     val shards = if (es.isEmpty) Seq(es) else es.grouped(manifestShardSize).toSeq
     val manifests = shards.map(writeManifest(snapshotId, _))
     val dels = from.deleteEntriesOf(source)
     publish("branch-fork", -1L, null, snapshotId, manifests.map(_._1), manifests.toMap,
       manifests.map(_._1),
       deleteManifestNames(None, snapshotId, if (dels.isEmpty) None else Some(dels)),
-      dels.nonEmpty,
+      dels.nonEmpty, evos,
       Map("forkOf" -> from.tableDir, "forkSnapshot" -> snapshotId.toString,
         "files" -> es.size.toString, "rows" -> es.map(_.rows).sum.toString,
         "bytes" -> es.map(_.sizeBytes).sum.toString))
@@ -685,13 +695,21 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
       case None => parent.fold(Seq.empty[String])(_.deleteManifests)
       case Some(ds) if ds.isEmpty => Nil
       case Some(ds) =>
-        ds.grouped(manifestShardSize).map { shard =>
+        ds.map(stampEra(_, parent)).grouped(manifestShardSize).map { shard =>
           val name = s"delmanifest-$id-${UUID.randomUUID().toString.take(8)}.json"
           Json.writeManifest(metaDir.resolve(name), shard)
           cachePathSet(name, shard)
           name
         }.toSeq
     }
+
+  /** The evolution list a commit copies from its parent. */
+  private def evolutionsOf(parent: Option[Snapshot]): Seq[Evolution] =
+    parent.fold(Seq.empty[Evolution])(_.evolutions)
+
+  /** A new entry (`schemaId` -1) was written under the parent's schema. */
+  private def stampEra(e: DataFile, parent: Option[Snapshot]): DataFile =
+    if (e.schemaId >= 0) e else e.copy(schemaId = evolutionsOf(parent).size)
 
   /** The head as a commit's parent: (id, descriptor, nonce), or (-1, None,
    * null) on an empty log; [[ConcurrentCommitException]] if not `expected`. */
@@ -714,9 +732,10 @@ class MetaStore(val tableDir: String, val statsColumns: Seq[String],
                       manifestSummaries: Map[String, ManifestSummary],
                       ownManifests: Seq[String],
                       delManifestNames: Seq[String], ownDeletes: Boolean,
+                      evolutions: Seq[Evolution],
                       summary: Map[String, String]): Long = {
     val snap = Snapshot(id, parent, System.currentTimeMillis(), operation,
-      manifestNames, summary, delManifestNames, manifestSummaries)
+      manifestNames, summary, delManifestNames, manifestSummaries, evolutions)
     if (!log.append(id - 1, parentNonce, Json.write(snap).getBytes(StandardCharsets.UTF_8))) {
       (ownManifests ++ (if (ownDeletes) delManifestNames else Nil)).foreach { n =>
         Files.deleteIfExists(metaDir.resolve(n)); forgetManifest(n)

@@ -255,4 +255,36 @@ class EvolveSpec extends AnyFunSuite {
     // old-era files vs materialized files: same logical rows -> no changes
     assert(graft.ops.Changes.rowChanges(spark, store, sA, sB).count() == 0)
   }
+
+  test("a crash at either log seam of addColumn leaves no evolution or a " +
+    "whole one, and the next addColumn succeeds") {
+    import graft.table.MetaLog
+    val dir = Files.createTempDirectory("graft-evolve-crash-").toString
+    val store = MetaStore.forClips(dir)
+    Append.run(spark, store, ClipSynth.dataset(spark, 40, 2, maxDurMs = 80).toDF())
+    val seams = Seq("before_link" -> MetaLog.beforeLink, "after_claim" -> MetaLog.afterClaim)
+    seams.zipWithIndex.foreach { case ((name, seam), i) =>
+      seam.put(store.log.dir, _ => throw new IllegalStateException(s"crash $name"))
+      try intercept[IllegalStateException] {
+        Evolve.addColumn(spark, store, s"c_$name", "int", s"$i")
+      } finally seam.remove(store.log.dir)
+      val landed = Evolve.evolutions(store).exists(_.column == s"c_$name")
+      val df = store.scanCurrent(spark)
+      assert(df.columns.contains(s"c_$name") == landed, s"$name: a torn evolution")
+      if (landed) assert(df.filter(col(s"c_$name") === i).count() == 40, name)
+      // a crashed evolver must not wedge the next one
+      Evolve.addColumn(spark, store, s"n_$name", "string", s"'$name'")
+      // the claim is the commit: nothing lands before it, all of it after
+      assert(landed == (name == "after_claim"), s"$name: landed=$landed")
+    }
+    val df = store.scanCurrent(spark)
+    assert(Evolve.evolutions(store).map(_.column) ==
+      Seq("n_before_link", "c_after_claim", "n_after_claim"))
+    assert(df.count() == 40)
+    assert(df.filter(col("n_before_link") === "before_link" &&
+      col("c_after_claim") === 1 && col("n_after_claim") === "after_claim").count() == 40)
+    assert(!Files.exists(java.nio.file.Paths.get(dir, "meta", "evolutions")) &&
+      !Files.exists(java.nio.file.Paths.get(dir, "meta", "evolutions.json")),
+      "an evolution writes no side record")
+  }
 }

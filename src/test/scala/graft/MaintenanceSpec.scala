@@ -348,4 +348,33 @@ class MaintenanceSpec extends AnyFunSuite {
       runId = "cp-cluster", batches = 2)
     assert(runDirs.isEmpty, s"after batched cluster: $runDirs")
   }
+
+  test("expiry plus orphan GC leave only reachable parquet files and their " +
+    "checksums under data/") {
+    val dir = Files.createTempDirectory("graft-gc-sidecars-").toString
+    val store = MetaStore.forClips(dir)
+    (0 until 4).foreach { i =>
+      Append.run(spark, store, ClipSynth.dataset(spark, 20, 2, maxDurMs = 60).toDF()
+        .withColumn("clip_id", concat(lit(s"a${i}_"), col("clip_id"))))
+    }
+    Compact.run(spark, store, targetBytes = 64L * 1024 * 1024, runId = "gc-compact")
+    val rows = store.scanCurrent(spark).count()
+    val live = store.entries(store.currentSnapshotId.get).map(_.path).toSet
+    def crc(p: String) = {
+      val f = java.nio.file.Paths.get(p)
+      f.resolveSibling(s".${f.getFileName}.crc").toString
+    }
+    val liveCrcs = live.map(crc).filter(c => Files.exists(java.nio.file.Paths.get(c)))
+    ExpireSnapshots.run(store, keepLast = 1)
+    RemoveOrphans.run(store, minAgeMs = 0L)
+    val w = Files.walk(java.nio.file.Paths.get(dir, "data"))
+    val (dirs, files) = try w.iterator().asScala.toSeq.partition(Files.isDirectory(_))
+      finally w.close()
+    assert(files.map(_.toString).toSet == live ++ liveCrcs,
+      s"sidecars or orphans left: $files")
+    val parents = live.map(p => java.nio.file.Paths.get(p))
+      .flatMap(p => Iterator.iterate(p.getParent)(_.getParent).takeWhile(_ != null))
+    assert(dirs.forall(parents.contains), s"directories holding no parquet left: $dirs")
+    assert(store.scanCurrent(spark).count() == rows)
+  }
 }

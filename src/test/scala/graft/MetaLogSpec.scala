@@ -3,8 +3,8 @@ package graft
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 
-import graft.ops.{ExpireSnapshots, Refs, RemoveOrphans}
-import graft.table.{ConcurrentCommitException, Json, MetaFs, MetaLog, MetaStore}
+import graft.ops.{ExpireSnapshots, Refs, RefsFile, RemoveOrphans}
+import graft.table.{ConcurrentCommitException, Evolution, Json, MetaFs, MetaLog, MetaStore}
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
@@ -102,6 +102,23 @@ class MetaLogSpec extends AnyFunSuite {
     // the first commit replaces CURRENT: an older binary sees no table
     // instead of a stale head
     assert(!Files.exists(meta.resolve("CURRENT")) && Files.exists(hint(meta)))
+  }
+
+  test("a record written before a field existed reads that field's default") {
+    val snap = Json.readSnapshot("""{"id":3,"parentId":2,"timestampMs":1,""" +
+      """"operation":"append","manifests":["manifest-3.json"],"summary":{}}""")
+    assert(snap.deleteManifests == Nil && snap.manifestSummaries == Map.empty &&
+      snap.evolutions == Nil)
+    val mf = Files.createTempFile("graft-manifest-", ".json")
+    Files.write(mf, ("""{"entries":[{"path":"/t/data/a.parquet","rows":2,""" +
+      """"sizeBytes":9,"stats":{}}]}""").getBytes(UTF_8))
+    val Seq(e) = Json.readManifest(mf)
+    assert(e.seq == 0L && e.partition == Map.empty && e.schemaId == 0)
+    val evo = Json.mapper.readValue[Evolution]("""{"column":"q","typeDdl":"INT",""" +
+      """"defaultSql":"1","schemaAfterJson":"{}"}""")
+    assert(evo.kind == "add" && evo.renamedFrom == "" && evo.schemaBeforeJson == "" &&
+      evo.paths == Nil)
+    assert(Json.mapper.readValue[RefsFile]("""{"tags":{"t":"1"}}""").retention == Map.empty)
   }
 
   test("a writer stalled between its checks and its link loses when its " +

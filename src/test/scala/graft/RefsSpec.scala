@@ -230,11 +230,11 @@ class RefsSpec extends AnyFunSuite {
     val store = MetaStore.forClips(dir)
     Append.run(spark, store, ClipSynth.dataset(spark, 4, 1, maxDurMs = 40).toDF())
     Refs.tag(store, "base")
-    val others = (0 until 20).map(i => s"o$i")
+    val others = (0 until 40).map(i => s"o$i")
     var calls = 0
     Refs.rmwRefs(store) { cur =>
       calls += 1
-      // the stall: 20 commits land after our read, and retiring old
+      // the stall: 40 commits land after our read, and retiring old
       // versions deletes the name our casWrite is about to claim
       if (calls == 1) others.foreach(Refs.tag(store, _))
       (Some(cur.copy(tags = cur.tags + ("mine" -> "1"))), ())
@@ -249,21 +249,28 @@ class RefsSpec extends AnyFunSuite {
     val store = MetaStore.forClips(dir)
     Append.run(spark, store, ClipSynth.dataset(spark, 4, 1, maxDurMs = 40).toDF())
     Refs.tag(store, "base")
+    // base is v1; 14 more tags put our win on v16, the newest version the
+    // batch retire at v32 takes
+    val before = (0 until 14).map(i => s"p$i")
+    before.foreach(Refs.tag(store, _))
     val others = (0 until 20).map(i => s"o$i")
     val refsDir = java.nio.file.Paths.get(dir, "meta", "refs")
     var calls = 0
-    var landed = false
+    var ours = -1L
     // right after our claim wins, 20 commits land on top of it (retiring
     // our own version) before our writer gets to run again
-    graft.table.MetaLog.afterClaim.put(refsDir, _ =>
-      if (!landed) { landed = true; others.foreach(Refs.tag(store, _)) })
+    graft.table.MetaLog.afterClaim.put(refsDir, v =>
+      if (ours < 0) { ours = v; others.foreach(Refs.tag(store, _)) })
     try Refs.rmwRefs(store) { cur =>
       calls += 1
       (Some(cur.copy(tags = cur.tags + ("mine" -> "1"))), ())
     } finally graft.table.MetaLog.afterClaim.remove(refsDir)
-    assert(landed)
+    assert(ours == 16)
+    assert(!Files.exists(new MetaLog(refsDir, "v").path(ours)),
+      "our own version was not retired before our writer returned")
     assert(calls == 1, s"a real win was re-run as a ghost (calls=$calls)")
-    assert(Refs.tags(store).keySet == (others :+ "base" :+ "mine").toSet)
+    assert(Refs.tags(store).keySet ==
+      (before ++ others :+ "base" :+ "mine").toSet)
   }
 
   test("refs version-CAS: a writer stalled between its checks and its link " +
@@ -272,11 +279,11 @@ class RefsSpec extends AnyFunSuite {
     val store = MetaStore.forClips(dir)
     Append.run(spark, store, ClipSynth.dataset(spark, 4, 1, maxDurMs = 40).toDF())
     Refs.tag(store, "base")
-    val others = (0 until 20).map(i => s"o$i")
+    val others = (0 until 40).map(i => s"o$i")
     val refsDir = Paths.get(dir, "meta", "refs")
     var calls = 0
     var landed = false
-    // our checks pass; before our link, 20 commits land and retiring old
+    // our checks pass; before our link, 40 commits land and retiring old
     // versions frees the name we are about to link
     MetaLog.beforeLink.put(refsDir, _ =>
       if (!landed) { landed = true; others.foreach(Refs.tag(store, _)) })
@@ -325,5 +332,19 @@ class RefsSpec extends AnyFunSuite {
     // with no age floor the old snapshot goes
     val r2 = ExpireSnapshots.run(store, keepLast = 1)
     assert(r2.expiredSnapshots.nonEmpty)
+  }
+
+  test("refs retire once per batch: after 3 x Keep tags fewer than 2 x Keep " +
+    "versions remain and every tag reads back") {
+    val dir = Files.createTempDirectory("graft-refs-batch-").toString
+    val store = MetaStore.forClips(dir)
+    Append.run(spark, store, ClipSynth.dataset(spark, 4, 1, maxDurMs = 40).toDF())
+    val keep = 16
+    val names = (0 until 3 * keep).map(i => s"t$i")
+    names.foreach(Refs.tag(store, _))
+    val versions = new MetaLog(Paths.get(dir, "meta", "refs"), "v").versions
+    assert(versions.size < 2 * keep, s"versions left: $versions")
+    assert(versions.last == 3 * keep)
+    assert(Refs.tags(store).keySet == names.toSet)
   }
 }

@@ -383,7 +383,9 @@ class RobustnessSpec extends AnyFunSuite {
     val t2 = new Thread(evolver(storeB, "cb"))
     t1.start(); t2.start(); t1.join(); t2.join()
     assert(errs.isEmpty, s"evolutions must retry to success: ${errs.peek()}")
-    val evos = Evolve.evolutions(storeA).map(_.column)
+    // the list travels in the head snapshot record: no side file exists
+    assert(!Files.exists(java.nio.file.Paths.get(dir, "meta", "evolutions")))
+    val evos = storeA.currentSnapshot.get.evolutions.map(_.column)
     assert(evos.size == 6 && evos.toSet ==
       Set("ca_0", "ca_1", "ca_2", "cb_0", "cb_1", "cb_2"),
       s"no evolution may be lost to a log race: $evos")

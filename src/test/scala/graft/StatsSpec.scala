@@ -61,7 +61,7 @@ class StatsSpec extends AnyFunSuite {
           r.getAs[Long](s"nulls_$c"))
       }.toMap
       DataFile(path, r.getAs[Long]("_rows"), new java.io.File(path).length(), stats,
-        partition = graft.table.Partitioning.tupleOf(path))
+        partition = graft.table.Partitioning.tupleOf(path), schemaId = -1)
     }.toSeq.sortBy(_.path)
     val blooms = if (key.isEmpty) Map.empty[String, Seq[Byte]] else rows.map(r =>
       MetaStore.decodePath(r.getAs[String]("_file")) ->
